@@ -28,12 +28,33 @@ rd on both sides. Result cleaned by morphological closing+opening at
 correction_distance (0.01 m default,
 brdrq_algorithm_autocorrectborders.py:193).
 
-Execution shape: candidate pairs (cell join) → geometries joined back →
-``groupBy(theme_id).applyInPandas(kernel)``. One group = one thematic
-feature with its O(1)-ish candidate parcels; the rd grid is looped
-*inside* the kernel so per-pair intersections are computed once and
-reused across distances (the reference recomputes per distance —
-brdrq_dockwidget_featurealigner.py:1676-1688 — we hoist).
+Execution shape. The kernel sees one thematic feature with its O(1)-ish
+candidate parcels at a time; the rd grid is looped *inside* the kernel
+so per-pair intersections are computed once and reused across distances
+(the reference recomputes per distance —
+brdrq_dockwidget_featurealigner.py:1676-1688 — we hoist). Its candidates
+come from one of two paths:
+
+* prepared (``broadcast_ref=True``, or None with a reference within
+  ``spark.sql.autoBroadcastJoinThreshold``): the reference layer is
+  collected ONCE per (reference DataFrame, cell resolution, metadata
+  columns) into a ``PreparedReference`` — a cell-sorted CSR index plus
+  bboxes and WKB in one broadcast — and ``theme_df`` runs through ONE
+  ``mapInPandas`` that covers each theme, probes the index and calls the
+  kernel. No explode, join or union; the stage is repartitioned only
+  when the theme input has fewer partitions than cores. Repeated calls,
+  evaluate's buckets and concurrent ``checkpointed_align`` shards share
+  the instance; ``prepare_reference(...).release()`` destroys its
+  broadcast, and Spark's ContextCleaner reclaims it otherwise once the
+  reference DataFrame and every plan using it are gone.
+* shuffle (``broadcast_ref=False``, or a reference too large to
+  broadcast): both layers are cell-exploded and equi-joined on cell
+  (salting and hot-cell splitting apply here), a bare row per theme is
+  unioned in, and the rows are repartitioned 4x by theme_id and streamed
+  through the kernel (``align_candidate_rows``).
+
+Both paths feed the kernel the same candidate set, so they emit
+identical rows.
 """
 
 from __future__ import annotations
@@ -108,9 +129,11 @@ class AlignConfig:
     max_candidates_per_theme: int = 2000  # admission control (O5 analogue)
     cell_res: int | None = None  # tile-assignment resolution; None = auto
     nseg: int = 8  # arc segments for erosion tests (speed/precision knob)
-    # kernel-stage partition count; None = 4x defaultParallelism. Pin it
-    # when comparing runs at different core counts so both levels see the
-    # same per-partition work (scaling evidence, BASELINE.md).
+    # kernel-stage partition count; None = 4x defaultParallelism on the
+    # shuffle path, the theme input's own partitioning (raised to
+    # defaultParallelism) on the prepared path. Pin it when comparing
+    # runs at different core counts so both levels see the same
+    # per-partition work (scaling evidence, BASELINE.md).
     kernel_partitions: int | None = None
     # OD snap densification: no OD edge longer than this before snapping
     # (reference snap_max_segment_length default 2,
@@ -125,13 +148,14 @@ class AlignConfig:
     # explicit hot-cell salting for the shuffle-join path (dense urban
     # cells, reference qa.qmd:19-40): theme side keyed by
     # (cell, hash(theme_id) % salt), reference rows replicated salt ways.
-    # 0 = rely on AQE skew splitting; ignored under broadcast_ref.
+    # 0 = rely on AQE skew splitting; the prepared path has no join.
     salt: int = 0
-    # fused-plan admission: a theme whose cells x wkb_bytes exceeds this
-    # budget ships ids-only through the cell explode and re-joins its WKB
-    # on the theme_id key (which the kernel repartition needs anyway) —
-    # bounds shuffle amplification for huge/detailed geometries instead
-    # of duplicating a 100 KB polygon into 1000 cell rows.
+    # fused-plan admission (shuffle path): a theme whose cells x
+    # wkb_bytes exceeds this budget ships ids-only through the cell
+    # explode and re-joins its WKB on the theme_id key (which the kernel
+    # repartition needs anyway) — bounds shuffle amplification for
+    # huge/detailed geometries instead of duplicating a 100 KB polygon
+    # into 1000 cell rows. The prepared path explodes nothing.
     max_inline_wkb_bytes: int = 1 << 18
     # multi_as_single_modus (reference default True,
     # brdrq_algorithm_autocorrectborders.py:192 via
@@ -452,6 +476,49 @@ def _make_stream_kernel(cfg: AlignConfig, res: int):
     return stream
 
 
+def _make_probe_kernel(cfg: AlignConfig, res: int, ref_bc, with_step: bool):
+    """Prepared-reference kernel: each partition of theme rows
+    (theme_id, geom_wkb[, theme_step]) probes the broadcast index for
+    its candidates (``prepared.probe``: cover at 2·max_rd·1.01, bbox
+    distance <= 2·max_rd, as the cell-join plan) and hands every theme's
+    rows to the same ``_make_kernel`` the shuffle path uses. A theme
+    without candidates gets one row with a NULL ref_wkb, as the bare
+    row gives it on the shuffle path."""
+    from brdrq_spark.operators.candidates import wkb_bboxes
+    from brdrq_spark.operators.prepared import probe
+
+    kernel = _make_kernel(cfg, res)
+    max_rd = max(cfg.relevant_distances)
+
+    def stream(batches):
+        ref = ref_bc.value
+        for pdf in batches:
+            wkbs = pdf["geom_wkb"].tolist()
+            bb, has = wkb_bboxes(wkbs)
+            rows = np.nonzero(has)[0]
+            t, r = probe(ref, bb[has], res, 2.0 * max_rd * 1.01, 2.0 * max_rd)
+            bounds = np.searchsorted(rows[t], np.arange(len(pdf) + 1))
+            for i, tid in enumerate(pdf["theme_id"].tolist()):
+                cand = r[bounds[i]:bounds[i + 1]].tolist() or [None]
+                n = len(cand)
+                data = {
+                    "theme_id": [tid] * n,
+                    "theme_wkb": [wkbs[i]] * n,
+                    "ref_wkb": [None if j is None else ref["wkb"][j] for j in cand],
+                }
+                if cfg.emit_metadata:
+                    vers = ref["versions"]
+                    data["ref_id"] = [None if j is None else ref["ids"][j] for j in cand]
+                    data["ref_version"] = [
+                        None if j is None else vers[j] for j in cand
+                    ]
+                if with_step:
+                    data["theme_step"] = [pdf["theme_step"].iloc[i]] * n
+                yield kernel(pd.DataFrame(data))
+
+    return stream
+
+
 def _make_kernel(cfg: AlignConfig, res: int):
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         theme_id = pdf["theme_id"].iloc[0]
@@ -616,7 +683,9 @@ def _make_kernel(cfg: AlignConfig, res: int):
                                         "source": cfg.ref_source,
                                     },
                                 }
-                                for rid, rvd in used
+                                # by id: candidate order is shuffle
+                                # arrival order on the join path
+                                for rid, rvd in sorted(used, key=lambda u: str(u[0]))
                             ],
                         }
                     },
@@ -694,6 +763,40 @@ def _make_kernel(cfg: AlignConfig, res: int):
     return kernel
 
 
+def _cell_res(cfg: AlignConfig) -> int:
+    return (
+        cfg.cell_res
+        if cfg.cell_res is not None
+        else pick_resolution(max(cfg.relevant_distances))
+    )
+
+
+def prepare_reference(
+    spark: SparkSession, ref_df: DataFrame, config: AlignConfig | None = None
+):
+    """The ``PreparedReference`` that ``align`` with this config probes
+    on its broadcast path — built on first use, then shared by every
+    call on the same ``ref_df`` object. Call ``.release()`` on it to
+    free the broadcast before ``ref_df`` itself goes away."""
+    from brdrq_spark.operators.prepared import PreparedReference
+
+    cfg = config or AlignConfig()
+    version_col = cfg.ref_version_col if cfg.emit_metadata else None
+    return PreparedReference.of(spark, ref_df, _cell_res(cfg), version_col)
+
+
+def _fits_broadcast(spark: SparkSession, ref_df: DataFrame) -> bool:
+    """Catalyst's own auto-broadcast rule: the plan-time size estimate
+    of the reference columns is within
+    ``spark.sql.autoBroadcastJoinThreshold`` (-1 disables it)."""
+    from brdrq_spark.operators.candidates import plan_size_bytes
+
+    size = plan_size_bytes(ref_df.select("ref_id", "geom_wkb"))
+    if size is None:
+        return False
+    return 0 <= size <= spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+
+
 def align_candidate_rows(
     spark: SparkSession,
     theme_df: DataFrame,
@@ -701,11 +804,13 @@ def align_candidate_rows(
     cfg: AlignConfig,
     broadcast_ref: bool | None = None,
 ):
-    """Pre-kernel half of ``align``: the fused candidate plan, returned as
-    (grouped_rows, res). Exposed separately so benchmarks can time the
-    relational stage apart from the geometry kernel."""
+    """Pre-kernel half of ``align``'s shuffle path: the fused candidate
+    plan, returned as (grouped_rows, res). Exposed separately so
+    benchmarks can time the relational stage apart from the geometry
+    kernel; ``broadcast_ref=True`` here only hints a broadcast join (the
+    prepared path of ``align`` does not run this plan)."""
     max_rd = max(cfg.relevant_distances)
-    res = cfg.cell_res if cfg.cell_res is not None else pick_resolution(max_rd)
+    res = _cell_res(cfg)
     dilate = 2.0 * max_rd * 1.01
 
     # Fused candidate plan: both WKBs ride through the cell explode, so
@@ -846,20 +951,44 @@ def align(
     ref_df:   (ref_id string, geom_wkb binary [, ...])
     Returns one row per (theme_id, relevant_distance) with the six
     ProcessResult geometry slots + metric columns (FIXTURES.md §4).
+
+    ``broadcast_ref``: True probes the ``PreparedReference`` of
+    ``ref_df`` (built on the first call, which runs one collect job);
+    False runs the cell shuffle-join plan; None picks the prepared path
+    when the plan-estimated size of the reference is within
+    ``spark.sql.autoBroadcastJoinThreshold``.
     """
     cfg = config or AlignConfig()
     # CRS guard: one defined meter CRS for both layers (reference
     # brdrq_utils.py:1498-1502, 1551-1555)
     from brdrq_spark.functions.crs import require_same_crs
+    from brdrq_spark.operators.candidates import plan_partitions
 
     require_same_crs(cfg.crs, cfg.ref_crs if cfg.ref_crs is not None else cfg.crs)
+    par = spark.sparkContext.defaultParallelism
+    if broadcast_ref or (broadcast_ref is None and _fits_broadcast(spark, ref_df)):
+        prepared = prepare_reference(spark, ref_df, cfg)
+        with_step = cfg.step_col is not None and cfg.step_col in theme_df.columns
+        cols = [F.col("theme_id"), F.col("geom_wkb")]
+        if with_step:
+            cols.append(F.col(cfg.step_col).cast("double").alias("theme_step"))
+        themes = theme_df.select(*cols)
+        # the kernel stage is sized from its input: spread an
+        # under-partitioned theme table over the cores, as the shuffle
+        # path's theme side does; a one-theme request shuffles one row
+        if cfg.kernel_partitions:
+            themes = themes.repartition(cfg.kernel_partitions)
+        elif plan_partitions(themes) < par:
+            themes = themes.repartition(par)
+        kernel = _make_probe_kernel(cfg, _cell_res(cfg), prepared.broadcast, with_step)
+        return themes.mapInPandas(kernel, schema=ALIGN_SCHEMA)
+
     grouped, res = align_candidate_rows(spark, theme_df, ref_df, cfg, broadcast_ref)
 
     # partition-streaming kernel: co-locate each theme's candidate rows,
     # sort so groups are contiguous, then stream whole partitions through
     # one pandas iterator (see _make_stream_kernel). 4x parallelism:
     # theme cost varies, smaller partitions keep the stage tail short.
-    par = spark.sparkContext.defaultParallelism
     n_part = cfg.kernel_partitions or par * 4
     parts = grouped.repartition(n_part, "theme_id").sortWithinPartitions("theme_id")
     return parts.mapInPandas(_make_stream_kernel(cfg, res), schema=ALIGN_SCHEMA)

@@ -20,12 +20,15 @@ single cell key dominates.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from brdrq_spark.functions.geo import geo_features_udf
-from brdrq_spark.grid import pick_resolution
+from brdrq_spark.geom import bbox, rings_from_wkb
+from brdrq_spark.geom.wkb import polygon_bboxes_batch
+from brdrq_spark.grid import cell_id, cover_ranges, pick_resolution
 
 
 def plan_partitions(df: DataFrame) -> int:
@@ -38,6 +41,51 @@ def plan_partitions(df: DataFrame) -> int:
         return df._jdf.queryExecution().toRdd().getNumPartitions()
     except Exception:
         return df.rdd.getNumPartitions()
+
+
+def plan_size_bytes(df: DataFrame) -> int | None:
+    """The optimizer's plan-time size estimate of ``df`` in bytes (the
+    statistic Catalyst's auto-broadcast rule reads), or None when the
+    session cannot report one (e.g. Connect)."""
+    try:
+        stats = df._jdf.queryExecution().optimizedPlan().stats()
+    except AttributeError:  # no JVM plan behind the DataFrame
+        return None
+    # py4j hands the Scala BigInt over as an int; str() covers both forms
+    return int(str(stats.sizeInBytes()))
+
+
+def wkb_bboxes(wkb_list) -> tuple[np.ndarray, np.ndarray]:
+    """Batch bbox decode: ``(bbox (n, 4), has (n,) bool)``, ``has`` False
+    for empty or degenerate geometries. Vectorized through
+    ``polygon_bboxes_batch``; rows it cannot handle (big-endian, nested
+    multis, corrupt buffers) re-decode through ``rings_from_wkb``, so
+    every bbox is bit-identical to ``bbox(rings_from_wkb(w))`` and
+    corrupt WKB raises."""
+    bb, nvalid, fb = polygon_bboxes_batch(wkb_list)
+    for k in np.nonzero(fb)[0]:
+        rings = rings_from_wkb(wkb_list[k])
+        if rings:
+            bb[k] = bbox(rings)
+            nvalid[k] = len(rings)
+    return bb, nvalid > 0
+
+
+def cover_cells(bb: np.ndarray, res: int, dilate: float):
+    """Cell covers of bboxes ``bb`` (n, 4) dilated by ``dilate``, in one
+    numpy pass: ``(counts (n,), cells)`` with the cells of row i at
+    ``cells[sum(counts[:i]):][:counts[i]]``. The cover arithmetic is
+    ``grid.cover_ranges``, so both sides of a cell join, and the
+    prepared reference index, agree bit for bit."""
+    ix0, iy0, nx, ny = cover_ranges(bb[:, 0], bb[:, 1], bb[:, 2], bb[:, 3], res, dilate)
+    counts = nx * ny
+    total = int(counts.sum())
+    row_idx = np.repeat(np.arange(len(counts)), counts)
+    starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
+    off = np.arange(total, dtype=np.int64) - starts[row_idx]
+    gx = ix0[row_idx] + off % nx[row_idx]
+    gy = iy0[row_idx] + off // nx[row_idx]
+    return counts, cell_id(gx.astype(np.uint64), gy.astype(np.uint64), res)
 
 
 def cells_exploded(
@@ -75,13 +123,7 @@ def cells_exploded(
     instead of a per-row meshgrid + list-extend (measured ~3x on the
     4096-parcel cover batch).
     """
-    import numpy as np
     import pandas as pd
-
-    from brdrq_spark.geom import bbox as _bbox
-    from brdrq_spark.geom import rings_from_wkb
-    from brdrq_spark.geom.wkb import polygon_bboxes_batch
-    from brdrq_spark.grid import cell_id, cover_ranges
 
     extra_cols = list(extra_cols or [])
     in_schema = df.schema
@@ -102,21 +144,10 @@ def cells_exploded(
 
     def gen(batches):
         for pdf in batches:
-            # phase 1 — VECTORIZED batch decode (geom.wkb
-            # polygon_bboxes_batch: one numpy offset walk over the
-            # concatenated buffers, ~25x the per-row header walk). Rows
-            # the fast path cannot handle (big-endian, nested multis,
-            # corrupt buffers) re-decode through rings_from_wkb so the
-            # bbox semantics stay bit-identical: snapped rings,
-            # degenerate rings dropped, empty -> outer, corrupt raises.
+            # phase 1 — vectorized batch decode (wkb_bboxes: one numpy
+            # offset walk, ~25x the per-row header walk); empty -> outer
             wkb_list = pdf["geom_wkb"].tolist()
-            bb, nvalid, fb = polygon_bboxes_batch(wkb_list)
-            for k in np.nonzero(fb)[0]:
-                rings = rings_from_wkb(wkb_list[k])
-                if rings:
-                    bb[k] = _bbox(rings)
-                    nvalid[k] = len(rings)
-            has = nvalid > 0
+            bb, has = wkb_bboxes(wkb_list)
             ids_all = pdf[id_col].to_numpy(dtype=object)
             wkb_all = np.empty(len(pdf), dtype=object)
             wkb_all[:] = wkb_list
@@ -151,20 +182,8 @@ def cells_exploded(
             ex_vals = {c: ex_all[c][has] for c in extra_cols}
 
             # phase 2 — one vectorized cover + assembly for the batch
-            # (cover arithmetic lives in grid.cover_ranges, shared with
-            # the scalar cell_cover_bbox so both join sides agree)
             bb = bb[has]
-            ix0, iy0, nx, ny = cover_ranges(
-                bb[:, 0], bb[:, 1], bb[:, 2], bb[:, 3], res, dilate
-            )
-            counts = nx * ny
-            total = int(counts.sum())
-            row_idx = np.repeat(np.arange(len(counts)), counts)
-            starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-            off = np.arange(total, dtype=np.int64) - starts[row_idx]
-            gx = ix0[row_idx] + off % nx[row_idx]
-            gy = iy0[row_idx] + off // nx[row_idx]
-            cells = cell_id(gx.astype(np.uint64), gy.astype(np.uint64), res)
+            counts, cells = cover_cells(bb, res, dilate)
 
             out: dict[str, np.ndarray] = {}
             out[id_col] = np.repeat(np.asarray(ids, dtype=object), counts)

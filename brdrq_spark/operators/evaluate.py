@@ -95,14 +95,11 @@ def _broadcast_if_small(df: DataFrame, force: bool | None, cap_bytes: int = 64 <
         return F.broadcast(df)
     if force is False:
         return df
-    try:
-        size = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes().toString()
-        )
-        if size <= cap_bytes:
-            return F.broadcast(df)
-    except Exception:
-        pass
+    from brdrq_spark.operators.candidates import plan_size_bytes
+
+    size = plan_size_bytes(df)
+    if size is not None and size <= cap_bytes:
+        return F.broadcast(df)
     return df
 
 

@@ -79,8 +79,10 @@ def main() -> None:
     section("g1_revenue_per_nation — broadcast joins for small dims", plan)
     print(f"\nBroadcastHashJoin count: {tree(plan).count('BroadcastHashJoin')}")
 
-    # 4. the align plan: ONE join + ONE repartition, WKBs riding the
-    # cell explode, bbox refine as column arithmetic before the kernel
+    # 4. the align plans: prepared path = the theme scan -> ONE
+    # MapInPandas probing the broadcast reference index (no join); shuffle
+    # path = ONE join + ONE repartition, WKBs riding the cell explode,
+    # bbox refine as column arithmetic before the kernel
     from brdrq_spark.operators.align import AlignConfig, align
     from brdrq_spark.sources.synthetic import reference_parcels, thematic_polygons
 
@@ -88,7 +90,7 @@ def main() -> None:
     th = spark.createDataFrame(thematic_polygons(32, 16, 16, seed=7, jitter=1.0))
     plan = formatted(align(spark, th, ref, AlignConfig(relevant_distances=[2.0]),
                            broadcast_ref=True))
-    section("align — fused candidate plan (broadcast)", plan)
+    section("align — prepared reference (broadcast index, no join)", plan)
     t = tree(plan)
     print(
         f"\njoins: {t.count('BroadcastHashJoin') + t.count('SortMergeJoin') + t.count('ShuffledHashJoin')}"

@@ -173,28 +173,97 @@ def test_od_snap_strategies_kernel():
     assert rings_area(all_side) >= rings_area(exclude)
 
 
+def _edge_case_themes(spark, th):
+    """The fixture themes plus an empty geometry and a two-part
+    MultiPolygon made of two jittered themes."""
+    import pandas as pd
+
+    from brdrq_spark.geom import rings_to_wkb
+    from brdrq_spark.geom.core import split_parts
+
+    pdf = th.select("theme_id", "geom_wkb").toPandas()
+    multi = rings_from_wkb(bytes(pdf.geom_wkb[0])) + rings_from_wkb(
+        bytes(pdf.geom_wkb[N_THEMES - 1])
+    )
+    assert len(split_parts(multi)) == 2
+    extra = pd.DataFrame(
+        [
+            {"theme_id": "t_empty", "geom_wkb": rings_to_wkb([])},
+            {"theme_id": "t_multi", "geom_wkb": rings_to_wkb(multi)},
+        ]
+    )
+    return th.select("theme_id", "geom_wkb").unionByName(spark.createDataFrame(extra))
+
+
 def test_align_hybrid_wkb_shipping_same_output(spark, tables):
-    """Oversized features ship ids-only through the cell explode and
-    re-join their WKB (AlignConfig.max_inline_wkb_bytes); forcing every
-    feature onto that path must not change a single output value."""
+    """The prepared-reference path (broadcast_ref=True) and the cell
+    shuffle-join path must emit identical rows — every WKB slot, metric
+    and remark — on an empty-geometry theme, a multi-part theme, themes
+    over max_inline_wkb_bytes (hybrid WKB shipping: ids-only through the
+    cell explode), capped themes, and evaluate(auto_step=True), which
+    sweeps a per-theme step column."""
+    from brdrq_spark.operators.evaluate import evaluate
+
     th, ref = tables
-    base = {
-        r.theme_id: (round(r.brdr_area, 9), tuple(r.cell_ids))
-        for r in align(
-            spark, th, ref, AlignConfig(relevant_distances=[2.0]), broadcast_ref=False
-        ).collect()
-    }
-    forced = {
-        r.theme_id: (round(r.brdr_area, 9), tuple(r.cell_ids))
-        for r in align(
-            spark,
-            th,
-            ref,
-            AlignConfig(relevant_distances=[2.0], max_inline_wkb_bytes=1),
-            broadcast_ref=False,
-        ).collect()
-    }
-    assert base == forced and len(base) == N_THEMES
+    themes = _edge_case_themes(spark, th)
+
+    def rows(cfg, bref):
+        return sorted(align(spark, themes, ref, cfg, broadcast_ref=bref).collect())
+
+    base = rows(AlignConfig(relevant_distances=[2.0]), False)
+    assert len(base) == N_THEMES + 2
+    remark = {r.theme_id: r.brdr_remark for r in base}
+    assert remark["t_empty"] == "no_reference_candidates"
+    for cfg in (
+        AlignConfig(relevant_distances=[2.0]),
+        AlignConfig(relevant_distances=[2.0], max_inline_wkb_bytes=1),
+        AlignConfig(relevant_distances=[0.5, 2.0], max_candidates_per_theme=2),
+    ):
+        shuffled = rows(cfg, False)
+        assert rows(cfg, True) == shuffled, cfg
+        if cfg.max_inline_wkb_bytes == 1:
+            assert shuffled == base
+        if cfg.max_candidates_per_theme == 2:
+            assert any(r.brdr_remark.startswith("candidates_capped") for r in shuffled)
+
+    sweeps = [
+        sorted(
+            evaluate(
+                spark, themes, ref, max_rd=2.0, auto_step=True, broadcast_ref=bref
+            ).collect()
+        )
+        for bref in (True, False)
+    ]
+    assert sweeps[0] == sweeps[1] and len(sweeps[0]) >= N_THEMES
+
+
+def test_align_metadata_same_on_both_paths(spark, tables):
+    """brdr_metadata lineage is byte-equal between the prepared path and
+    the shuffle path, and lists its reference geometries sorted by id
+    (not in shuffle arrival order)."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    th, ref = tables
+    cfg = AlignConfig(relevant_distances=[1.0, 2.0, 4.0], emit_metadata=True)
+    ref_v = ref.withColumn("VERSDATUM", F.concat(F.lit("v"), F.col("ref_id")))
+    prepared, shuffled = (
+        sorted(
+            (r.theme_id, r.brdr_relevant_distance, r.brdr_metadata)
+            for r in align(spark, th, ref_v, cfg, broadcast_ref=bref).collect()
+        )
+        for bref in (True, False)
+    )
+    assert prepared == shuffled
+    n_multi = 0
+    for _, _, md in prepared:
+        geoms = json.loads(md)["actuation"]["reference_geometries"]
+        ids = [g["derived_from"]["id"] for g in geoms]
+        assert ids == sorted(ids)
+        assert all(g["version_date"] == "v" + i for g, i in zip(geoms, ids))
+        n_multi += len(ids) > 1
+    assert n_multi > 0
 
 
 def test_multi_as_single_modus_parts(spark):

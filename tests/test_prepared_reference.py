@@ -1,0 +1,118 @@
+"""PreparedReference lifecycle: one build per reference DataFrame, shared
+by repeated align calls and concurrent shard threads, rebuilt only after
+an explicit release() or once the DataFrame is gone."""
+
+import gc
+import sys
+import threading
+
+import pytest
+
+from brdrq_spark.operators.align import AlignConfig, align, prepare_reference
+from brdrq_spark.sources.synthetic import reference_parcels, thematic_polygons
+
+CFG = AlignConfig(relevant_distances=[2.0])
+
+
+@pytest.fixture
+def broadcasts(spark, monkeypatch):
+    """Values passed to SparkContext.broadcast while the test runs."""
+    sc = spark.sparkContext
+    made = []
+    real = sc.broadcast
+
+    def counting(value):
+        made.append(value)
+        return real(value)
+
+    monkeypatch.setattr(sc, "broadcast", counting)
+    return made
+
+
+def _tables(spark, n=6):
+    ref = spark.createDataFrame(reference_parcels(8, 8, seed=6))
+    # one input partition: the prepared path then repartitions the themes,
+    # the shape of a one-theme request read from a parquet file
+    th = spark.createDataFrame(thematic_polygons(n, 8, 8, seed=6)).coalesce(1)
+    return th, ref
+
+
+def _job_ids(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_second_align_runs_no_reference_job(spark, broadcasts):
+    th, ref = _tables(spark)
+    first = sorted(align(spark, th, ref, CFG, broadcast_ref=True).collect())
+    assert len(broadcasts) == 1
+    second = []
+    jobs = _job_ids(
+        spark,
+        "brdrq_second_align",
+        lambda: second.extend(align(spark, th, ref, CFG, broadcast_ref=True).collect()),
+    )
+    assert len(broadcasts) == 1  # the reference was not collected again
+    assert 1 <= len(jobs) <= 2, jobs
+    assert sorted(second) == first
+
+
+def test_release_rebuilds_and_gc_frees(spark, broadcasts):
+    th, ref = _tables(spark)
+    prepared = prepare_reference(spark, ref, CFG)
+    assert prepare_reference(spark, ref, CFG) is prepared
+    assert len(prepared.broadcast.value["ids"]) == 64
+    prepared.release()
+    align(spark, th, ref, CFG, broadcast_ref=True).collect()
+    assert len(broadcasts) == 2
+    rebuilt = prepare_reference(spark, ref, CFG)
+    assert rebuilt is not prepared
+    # once the DataFrame goes away the finalizer unpersists the broadcast,
+    # and a result planned before still runs
+    lazy = align(spark, th, ref, CFG, broadcast_ref=True)
+    finalizer = rebuilt._finalizer
+    del ref, rebuilt
+    gc.collect()
+    assert not finalizer.alive
+    assert len(lazy.collect()) == 6
+
+
+def test_checkpointed_align_shards_share_one_broadcast(spark, tmp_path, broadcasts):
+    from brdrq_spark.sources.manifest import CommittedTable, checkpointed_align
+
+    th, ref = _tables(spark, n=12)
+    summary = checkpointed_align(
+        spark, CommittedTable(str(tmp_path / "t")), th, ref, CFG,
+        n_partitions=2, broadcast_ref=True, max_concurrent=2,
+    )
+    assert summary["computed"] == 2
+    assert len(broadcasts) == 1
+
+
+def test_concurrent_prepare_builds_once(spark, broadcasts):
+    """More threads than cores ask for the same layer at once, with a
+    short switch interval: one build, one shared instance."""
+    _, ref = _tables(spark)
+    got = []
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [
+            threading.Thread(target=lambda: got.append(prepare_reference(spark, ref, CFG)))
+            for _ in range(8)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+            assert not t.is_alive()
+    finally:
+        sys.setswitchinterval(old)
+    assert len(got) == 8 and all(p is got[0] for p in got)
+    assert len(broadcasts) == 1
