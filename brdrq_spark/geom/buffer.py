@@ -37,10 +37,6 @@ def _unit_disk(nseg: int) -> np.ndarray:
     return disk
 
 
-def _disk(cx: float, cy: float, d: float, nseg: int) -> np.ndarray:
-    return _unit_disk(nseg) * d + np.array([cx, cy])
-
-
 def boundary_capsules(
     rings: list[np.ndarray], d: float, nseg: int = 32, joins: str = "all"
 ) -> list[np.ndarray]:
@@ -118,11 +114,6 @@ def boundary_capsules(
         if len(centers):
             caps.append(_unit_disk(nseg)[None, :, :] * d + centers[:, None, :])
     return caps
-
-
-def _ccw(ring: np.ndarray) -> bool:
-    x, y = ring[:, 0], ring[:, 1]
-    return (np.dot(x, np.roll(y, -1)) - np.dot(y, np.roll(x, -1))) > 0
 
 
 def buffer_rings(

@@ -470,10 +470,6 @@ def trapezoid_area(traps) -> float:
     )
 
 
-def _key(x: float, y: float) -> tuple[int, int]:
-    return (int(round(x * _INV_SNAP)), int(round(y * _INV_SNAP)))
-
-
 def _stitch(traps) -> list[np.ndarray]:
     """Merge trapezoids into orientation-encoded rings (CCW outer, CW hole).
 

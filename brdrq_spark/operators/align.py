@@ -39,14 +39,25 @@ come from one of two paths:
   ``spark.sql.autoBroadcastJoinThreshold``): the reference layer is
   collected ONCE per (reference DataFrame, cell resolution, metadata
   columns) into a ``PreparedReference`` — a cell-sorted CSR index plus
-  bboxes and WKB in one broadcast — and ``theme_df`` runs through ONE
-  ``mapInPandas`` that covers each theme, probes the index and calls the
-  kernel. No explode, join or union; the stage is repartitioned only
-  when the theme input has fewer partitions than cores. Repeated calls,
-  evaluate's buckets and concurrent ``checkpointed_align`` shards share
-  the instance; ``prepare_reference(...).release()`` destroys its
-  broadcast, and Spark's ContextCleaner reclaims it otherwise once the
-  reference DataFrame and every plan using it are gone.
+  bboxes and WKB in one broadcast. Repeated calls, evaluate's buckets
+  and concurrent ``checkpointed_align`` shards share the instance;
+  ``prepare_reference(...).release()`` destroys its broadcast, and
+  Spark's ContextCleaner reclaims it otherwise once the reference
+  DataFrame and every plan using it are gone. Each theme is covered,
+  probes the index and goes to the kernel; no explode, join or union.
+  The theme side's plan-estimated size, against the same threshold,
+  decides where that runs:
+  - within it, the theme columns are collected once, when ``align`` is
+    called (one job). Zero or one theme is aligned right there
+    in the driver and returned as a local relation: collecting it runs
+    no job and no longer needs the broadcast. Two or more run ONE
+    ``mapInPandas`` over a local scan of the collected rows, which
+    spreads n rows over min(n, defaultParallelism) tasks without a
+    shuffle. The cutoff is one theme, not the core count, so the
+    driver's serial kernel work stays one feature at any cluster size;
+  - above it or unknown, the theme side stays lazy: ONE ``mapInPandas``
+    over ``theme_df``, repartitioned only when it has fewer partitions
+    than cores.
 * shuffle (``broadcast_ref=False``, or a reference too large to
   broadcast): both layers are cell-exploded and equi-joined on cell
   (salting and hot-cell splitting apply here), a bare row per theme is
@@ -130,10 +141,13 @@ class AlignConfig:
     cell_res: int | None = None  # tile-assignment resolution; None = auto
     nseg: int = 8  # arc segments for erosion tests (speed/precision knob)
     # kernel-stage partition count; None = 4x defaultParallelism on the
-    # shuffle path, the theme input's own partitioning (raised to
-    # defaultParallelism) on the prepared path. Pin it when comparing
-    # runs at different core counts so both levels see the same
-    # per-partition work (scaling evidence, BASELINE.md).
+    # shuffle path; on the prepared path, min(n, defaultParallelism)
+    # for a collected theme side of n themes, or the theme input's own
+    # partitioning (raised to defaultParallelism) for a lazy one. A
+    # one-theme request is aligned in the driver whatever the value.
+    # Pin it when comparing runs at different core counts so both
+    # levels see the same per-partition work (scaling evidence,
+    # BASELINE.md).
     kernel_partitions: int | None = None
     # OD snap densification: no OD edge longer than this before snapping
     # (reference snap_max_segment_length default 2,
@@ -785,13 +799,13 @@ def prepare_reference(
     return PreparedReference.of(spark, ref_df, _cell_res(cfg), version_col)
 
 
-def _fits_broadcast(spark: SparkSession, ref_df: DataFrame) -> bool:
+def _fits_broadcast(spark: SparkSession, df: DataFrame) -> bool:
     """Catalyst's own auto-broadcast rule: the plan-time size estimate
-    of the reference columns is within
-    ``spark.sql.autoBroadcastJoinThreshold`` (-1 disables it)."""
+    of ``df`` is within ``spark.sql.autoBroadcastJoinThreshold`` (-1
+    disables it)."""
     from brdrq_spark.operators.candidates import plan_size_bytes
 
-    size = plan_size_bytes(ref_df.select("ref_id", "geom_wkb"))
+    size = plan_size_bytes(df)
     if size is None:
         return False
     return 0 <= size <= spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
@@ -956,7 +970,12 @@ def align(
     ``ref_df`` (built on the first call, which runs one collect job);
     False runs the cell shuffle-join plan; None picks the prepared path
     when the plan-estimated size of the reference is within
-    ``spark.sql.autoBroadcastJoinThreshold``.
+    ``spark.sql.autoBroadcastJoinThreshold``. On the prepared path a
+    theme side within that threshold is collected when ``align`` is
+    called, so its plan runs exactly once, here; a single theme is
+    then aligned in the driver and the returned DataFrame is a local
+    relation (see "Execution shape" above). A larger theme side stays
+    lazy.
     """
     cfg = config or AlignConfig()
     # CRS guard: one defined meter CRS for both layers (reference
@@ -966,21 +985,38 @@ def align(
 
     require_same_crs(cfg.crs, cfg.ref_crs if cfg.ref_crs is not None else cfg.crs)
     par = spark.sparkContext.defaultParallelism
-    if broadcast_ref or (broadcast_ref is None and _fits_broadcast(spark, ref_df)):
+    if broadcast_ref or (
+        broadcast_ref is None
+        and _fits_broadcast(spark, ref_df.select("ref_id", "geom_wkb"))
+    ):
         prepared = prepare_reference(spark, ref_df, cfg)
         with_step = cfg.step_col is not None and cfg.step_col in theme_df.columns
         cols = [F.col("theme_id"), F.col("geom_wkb")]
         if with_step:
             cols.append(F.col(cfg.step_col).cast("double").alias("theme_step"))
         themes = theme_df.select(*cols)
+        kernel = _make_probe_kernel(cfg, _cell_res(cfg), prepared.broadcast, with_step)
+        if _fits_broadcast(spark, themes):
+            # a small theme side is read once, now, in one job
+            collected = themes.toPandas()
+            if len(collected) <= 1:
+                # one feature: align it here — a Python task would cost
+                # more than the kernel — and return a local relation
+                # (createDataFrame maps pandas columns by position)
+                out = list(kernel([collected]))
+                return spark.createDataFrame(
+                    out[0][ALIGN_SCHEMA.names] if out else [], ALIGN_SCHEMA
+                )
+            # a local scan spreads n rows over min(n, defaultParallelism)
+            # tasks: no shuffle needed to fill the cores
+            themes = spark.createDataFrame(collected, themes.schema)
         # the kernel stage is sized from its input: spread an
         # under-partitioned theme table over the cores, as the shuffle
-        # path's theme side does; a one-theme request shuffles one row
+        # path's theme side does
+        elif not cfg.kernel_partitions and plan_partitions(themes) < par:
+            themes = themes.repartition(par)
         if cfg.kernel_partitions:
             themes = themes.repartition(cfg.kernel_partitions)
-        elif plan_partitions(themes) < par:
-            themes = themes.repartition(par)
-        kernel = _make_probe_kernel(cfg, _cell_res(cfg), prepared.broadcast, with_step)
         return themes.mapInPandas(kernel, schema=ALIGN_SCHEMA)
 
     grouped, res = align_candidate_rows(spark, theme_df, ref_df, cfg, broadcast_ref)

@@ -17,7 +17,8 @@ on the DataFrame object, so repeated ``align`` calls, evaluate, temporal
 and the concurrent shard threads of ``checkpointed_align`` share one
 broadcast. ``release()`` destroys the broadcast and drops the memo
 entry, so the next call rebuilds; a DataFrame planned against a released
-instance can no longer run. When the reference DataFrame is
+instance can no longer run (a one-theme result, aligned in the driver,
+is a local relation and does not depend on it). When the reference DataFrame is
 garbage-collected, a weakref finalizer only unpersists the broadcast
 (drops its executor copies): a result planned against it may outlive the
 reference object (a function that returns a lazy align of a layer it

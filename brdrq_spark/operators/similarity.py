@@ -1,10 +1,9 @@
 """Similarity search over embedding columns (array<float>).
 
-Brute-force cosine scoring with built-in higher-order functions
-(`aggregate`/`zip_with` — JVM-side, no Python) as the correctness
-baseline, plus a random-hyperplane LSH variant as the scale path: at
-100 TB the bucket equi-join confines the quadratic pair space to
-same-bucket candidates, and the bucket key is a plain int64 column
+Cosine scoring with built-in higher-order functions
+(`aggregate`/`zip_with` — JVM-side, no Python) over random-hyperplane
+LSH candidates: at 100 TB the bucket equi-join confines the quadratic
+pair space to same-bucket candidates, and the bucket key is a plain int64 column
 Catalyst can shuffle-partition / AQE-skew-split.
 
 Scale design (vs the naive leading-dims sign bucket): real embeddings
@@ -123,36 +122,6 @@ def probe_buckets(sig_col, n_bits: int, multi_probe: bool = True):
             sig_col.bitwiseXOR(F.lit(1 << b).cast("long")) for b in range(n_bits)
         ]
     return F.array(*probes)
-
-
-def cosine_topk(
-    emb: DataFrame,
-    query_id: int,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact top-k cosine neighbors of one vector (brute force scan).
-
-    The query vector rides along as a broadcast single-row cross join —
-    a map-only scan over the corpus, fully parallel, no shuffle until
-    the final top-k (orderBy + limit → TakeOrdered)."""
-    q = emb.where(F.col(id_col) == query_id).select(
-        F.col(vec_col).cast("array<double>").alias("qv")
-    )
-    v = F.col(vec_col).cast("array<double>")
-    return (
-        emb.where(F.col(id_col) != query_id)
-        .crossJoin(F.broadcast(q))
-        .select(
-            F.col(id_col),
-            F.round(_dot(v, F.col("qv")) / (_norm(v) * _norm(F.col("qv"))), 3).alias(
-                "cosine"
-            ),
-        )
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
 
 
 def knn_join_bucketed(

@@ -1,5 +1,5 @@
 """Text-analysis operators for training-data pipelines: token counting,
-quality scoring, language-ID heuristic, document fingerprinting.
+quality scoring, language-ID heuristic.
 
 All built-in `pyspark.sql.functions` expressions (JVM-side, codegen'd,
 no UDFs) so they survive 100 TB scans; each has an exact ANSI-SQL mirror
@@ -80,21 +80,6 @@ def langid_heuristic(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
         guess.alias("lang_guess"),
     )
     return out
-
-
-def fingerprints(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Rolling 8-gram hash fingerprint set (winnowing-lite): min/max/count
-    of the per-shingle xxhash64 values — a compact document signature."""
-    words = F.split(F.lower(F.col(text_col)), " ")
-    n = F.size(words)
-    idx = F.sequence(F.lit(0), F.greatest(n - 8, F.lit(0)))
-    hashes = F.transform(idx, lambda i: F.xxhash64(F.concat_ws(" ", F.slice(words, i + 1, 8))))
-    return df.select(
-        F.col(id_col),
-        F.array_min(hashes).alias("fp_min"),
-        F.array_max(hashes).alias("fp_max"),
-        F.size(F.array_distinct(hashes)).cast("long").alias("fp_distinct"),
-    )
 
 
 # Reference search tuning (brdrq_dockwidget_featurealigner.py:168-187):

@@ -130,16 +130,6 @@ class CommittedTable:
                 fcntl.flock(lf, fcntl.LOCK_UN)
         return row
 
-    def commit_partition(
-        self, key: str, df: DataFrame, lineage: dict | None = None
-    ) -> dict:
-        """Write one partition + lineage, then atomically publish it.
-        Single-execution: the plan runs once for the write; the row count
-        comes from the written parquet (footer-only count)."""
-        part_dir = self.write_partition(key, df)
-        n = df.sparkSession.read.parquet(part_dir).count()
-        return self.publish_partition(key, n, lineage)
-
     # -- read path ----------------------------------------------------------
     def read(self, spark: SparkSession) -> DataFrame:
         keys = self.committed_keys()

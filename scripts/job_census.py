@@ -1,9 +1,21 @@
 """Job census: per-job, per-stage and per-task wall time, records and
 Python-task counts from a Spark event log.
 
-Every Python task pays a fixed start-up cost (~200-250 ms on a 4-core
-box) before it reads a row, so a small request's latency follows the
-number of Python tasks it runs. This script counts them.
+Every Python task pays a fixed start-up cost before it reads a row, so a
+small request's latency follows the number of Python tasks it runs. This
+script counts them. Measured on a 4-core box (30 runs each): a trivial
+``mapInPandas`` job takes 0.20-0.30 s (p10-p90) with 1 task and
+0.27-0.38 s with 4 tasks. Much of a task's cost is pyspark's
+``worker_util.setup_spark_files`` calling ``importlib.invalidate_caches()``:
+one such call inside a worker takes ~0.2 s, because each of the 16
+zipimporters in its path cache re-reads the directory of ``pyspark.zip``.
+
+A one-theme request on the prepared path runs no Python task: its
+kernel runs in the driver. Its time then sits outside Spark jobs, so
+``--run`` also prints each window's wall time that no job covers. On
+the same box, 30 warmed one-theme requests split (medians) into
+planning 26 ms, the theme collect job 78 ms, the kernel 22 ms, building
+the result DataFrame 24 ms and collecting it 24 ms.
 
 Usage:
   python scripts/job_census.py --run [--seed 1] [--tasks]
@@ -11,7 +23,9 @@ Usage:
       1024-theme pool, 24 images), warms up, then runs ONE interactive
       request (align of one theme at rd 2) and ONE image pass
       (footprints -> checkpointed_align, 2 concurrent shards) with the
-      event log on, and prints the census of each.
+      event log on, and prints the census of each and the wall time
+      outside any job (planning, an in-driver kernel, result
+      conversion).
   python scripts/job_census.py EVENT_LOG [--tasks]
       Census of an existing uncompressed, non-rolling JSON event log
       (spark.eventLog.compress=false, spark.eventLog.rolling.enabled=
@@ -123,6 +137,22 @@ def census(log: dict, label: str, job_ids: list[int], per_task: bool) -> dict:
     return {"jobs": len(job_ids), "stages": n_stages, "tasks": n_tasks, "python_tasks": n_py}
 
 
+def uncovered_s(log: dict, job_ids: list[int], t0: float, t1: float) -> float:
+    """Wall time of the window [t0, t1] that none of ``job_ids`` covers:
+    planning, a kernel run in the driver and result conversion."""
+    spans = sorted(
+        (max(job["submit"], t0), min(job["end"] or t1, t1))
+        for job in (log["jobs"][j] for j in job_ids)
+    )
+    covered, end = 0.0, t0
+    for lo, hi in spans:
+        lo = max(lo, end)
+        if hi > lo:
+            covered += hi - lo
+            end = hi
+    return (t1 - t0) - covered
+
+
 def run(seed: int, per_task: bool) -> None:
     """One warmed-up interactive request and one image pass, each in its
     own time window; jobs are attributed by submission time, because
@@ -195,6 +225,8 @@ def run(seed: int, per_task: bool) -> None:
         for label, (t0, t1) in windows.items():
             jids = [j for j, job in log["jobs"].items() if t0 <= job["submit"] <= t1]
             census(log, label, jids, per_task)
+            print(f"  outside any job: {uncovered_s(log, jids, t0, t1):.3f} s"
+                  f" of {t1 - t0:.3f} s wall")
     finally:
         shutil.rmtree(work, ignore_errors=True)
 

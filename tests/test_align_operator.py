@@ -195,20 +195,53 @@ def _edge_case_themes(spark, th):
     return th.select("theme_id", "geom_wkb").unionByName(spark.createDataFrame(extra))
 
 
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def test_align_hybrid_wkb_shipping_same_output(spark, tables):
-    """The prepared-reference path (broadcast_ref=True) and the cell
-    shuffle-join path must emit identical rows — every WKB slot, metric
-    and remark — on an empty-geometry theme, a multi-part theme, themes
-    over max_inline_wkb_bytes (hybrid WKB shipping: ids-only through the
-    cell explode), capped themes, and evaluate(auto_step=True), which
-    sweeps a per-theme step column."""
+    """Every sub-path of the prepared-reference path (broadcast_ref=True)
+    and the cell shuffle-join path must emit identical rows — every WKB
+    slot, metric and remark — on an empty-geometry theme, a multi-part
+    theme, themes over max_inline_wkb_bytes (hybrid WKB shipping:
+    ids-only through the cell explode), capped themes, and
+    evaluate(auto_step=True), which sweeps a per-theme step column. The
+    prepared sub-paths: each theme alone (aligned in the driver), zero
+    themes, the collected multi-theme stage, and the lazy stage taken
+    when the theme side's size estimate is above the broadcast
+    threshold."""
+    from pyspark.sql import functions as F
+
     from brdrq_spark.operators.evaluate import evaluate
 
     th, ref = tables
     themes = _edge_case_themes(spark, th)
+    ids = [r.theme_id for r in themes.select("theme_id").collect()]
 
-    def rows(cfg, bref):
-        return sorted(align(spark, themes, ref, cfg, broadcast_ref=bref).collect())
+    def aligned(cfg, bref, df=themes):
+        return align(spark, df, ref, cfg, broadcast_ref=bref)
+
+    def rows(cfg, bref, df=themes):
+        return sorted(aligned(cfg, bref, df).collect())
+
+    def alone(cfg):
+        out = []
+        for tid in ids:
+            df = aligned(cfg, True, themes.where(F.col("theme_id") == tid))
+            assert "MapInPandas" not in _executed_plan(df)
+            out += df.collect()
+        return sorted(out)
+
+    def lazy(cfg):
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "-1")
+        try:
+            df = aligned(cfg, True)
+            assert "Union" in _executed_plan(df)
+            return sorted(df.collect())
+        finally:
+            spark.conf.set(key, old)
 
     base = rows(AlignConfig(relevant_distances=[2.0]), False)
     assert len(base) == N_THEMES + 2
@@ -220,7 +253,12 @@ def test_align_hybrid_wkb_shipping_same_output(spark, tables):
         AlignConfig(relevant_distances=[0.5, 2.0], max_candidates_per_theme=2),
     ):
         shuffled = rows(cfg, False)
-        assert rows(cfg, True) == shuffled, cfg
+        collected = aligned(cfg, True)
+        assert "Union" not in _executed_plan(collected)
+        assert sorted(collected.collect()) == shuffled, cfg
+        assert alone(cfg) == shuffled, cfg
+        assert lazy(cfg) == shuffled, cfg
+        assert rows(cfg, True, themes.limit(0)) == rows(cfg, False, themes.limit(0)) == []
         if cfg.max_inline_wkb_bytes == 1:
             assert shuffled == base
         if cfg.max_candidates_per_theme == 2:
@@ -248,14 +286,17 @@ def test_align_metadata_same_on_both_paths(spark, tables):
     th, ref = tables
     cfg = AlignConfig(relevant_distances=[1.0, 2.0, 4.0], emit_metadata=True)
     ref_v = ref.withColumn("VERSDATUM", F.concat(F.lit("v"), F.col("ref_id")))
-    prepared, shuffled = (
-        sorted(
-            (r.theme_id, r.brdr_relevant_distance, r.brdr_metadata)
-            for r in align(spark, th, ref_v, cfg, broadcast_ref=bref).collect()
+    # all themes, and one theme alone (aligned in the driver)
+    one = th.where(F.col("theme_id") == th.first().theme_id)
+    for themes, n in ((one, 1), (th, N_THEMES)):
+        prepared, shuffled = (
+            sorted(
+                (r.theme_id, r.brdr_relevant_distance, r.brdr_metadata)
+                for r in align(spark, themes, ref_v, cfg, broadcast_ref=bref).collect()
+            )
+            for bref in (True, False)
         )
-        for bref in (True, False)
-    )
-    assert prepared == shuffled
+        assert prepared == shuffled and len(prepared) == 3 * n
     n_multi = 0
     for _, _, md in prepared:
         geoms = json.loads(md)["actuation"]["reference_geometries"]

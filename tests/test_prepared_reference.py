@@ -1,13 +1,17 @@
 """PreparedReference lifecycle: one build per reference DataFrame, shared
 by repeated align calls and concurrent shard threads, rebuilt only after
-an explicit release() or once the DataFrame is gone."""
+an explicit release() or once the DataFrame is gone. Also how a small
+theme side executes on it: read once, and a one-theme request aligned in
+the driver with a single Spark job."""
 
 import gc
 import sys
 import threading
 
 import pytest
+from pyspark.sql import functions as F
 
+from brdrq_spark.operators import align as align_mod
 from brdrq_spark.operators.align import AlignConfig, align, prepare_reference
 from brdrq_spark.sources.synthetic import reference_parcels, thematic_polygons
 
@@ -61,6 +65,88 @@ def test_second_align_runs_no_reference_job(spark, broadcasts):
     assert len(broadcasts) == 1  # the reference was not collected again
     assert 1 <= len(jobs) <= 2, jobs
     assert sorted(second) == first
+
+
+def test_one_theme_align_runs_one_job(spark):
+    """On a warmed reference, a one-theme request runs only the theme
+    collect: the kernel runs in the driver and the result is a local
+    relation, so collecting it runs no job."""
+    th, ref = _tables(spark)
+    align(spark, th, ref, CFG, broadcast_ref=True).collect()
+    one = th.where(F.col("theme_id") == th.first().theme_id)
+    rows = []
+    jobs = _job_ids(
+        spark,
+        "brdrq_one_theme",
+        lambda: rows.extend(align(spark, one, ref, CFG, broadcast_ref=True).collect()),
+    )
+    assert len(jobs) == 1, jobs
+    assert sorted(rows) == sorted(align(spark, one, ref, CFG, broadcast_ref=False).collect())
+
+
+def test_theme_side_runs_once_per_align(spark):
+    """The theme plan runs exactly once per align call, on the in-driver
+    (one theme) and the collected (several themes) paths: a Python UDF
+    on the theme side counts the rows it sees."""
+    th, ref = _tables(spark)
+    seen = spark.sparkContext.accumulator(0)
+
+    def touch(wkb):
+        seen.add(1)
+        return wkb
+
+    touch_udf = F.udf(touch, "binary")
+    ids = [r.theme_id for r in th.select("theme_id").collect()]
+    for n in (1, len(ids)):
+        themes = th.where(F.col("theme_id").isin(ids[:n])).withColumn(
+            "geom_wkb", touch_udf("geom_wkb")
+        )
+        before = seen.value
+        assert len(align(spark, themes, ref, CFG, broadcast_ref=True).collect()) == n
+        assert seen.value - before == n
+
+
+def test_checkpointed_align_one_theme_shards_align_in_driver_threads(
+    spark, tmp_path, monkeypatch
+):
+    """Two shards of one theme each, committed concurrently: both kernels
+    run in driver threads at the same time (a barrier that only two
+    concurrent callers pass), and the committed rows match the shuffle
+    path's."""
+    from brdrq_spark.sources.manifest import CommittedTable, checkpointed_align
+
+    th = spark.createDataFrame(
+        thematic_polygons(2, 8, 8, seed=6).assign(shard=[0, 1])
+    )
+    ref = spark.createDataFrame(reference_parcels(8, 8, seed=6))
+    both_running = threading.Barrier(2, timeout=60)
+    threads = []
+    real = align_mod._make_kernel
+
+    def in_step(cfg, res):
+        kernel = real(cfg, res)
+
+        def run(pdf):
+            threads.append(threading.current_thread())
+            both_running.wait()
+            return kernel(pdf)
+
+        return run
+
+    def committed(name, bref):
+        table = CommittedTable(str(tmp_path / name))
+        summary = checkpointed_align(
+            spark, table, th, ref, CFG, n_partitions=2, broadcast_ref=bref,
+            shard_col="shard", max_concurrent=2,
+        )
+        assert summary["computed"] == 2
+        return sorted(table.read(spark).collect())
+
+    expected = committed("shuffle", False)
+    monkeypatch.setattr(align_mod, "_make_kernel", in_step)
+    got = committed("prepared", True)
+    assert len(threads) == 2 and threading.main_thread() not in threads
+    assert got == expected and len(got) == 2
 
 
 def test_release_rebuilds_and_gc_frees(spark, broadcasts):
