@@ -291,7 +291,7 @@ def erode_nonempty(rings: list[np.ndarray], d: float, nseg: int = 16) -> bool:
     # > _TINY implies a free disk of radius ~μ·cos(π/4) in the coarse
     # arrangement, i.e. coarse area ≥ π(7e-4)² ≈ 1.5e-6 — so a coarse
     # reading ≤ 1e-9 can only occur where the exact table reads empty.
-    # Measured on the bench workload (scripts/_probe_cert_fallbacks.py):
+    # Measured on the bench workload by a census of the fallback calls:
     # every fallthrough call fires the prescreen (all are EMPTY bands),
     # so there is no double-build penalty; the net win is modest there
     # (the median fallback ring has ~6 vertices and the table cost is

@@ -51,10 +51,13 @@ come from one of two paths:
     called (one job). Zero or one theme is aligned right there
     in the driver and returned as a local relation: collecting it runs
     no job and no longer needs the broadcast. Two or more run ONE
-    ``mapInPandas`` over a local scan of the collected rows, which
-    spreads n rows over min(n, defaultParallelism) tasks without a
-    shuffle. The cutoff is one theme, not the core count, so the
-    driver's serial kernel work stays one feature at any cluster size;
+    ``mapInPandas`` over a local scan of the collected rows, which cuts
+    n rows into min(n, defaultParallelism) contiguous slices, one task
+    each, without a shuffle. The rows are first reordered so that every
+    slice carries a similar WKB byte total (``_balanced_slices``); with
+    ``kernel_partitions`` set they are repartitioned instead. The cutoff
+    is one theme, not the core count, so the driver's serial kernel work
+    stays one feature at any cluster size;
   - above it or unknown, the theme side stays lazy: ONE ``mapInPandas``
     over ``theme_df``, repartitioned only when it has fewer partitions
     than cores.
@@ -811,6 +814,23 @@ def _fits_broadcast(spark: SparkSession, df: DataFrame) -> bool:
     return 0 <= size <= spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
 
 
+def _balanced_slices(sizes: np.ndarray, k: int) -> np.ndarray:
+    """Row order under which the k contiguous slices of a local scan
+    (slice i holds rows [i*n/k, (i+1)*n/k)) carry similar ``sizes``
+    totals: largest first, each into the lightest slice with room."""
+    n = len(sizes)
+    room = np.diff([i * n // k for i in range(k + 1)])
+    load = np.zeros(k)
+    slices: list[list[int]] = [[] for _ in range(k)]
+    for row in np.argsort(-sizes, kind="stable"):
+        free = np.flatnonzero(room)
+        s = free[np.argmin(load[free])]
+        slices[s].append(row)
+        load[s] += sizes[row]
+        room[s] -= 1
+    return np.concatenate(slices)
+
+
 def align_candidate_rows(
     spark: SparkSession,
     theme_df: DataFrame,
@@ -1007,8 +1027,14 @@ def align(
                 return spark.createDataFrame(
                     out[0][ALIGN_SCHEMA.names] if out else [], ALIGN_SCHEMA
                 )
-            # a local scan spreads n rows over min(n, defaultParallelism)
-            # tasks: no shuffle needed to fill the cores
+            # a local scan cuts n rows into min(n, defaultParallelism)
+            # contiguous slices, one task each: no shuffle needed to fill
+            # the cores. Kernel time grows with the geometry, so order the
+            # rows to give every slice a similar WKB byte total.
+            if not cfg.kernel_partitions:
+                sizes = collected["geom_wkb"].map(lambda b: len(b) if b else 0)
+                order = _balanced_slices(sizes.to_numpy(), min(len(collected), par))
+                collected = collected.iloc[order]
             themes = spark.createDataFrame(collected, themes.schema)
         # the kernel stage is sized from its input: spread an
         # under-partitioned theme table over the cores, as the shuffle

@@ -2,9 +2,10 @@
 
 The broadcast path of ``align`` used to decode, cell-explode, repartition
 and broadcast the whole reference layer on every call. Each of those
-steps is a Python task, and a Python task costs ~200-250 ms before it
-touches a row, so a one-theme request paid for five jobs to align ~5 ms
-of geometry. ``PreparedReference`` pays that once: one collect of the
+steps is a Python task, and every Python task pays a fixed start-up cost
+before it touches a row (~0.1 s for a 1-task job on a 4-core box; see
+``brdrq_spark.daemon``), so a one-theme request paid for five jobs to
+align ~5 ms of geometry. ``PreparedReference`` pays that once: one collect of the
 layer, a cell-sorted CSR index (cell -> reference rows) built on the
 driver with the same bbox decode and cover arithmetic the cell join uses
 (``candidates.wkb_bboxes`` / ``candidates.cover_cells``), shipped as ONE

@@ -59,6 +59,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
+        # pyspark's daemon, with a per-task import-cache reset that reads
+        # each zip archive once instead of once per importer (daemon.py);
+        # workers must be able to import brdrq_spark
+        .config("spark.python.daemon.module", "brdrq_spark.daemon")
     )
     if extra_conf:
         for k, v in extra_conf.items():

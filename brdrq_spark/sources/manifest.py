@@ -26,7 +26,7 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 
 class CommittedTable:
@@ -71,10 +71,10 @@ class CommittedTable:
 
     # -- commit path --------------------------------------------------------
     def write_partition(self, key: str, df: DataFrame) -> str:
-        """Execute the plan exactly ONCE: write the shard parquet.
-        Counts/lineage are derived afterwards from the written files
-        (parquet footer count + a scan of the small result), so the
-        upstream align kernel never re-runs."""
+        """Write the shard parquet: the plan's one execution. Row count
+        and lineage are observed during this write (``run_partitioned``),
+        so neither the upstream kernel nor the written files are read
+        again."""
         part_dir = os.path.join(self.data_dir, f"part_{key}")
         df.write.mode("overwrite").parquet(part_dir)
         return part_dir
@@ -158,11 +158,15 @@ def run_partitioned(
     table: CommittedTable,
     keys: list[str],
     make_df,
-    make_lineage=None,
+    lineage: dict[str, Column] | None = None,
     max_concurrent: int = 1,
 ) -> dict:
     """Drive a resumable partitioned job: for every uncommitted key,
-    compute ``make_df(key)``, commit with lineage. Returns summary.
+    write ``make_df(key)`` and commit it with lineage. Returns summary.
+
+    ``lineage`` maps lineage field names to aggregate columns. They are
+    observed on the shard write (``DataFrame.observe``) together with
+    the row count, so each shard runs one job: the write.
 
     ``max_concurrent`` > 1 submits that many shard jobs at once from
     driver threads (Spark's scheduler interleaves concurrent actions
@@ -172,24 +176,22 @@ def run_partitioned(
     unchanged."""
     import threading
 
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
     todo = table.resume_filter(keys)
     done = 0
     publish_lock = threading.Lock()
+    metrics = [F.count(F.lit(1)).alias("row_count")] + [
+        col.alias(name) for name, col in (lineage or {}).items()
+    ]
 
     def run_one(key: str) -> None:
         nonlocal done
-        df = make_df(key)
-        # Plan executes once (the write); lineage + count re-read the
-        # small written parquet, not the upstream kernel.
-        part_dir = table.write_partition(key, df)
-        written = spark.read.parquet(part_dir)
-        lin = make_lineage(key, written) if make_lineage else None
-        # one scan: a lineage fn may hand back the row count it already
-        # aggregated (key "row_count") so no second count() job runs
-        if lin is not None and "row_count" in lin:
-            n = int(lin.pop("row_count"))
-        else:
-            n = written.count()
+        obs = Observation()
+        table.write_partition(key, make_df(key).observe(obs, *metrics))
+        lin = obs.get
+        n = int(lin.pop("row_count"))
         with publish_lock:
             table.publish_partition(key, n, lin)
             done += 1
@@ -258,25 +260,14 @@ def checkpointed_align(
             shard = shard.drop(shard_col)
         return align(spark, shard, ref_df, config, broadcast_ref=broadcast_ref)
 
-    def make_lineage(key, df):
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min(F.array_min("cell_ids")).alias("cell_min"),
-            F.max(F.array_max("cell_ids")).alias("cell_max"),
-            F.round(F.avg("brdr_sym_diff_area_index_perc"), 4).alias("avg_sym_perc"),
-            F.round(F.sum("brdr_area"), 2).alias("total_area"),
-        ).collect()[0]
-        return {
-            # row_count rides the same aggregate — run_partitioned skips
-            # its fallback count() job (one scan per shard, not two)
-            "row_count": int(row.n),
-            "cell_min": row.cell_min,
-            "cell_max": row.cell_max,
-            "avg_sym_perc": row.avg_sym_perc,
-            "total_area": row.total_area,
-        }
+    lineage = {
+        "cell_min": F.min(F.array_min("cell_ids")),
+        "cell_max": F.max(F.array_max("cell_ids")),
+        "avg_sym_perc": F.round(F.avg("brdr_sym_diff_area_index_perc"), 4),
+        "total_area": F.round(F.sum("brdr_area"), 2),
+    }
 
     return run_partitioned(
-        spark, table, keys, make_df, make_lineage,
+        spark, table, keys, make_df, lineage,
         max_concurrent=max_concurrent,
     )

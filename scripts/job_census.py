@@ -3,12 +3,15 @@ Python-task counts from a Spark event log.
 
 Every Python task pays a fixed start-up cost before it reads a row, so a
 small request's latency follows the number of Python tasks it runs. This
-script counts them. Measured on a 4-core box (30 runs each): a trivial
-``mapInPandas`` job takes 0.20-0.30 s (p10-p90) with 1 task and
-0.27-0.38 s with 4 tasks. Much of a task's cost is pyspark's
-``worker_util.setup_spark_files`` calling ``importlib.invalidate_caches()``:
-one such call inside a worker takes ~0.2 s, because each of the 16
-zipimporters in its path cache re-reads the directory of ``pyspark.zip``.
+script counts them. Part of that cost is pyspark's
+``worker_util.setup_spark_files`` calling ``importlib.invalidate_caches()``
+once per task. On Python 3.11 a worker holds 16 zipimporters on 3
+archives (12 on ``pyspark.zip``, 2 on the spark-core jar, 2 on the py4j
+zip), and each re-read its archive's directory: ~0.2 s per call on a
+4-core box. ``brdrq_spark.daemon`` reads each archive once per call,
+~55 ms; a 1-task local-scan ``mapInPandas`` job went from 0.26-0.29 to
+0.12-0.14 s (p50 of 30, two runs each). ``--run`` prints the in-worker
+call time and the zipimporters per archive from one 1-task probe.
 
 A one-theme request on the prepared path runs no Python task: its
 kernel runs in the driver. Its time then sits outside Spark jobs, so
@@ -25,7 +28,9 @@ Usage:
       (footprints -> checkpointed_align, 2 concurrent shards) with the
       event log on, and prints the census of each and the wall time
       outside any job (planning, an in-driver kernel, result
-      conversion).
+      conversion). Before those windows, one 1-task probe prints the
+      time of ``importlib.invalidate_caches()`` in a worker and its
+      zipimporters per archive.
   python scripts/job_census.py EVENT_LOG [--tasks]
       Census of an existing uncompressed, non-rolling JSON event log
       (spark.eventLog.compress=false, spark.eventLog.rolling.enabled=
@@ -153,6 +158,33 @@ def uncovered_s(log: dict, job_ids: list[int], t0: float, t1: float) -> float:
     return (t1 - t0) - covered
 
 
+def worker_import_probe(spark) -> None:
+    """Time one ``importlib.invalidate_caches()`` inside a Python worker
+    and count the worker's zipimporters per archive (one 1-task job)."""
+
+    def probe(_):
+        import importlib
+        import sys
+        import time
+        import zipimport
+        from collections import Counter
+
+        t0 = time.perf_counter()
+        importlib.invalidate_caches()
+        dt = time.perf_counter() - t0
+        per = Counter(
+            f.archive for f in sys.path_importer_cache.values()
+            if isinstance(f, zipimport.zipimporter)
+        )
+        yield dt, dict(per)
+
+    dt, per = spark.sparkContext.parallelize([0], 1).mapPartitions(probe).collect()[0]
+    print(f"worker invalidate_caches(): {dt * 1000:.1f} ms,"
+          f" {sum(per.values())} zipimporters on {len(per)} archives")
+    for archive, n in sorted(per.items(), key=lambda kv: -kv[1]):
+        print(f"  {n:3d}  {archive}")
+
+
 def run(seed: int, per_task: bool) -> None:
     """One warmed-up interactive request and one image pass, each in its
     own time window; jobs are attributed by submission time, because
@@ -212,6 +244,7 @@ def run(seed: int, per_task: bool) -> None:
         for tid in ids[:4]:
             request(tid)
         image_pass(0)
+        worker_import_probe(spark)
         windows = {}
         for label, fn in (("interactive request", lambda: request(ids[4])),
                           ("image pass", lambda: image_pass(1))):

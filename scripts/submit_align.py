@@ -66,17 +66,12 @@ def _checkpointed_evaluate(spark, table, theme, ref, cfg, args) -> dict:
             auto_step=args.auto_step,
         )
 
-    def make_lineage(key, df):
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                (F.col("brdr_evaluation") == "blocked_by_area").cast("int")
-            ).alias("blocked"),
-        ).collect()[0]
-        return {"row_count": int(row.n), "blocked_by_area": int(row.blocked or 0)}
+    lineage = {
+        "blocked_by_area": F.count_if(F.col("brdr_evaluation") == "blocked_by_area")
+    }
 
     return run_partitioned(
-        spark, table, keys, make_df, make_lineage,
+        spark, table, keys, make_df, lineage,
         max_concurrent=max(args.concurrent, 1),
     )
 

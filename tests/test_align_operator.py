@@ -199,7 +199,55 @@ def _executed_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_align_hybrid_wkb_shipping_same_output(spark, tables):
+@pytest.fixture
+def local_scans(spark, monkeypatch):
+    """DataFrames that ``spark.createDataFrame`` builds from a pandas
+    frame with a ``geom_wkb`` column while the test runs: the local scan
+    a collected theme side is aligned over."""
+    made = []
+    real = spark.createDataFrame
+
+    def recording(data, *args, **kwargs):
+        df = real(data, *args, **kwargs)
+        if "geom_wkb" in getattr(data, "columns", ()):
+            made.append(df)
+        return df
+
+    monkeypatch.setattr(spark, "createDataFrame", recording)
+    return made
+
+
+def _slice_wkb_bytes(df) -> list[int]:
+    """WKB byte total of each partition of ``df``, by partition id."""
+    import pandas as pd
+
+    def tag(batches):
+        from pyspark import TaskContext
+
+        pid = TaskContext.get().partitionId()
+        for pdf in batches:
+            yield pd.DataFrame({"p": [pid] * len(pdf), "n": pdf.geom_wkb.map(len)})
+
+    totals = [0] * df.rdd.getNumPartitions()
+    for r in df.mapInPandas(tag, "p int, n long").collect():
+        totals[r.p] += r.n
+    return totals
+
+
+def _greedy_wkb_bytes(sizes, k) -> list[int]:
+    """Byte total per slice when the largest theme goes first, each into
+    the lightest of k contiguous slices (n*i//k boundaries) with room."""
+    n = len(sizes)
+    room = [(i + 1) * n // k - i * n // k for i in range(k)]
+    load = [0] * k
+    for size in sorted(sizes, reverse=True):
+        i = min((j for j in range(k) if room[j]), key=lambda j: load[j])
+        load[i] += size
+        room[i] -= 1
+    return load
+
+
+def test_align_hybrid_wkb_shipping_same_output(spark, tables, local_scans):
     """Every sub-path of the prepared-reference path (broadcast_ref=True)
     and the cell shuffle-join path must emit identical rows — every WKB
     slot, metric and remark — on an empty-geometry theme, a multi-part
@@ -207,9 +255,9 @@ def test_align_hybrid_wkb_shipping_same_output(spark, tables):
     ids-only through the cell explode), capped themes, and
     evaluate(auto_step=True), which sweeps a per-theme step column. The
     prepared sub-paths: each theme alone (aligned in the driver), zero
-    themes, the collected multi-theme stage, and the lazy stage taken
-    when the theme side's size estimate is above the broadcast
-    threshold."""
+    themes, the collected multi-theme stage (its rows reordered into
+    WKB-balanced slices), and the lazy stage taken when the theme side's
+    size estimate is above the broadcast threshold."""
     from pyspark.sql import functions as F
 
     from brdrq_spark.operators.evaluate import evaluate
@@ -253,9 +301,15 @@ def test_align_hybrid_wkb_shipping_same_output(spark, tables):
         AlignConfig(relevant_distances=[0.5, 2.0], max_candidates_per_theme=2),
     ):
         shuffled = rows(cfg, False)
+        local_scans.clear()
         collected = aligned(cfg, True)
         assert "Union" not in _executed_plan(collected)
         assert sorted(collected.collect()) == shuffled, cfg
+        (scan,) = local_scans
+        sizes = [len(r.geom_wkb) for r in themes.collect()]
+        assert _slice_wkb_bytes(scan) == _greedy_wkb_bytes(
+            sizes, min(len(sizes), spark.sparkContext.defaultParallelism)
+        )
         assert alone(cfg) == shuffled, cfg
         assert lazy(cfg) == shuffled, cfg
         assert rows(cfg, True, themes.limit(0)) == rows(cfg, False, themes.limit(0)) == []
@@ -273,6 +327,48 @@ def test_align_hybrid_wkb_shipping_same_output(spark, tables):
         for bref in (True, False)
     ]
     assert sweeps[0] == sweeps[1] and len(sweeps[0]) >= N_THEMES
+
+
+def test_collected_theme_slices_balance_wkb_bytes(spark, tables, local_scans):
+    """A collected theme side with skewed WKB sizes, largest last: the
+    local scan the kernel consumes gives each contiguous slice the
+    greedy byte total, its heaviest slice is lighter than in the input
+    order, and the rows equal the shuffle path's."""
+    import pandas as pd
+
+    from brdrq_spark.geom import rings_to_wkb
+
+    th, ref = tables
+    pdf = th.select("theme_id", "geom_wkb").toPandas()
+
+    def densify(wkb, m):
+        # m extra collinear vertices per edge: same polygon, more bytes
+        out = []
+        for ring in rings_from_wkb(bytes(wkb)):
+            nxt = np.roll(ring, -1, axis=0)
+            t = np.arange(m + 1)[None, :, None] / (m + 1)
+            out.append((ring[:, None] + t * (nxt - ring)[:, None]).reshape(-1, 2))
+        return rings_to_wkb(out)
+
+    extra = [0] * (N_THEMES - 2) + [24, 48]
+    pdf["geom_wkb"] = [densify(w, m) for w, m in zip(pdf.geom_wkb, extra)]
+    themes = spark.createDataFrame(pdf)
+    sizes = [len(w) for w in pdf.geom_wkb]
+    k = min(N_THEMES, spark.sparkContext.defaultParallelism)
+    assert k > 1
+
+    cfg = AlignConfig(relevant_distances=[2.0])
+    local_scans.clear()
+    got = sorted(align(spark, themes, ref, cfg, broadcast_ref=True).collect())
+    (scan,) = local_scans
+    totals = _slice_wkb_bytes(scan)
+    assert totals == _greedy_wkb_bytes(sizes, k)
+    in_order = [
+        sum(sizes[i * N_THEMES // k:(i + 1) * N_THEMES // k]) for i in range(k)
+    ]
+    assert max(totals) < max(in_order)
+    assert got == sorted(align(spark, themes, ref, cfg, broadcast_ref=False).collect())
+    assert len(got) == N_THEMES
 
 
 def test_align_metadata_same_on_both_paths(spark, tables):

@@ -348,4 +348,7 @@ def test_submit_align_evaluate_mode(spark, tmp_path, capsys):
     assert n >= 1
     lin = tab.lineage()
     assert sum(r["row_count"] for r in lin) == n
-    assert all("blocked_by_area" in r for r in lin)
+    assert all(isinstance(r["blocked_by_area"], int) for r in lin)
+    assert sum(r["blocked_by_area"] for r in lin) == rows.where(
+        "brdr_evaluation = 'blocked_by_area'"
+    ).count()

@@ -202,3 +202,72 @@ def test_concurrent_prepare_builds_once(spark, broadcasts):
         sys.setswitchinterval(old)
     assert len(got) == 8 and all(p is got[0] for p in got)
     assert len(broadcasts) == 1
+
+
+def _new_ungrouped_jobs(spark, fn):
+    """Jobs without a job group that ``fn`` runs: the shard threads of
+    checkpointed_align do not inherit one."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    fn()
+    return set(tracker.getJobIdsForGroup(None)) - before
+
+
+def test_checkpointed_align_runs_two_jobs_per_shard(spark, tmp_path):
+    """On a warmed reference each shard runs the theme collect and the
+    write, nothing else: row count and lineage are observed on the
+    write, and they equal the aggregates of the written parquet. A
+    resumed run computes nothing."""
+    from brdrq_spark.sources.manifest import CommittedTable, checkpointed_align
+
+    th, ref = _tables(spark, n=12)
+    align(spark, th, ref, CFG, broadcast_ref=True).collect()
+    table = CommittedTable(str(tmp_path / "t"))
+
+    def run():
+        return checkpointed_align(
+            spark, table, th, ref, CFG, n_partitions=2, broadcast_ref=True,
+            max_concurrent=2,
+        )
+
+    summary = {}
+    jobs = _new_ungrouped_jobs(spark, lambda: summary.update(run()))
+    assert summary["computed"] == 2
+    assert len(jobs) == 2 * 2, jobs
+
+    for lin in table.lineage():
+        written = spark.read.parquet(table.data_dir + f"/part_{lin['partition']}")
+        want = written.agg(
+            F.count(F.lit(1)).alias("row_count"),
+            F.min(F.array_min("cell_ids")).alias("cell_min"),
+            F.max(F.array_max("cell_ids")).alias("cell_max"),
+            F.round(F.avg("brdr_sym_diff_area_index_perc"), 4).alias("avg_sym_perc"),
+            F.round(F.sum("brdr_area"), 2).alias("total_area"),
+        ).first().asDict()
+        assert want["row_count"] > 0
+        assert {k: lin[k] for k in want} == want
+    assert sum(r["row_count"] for r in table.lineage()) == 12
+
+    resumed = {}
+    assert not _new_ungrouped_jobs(spark, lambda: resumed.update(run()))
+    assert resumed["computed"] == 0 and resumed["skipped_committed"] == 2
+
+
+def test_checkpointed_align_empty_shard_commits_zero_rows(spark, tmp_path):
+    from brdrq_spark.sources.manifest import CommittedTable, checkpointed_align
+
+    th = spark.createDataFrame(
+        thematic_polygons(4, 8, 8, seed=6).assign(shard=[0, 0, 1, 1])
+    )
+    ref = spark.createDataFrame(reference_parcels(8, 8, seed=6))
+    table = CommittedTable(str(tmp_path / "t"))
+    summary = checkpointed_align(
+        spark, table, th, ref, CFG, n_partitions=3, broadcast_ref=True,
+        shard_col="shard", max_concurrent=3,
+    )
+    assert summary["computed"] == 3
+    lineage = {r["partition"]: r for r in table.lineage()}
+    assert [lineage[k]["row_count"] for k in sorted(lineage)] == [2, 2, 0]
+    empty = lineage["shard_002"]
+    assert empty["cell_min"] is None and empty["total_area"] is None
+    assert table.read(spark).count() == 4
