@@ -9,8 +9,26 @@ where capsules(boundary, d) is the union of one rectangle per boundary
 segment (width 2d) and one regular N-gon disk per vertex — the Minkowski
 sum of the boundary with a discretized disk. Round joins mirror the
 reference's buffer (10 arc segments per quarter circle,
-plugin/brdrq/brdrq_utils.py:1569-1590); we default to 8 segments per
-quarter (32 per full circle).
+plugin/brdrq/brdrq_utils.py:1569-1590); the functions here default to
+32 segments per full circle, but the alignment kernel passes
+``AlignConfig.nseg = 8``: its disks are 8-gons, and that discretization,
+not the envelope below, sets the distance to a true-disk dilation.
+
+Dilation builds its capsules on an envelope of the input, not on every
+input vertex. Pixel-traced footprints carry a vertex every 0.3-0.45 m,
+and their rectangles and disks made the partial-branch grow the
+kernel's dominant cost. The envelope has two steps:
+
+* ``fill_pockets`` drops each right-turn vertex whose neighbours are at
+  most ``L <= d*sqrt(0.4)`` apart (a superset of the input). Filling a
+  pocket with mouth L widens a d-dilation by at most
+  ``d - sqrt(d^2 - L^2/4)`` ≈ ``L^2/8d <= d/20``: the two mouth
+  vertices' disks already reach that far past the chord;
+* ``simplify_rings`` at d/20, the tolerance the output is simplified at.
+
+So an envelope dilation stays within ~3d/20 of one with capsules on
+every vertex: ``old(0.85d) ⊆ new(d) ⊆ old(1.15d)`` and
+``input ⊆ new(d)``, pinned in tests/test_geom_properties.py.
 
 The brdr relevance test — is ``buffer(intersection, -rd/2)`` empty? —
 (observable contract, docs/autocorrectborders.md:80-84) maps to
@@ -116,22 +134,66 @@ def boundary_capsules(
     return caps
 
 
+def fill_pockets(rings: list[np.ndarray], d: float) -> list[np.ndarray]:
+    """Drop each right-turn vertex whose two neighbours are at most
+    ``d*sqrt(0.4)`` apart — one pass, never two adjacent vertices.
+
+    Dropping vertex v adds the triangle (prev, next, v) to the ring,
+    and a right turn makes that triangle CCW whatever the ring's
+    orientation, so the winding number grows by one inside it: for a
+    valid input (winding never negative) the result is a superset (hole
+    rings included: a pocket of a CW hole is a convex corner of the
+    hole, which shrinks). Since no two dropped vertices are adjacent,
+    every triangle keeps both its mouth vertices. A ring left with
+    fewer than 3 vertices has zero winding and is dropped.
+    """
+    lim2 = 0.4 * d * d
+    out = []
+    for ring in rings:
+        r = np.asarray(ring, dtype=np.float64)
+        prev = np.roll(r, 1, axis=0)
+        nxt = np.roll(r, -1, axis=0)
+        vin = r - prev
+        vout = nxt - r
+        cross = vin[:, 0] * vout[:, 1] - vin[:, 1] * vout[:, 0]
+        mouth = nxt - prev
+        cand = np.flatnonzero(
+            (cross < 0) & (mouth[:, 0] ** 2 + mouth[:, 1] ** 2 <= lim2)
+        )
+        if not len(cand):
+            out.append(r)
+            continue
+        drop = np.zeros(len(r), dtype=bool)
+        for i in cand:
+            drop[i] = not drop[i - 1]
+        drop[-1] &= not drop[0]  # the ring wraps: last and first are adjacent
+        if len(r) - int(drop.sum()) >= 3:
+            out.append(r[~drop])
+    return out
+
+
 def buffer_rings(
     rings: list[np.ndarray], d: float, nseg: int = 32
 ) -> list[np.ndarray]:
     """Positive (dilate) or negative (erode) buffer; d=0 normalizes.
 
-    Output is simplified at d/20 (far below any observable tolerance) so
-    composed morphological stages don't multiply arc vertices.
+    A dilation unions the capsules of the input's envelope (pockets with
+    a mouth of at most d*sqrt(0.4) filled, then simplified at d/20; see
+    the module docstring) with that envelope, so it moves by at most
+    ~3d/20 against capsules on every input vertex and still contains the
+    input. Output is simplified at d/20 (far below any observable
+    tolerance) so composed morphological stages don't multiply arc
+    vertices.
     """
     if not rings:
         return []
     if d > 0:
+        env = simplify_rings(fill_pockets(rings, d), d / 20.0)
         # dilation keeps full vertex disks: exterior-only pruning leaves
         # ~d*SNAP micro-slivers at pruned vertices (measured ~5e-4 m2) —
         # exactness beats the small win outside the hot path
-        out = boolean_op(rings, boundary_capsules(rings, d, nseg), "union")
-        return simplify_rings(out, abs(d) / 20.0)
+        out = boolean_op(env, boundary_capsules(env, d, nseg), "union")
+        return simplify_rings(out, d / 20.0)
     if d < 0:
         return erode_rings(rings, -d, nseg)
     return boolean_op(rings, [], "union")

@@ -4,6 +4,14 @@ calls by size and by call site. Guides perf work; not part of the
 driver contract.
 
 Usage: python scripts/profile_kernel.py [N_THEMES]
+       python scripts/profile_kernel.py --images SEED [N_IMAGES]
+
+The default mode aligns jittered parcels, which never reach the partial
+branch at rd 2. ``--images`` aligns the footprints traced from
+``images_table(N_IMAGES, seed=SEED)`` (perfbench's image_pipeline
+inputs, 24 by default), each of which runs one partial-branch grow, and
+first prints the kernel time split between the relevance erosion tests,
+open's erosion, open's dilation and the grow dilation.
 """
 
 from __future__ import annotations
@@ -37,9 +45,74 @@ def build_jobs(n_themes: int):
     return jobs
 
 
+def build_image_jobs(seed: int, n_images: int = 24):
+    """(footprint WKB, candidate parcel WKBs) per traced image: every
+    parcel whose bbox lies within 2 m of the footprint's."""
+    from brdrq_spark.geom import bbox as gbbox, bbox_distance, rings_from_wkb, rings_to_wkb
+    from brdrq_spark.raster.footprint import extract_footprint
+    from brdrq_spark.sources.synthetic import images_table, reference_parcels
+
+    ref = reference_parcels(64, 64, seed=42)
+    refboxes = [(w, gbbox(rings_from_wkb(w))) for w in ref.geom_wkb]
+    jobs = []
+    for r in images_table(n_images, seed=seed).itertuples(index=False):
+        rings = extract_footprint(r.bytes, int(r.w), int(r.h), r.fmt, int(r.phash))
+        tb = gbbox(rings)
+        jobs.append(
+            (rings_to_wkb(rings), [w for w, bb in refboxes if bbox_distance(tb, bb) <= 2.0])
+        )
+    return jobs
+
+
+def stage_split(run) -> None:
+    """Print the kernel wall time spent in the relevance erosion tests,
+    open's erosion, open's dilation and the partial-branch grow."""
+    from brdrq_spark.geom import buffer
+    from brdrq_spark.operators import align
+
+    spent: Counter = Counter()
+
+    def timed(mod, name, label):
+        real = getattr(mod, name)
+
+        def wrapper(*a, **k):
+            t0 = time.perf_counter()
+            try:
+                return real(*a, **k)
+            finally:
+                spent[label] += time.perf_counter() - t0
+
+        setattr(mod, name, wrapper)
+        return mod, name, real
+
+    # the grow calls align.buffer_rings; open_rings calls buffer.buffer_rings
+    patches = [
+        timed(align, "erode_nonempty", "relevance erosion tests"),
+        timed(buffer, "erode_rings", "open: erosion"),
+        timed(buffer, "buffer_rings", "open: dilation"),
+        timed(align, "buffer_rings", "grow dilation"),
+    ]
+    t0 = time.perf_counter()
+    try:
+        run()
+    finally:
+        for mod, name, real in patches:
+            setattr(mod, name, real)
+    total = time.perf_counter() - t0
+    print(f"kernel wall {total:.3f} s")
+    for label, t in list(spent.items()) + [("other", total - sum(spent.values()))]:
+        print(f"  {label:28s} {t:7.3f} s  ({100 * t / total:4.1f}%)")
+
+
 def main():
-    n_themes = int(sys.argv[1]) if len(sys.argv) > 1 else 256
-    jobs = build_jobs(n_themes)
+    images = sys.argv[1:2] == ["--images"]
+    if images:
+        seed = int(sys.argv[2])
+        n_themes = int(sys.argv[3]) if len(sys.argv) > 3 else 24
+        jobs = build_image_jobs(seed, n_themes)
+    else:
+        n_themes = int(sys.argv[1]) if len(sys.argv) > 1 else 256
+        jobs = build_jobs(n_themes)
 
     from brdrq_spark.operators.align import AlignConfig, _make_kernel
     from brdrq_spark.geom import clip
@@ -95,6 +168,9 @@ def main():
         kern(pd.DataFrame({"theme_id": ["t"] * max(len(cands), 1),
                            "theme_wkb": [tw] * max(len(cands), 1),
                            "ref_wkb": cands or [None]}))
+
+    if images:
+        stage_split(run)
 
     t0 = time.time()
     run()

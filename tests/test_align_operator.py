@@ -551,3 +551,40 @@ def test_inradius_early_stop_decision_equivalence():
                         )
                     checked += 1
         assert checked > 40  # the fixture really exercised the path
+
+
+def test_dilation_envelope_keeps_image_decisions(image_kernel_frames, monkeypatch):
+    """The seed-1 image footprints each reach the partial branch at rd 2,
+    whose grow dilates an envelope of the opened core. Against the
+    construction with capsules on every core vertex, the decisions stay
+    identical and each result moves by at most 2% of its area."""
+    from brdrq_spark.geom import buffer
+    from brdrq_spark.geom.clip import boolean_op
+    from brdrq_spark.geom.simplify import simplify_rings
+    from brdrq_spark.operators import align as align_mod
+
+    frames = image_kernel_frames(1)
+    kern = align_mod._make_kernel(AlignConfig(relevant_distances=[2.0]), 10)
+    new = [kern(pdf).iloc[0] for pdf in frames]
+
+    real = buffer.buffer_rings
+
+    def unenveloped(rings, d, nseg=32):
+        if d <= 0 or not rings:
+            return real(rings, d, nseg)
+        caps = buffer.boundary_capsules(rings, d, nseg)
+        return simplify_rings(boolean_op(rings, caps, "union"), d / 20.0)
+
+    monkeypatch.setattr(buffer, "buffer_rings", unenveloped)
+    monkeypatch.setattr(align_mod, "buffer_rings", unenveloped)
+    old = [kern(pdf).iloc[0] for pdf in frames]
+
+    moved = 0
+    for a, b in zip(old, new):
+        for col in ("brdr_remark", "brdr_nr_references", "brdr_full_actual"):
+            assert a[col] == b[col], (a["theme_id"], col)
+        ra, rb = rings_from_wkb(a["result_wkb"]), rings_from_wkb(b["result_wkb"])
+        sym = area_of_op(ra, rb, "difference") + area_of_op(rb, ra, "difference")
+        assert sym <= 0.02 * rings_area(ra), a["theme_id"]
+        moved += bytes(a["result_wkb"]) != bytes(b["result_wkb"])
+    assert moved > len(frames) // 2  # the grow really ran on these inputs

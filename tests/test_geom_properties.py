@@ -472,3 +472,90 @@ def test_weld_and_chain_matches_reference(seed):
         ]
         for op in ("difference", "intersection", "union"):
             check_input(a, b, op)
+
+
+def _dilate_unenveloped(rings, d, nseg):
+    """``buffer_rings``' dilation before the envelope step: capsules of
+    every input vertex, then the d/20 output simplification."""
+    from brdrq_spark.geom.buffer import boundary_capsules
+    from brdrq_spark.geom.simplify import simplify_rings
+
+    return simplify_rings(boolean_op(rings, boundary_capsules(rings, d, nseg), "union"), d / 20.0)
+
+
+def _staircase_with_hole(px: float = 0.4) -> list:
+    """A pixel-traced annulus (outer and hole rings both staircases)."""
+    from brdrq_spark.raster.footprint import mask_to_rings
+
+    yy, xx = np.mgrid[0:40, 0:40]
+    r2 = (xx - 19.5) ** 2 + (yy - 19.5) ** 2
+    return [r * px for r in mask_to_rings((r2 <= 18.0**2) & (r2 >= 7.0**2))]
+
+
+def _concave_side() -> list:
+    """A CCW ring whose bottom side is an arc sagging 1.3 m into the ring
+    in ~0.26 m steps: a run of adjacent right turns, each a narrow pocket."""
+    t = np.linspace(0.6, np.pi - 0.6, 81)
+    arc = np.column_stack([-10.0 * np.cos(t) / np.cos(0.6), 3.0 * np.sin(t) - 3.0])
+    return [np.vstack([arc, [[10.0, 8.0], [-10.0, 8.0]]])]
+
+
+@pytest.fixture(scope="module")
+def grow_inputs(image_kernel_frames):
+    """The rings the alignment kernel grows at rd 2 — the ``open_rings``
+    cores of footprint ∩ parcel — for the seed-1 and seed-7919 images,
+    plus the staircase annulus and the concave side."""
+    from brdrq_spark.operators import align as align_mod
+
+    seen = []
+    real = align_mod.buffer_rings
+
+    def spy(rings, d, nseg=32):
+        seen.append(rings)
+        return real(rings, d, nseg)
+
+    kern = align_mod._make_kernel(align_mod.AlignConfig(relevant_distances=[2.0]), 10)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(align_mod, "buffer_rings", spy)
+        for seed in (1, 7919):
+            for pdf in image_kernel_frames(seed):
+                kern(pdf)
+    assert len(seen) >= 40
+    return seen + [_staircase_with_hole(), _concave_side()]
+
+
+def test_fill_pockets_superset_and_convex_unchanged(grow_inputs):
+    from brdrq_spark.geom.buffer import fill_pockets
+
+    annulus = _staircase_with_hole()
+    assert len(annulus) == 2 and rings_area(annulus[1:]) < 0  # a CW hole ring
+    for rings in grow_inputs:
+        for d in (1.0, 2.0):
+            filled = fill_pockets(rings, d)
+            assert sum(map(len, filled)) < sum(map(len, rings))
+            assert area_of_op(rings, filled, "difference") <= 1e-9
+    assert rings_area(fill_pockets(annulus, 2.0)[1:]) > rings_area(annulus[1:])  # hole shrank
+    ang = np.linspace(0.0, 2.0 * np.pi, 12, endpoint=False)
+    convex = np.column_stack([np.cos(ang), np.sin(ang)]) * 0.3
+    (out,) = fill_pockets([convex], 2.0)
+    assert np.array_equal(out, convex)
+
+
+def test_dilation_envelope_bounds(grow_inputs):
+    """input ⊆ new(d), and old(0.85d) ⊆ new(d) ⊆ old(1.15d): the envelope
+    moves a d-dilation by at most ~3d/20 against the construction that
+    put capsules on every input vertex."""
+    from brdrq_spark.geom.buffer import buffer_rings
+
+    nseg = 8
+    worst = 0.0
+    for rings in grow_inputs:
+        d = 2.0
+        new = buffer_rings(rings, d, nseg)
+        worst = max(
+            worst,
+            area_of_op(rings, new, "difference"),
+            area_of_op(_dilate_unenveloped(rings, 0.85 * d, nseg), new, "difference"),
+            area_of_op(new, _dilate_unenveloped(rings, 1.15 * d, nseg), "difference"),
+        )
+    assert worst <= 1e-6
