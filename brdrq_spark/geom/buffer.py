@@ -1,4 +1,4 @@
-"""Buffer / erosion / morphological opening+closing via boundary capsules.
+"""Buffer / erosion / morphological opening+closing.
 
 dilate(P, d)  = P ∪ capsules(boundary(P), d)
 erode(P, d)   = P \\ capsules(boundary(P), d)
@@ -14,10 +14,26 @@ plugin/brdrq/brdrq_utils.py:1569-1590); the functions here default to
 ``AlignConfig.nseg = 8``: its disks are 8-gons, and that discretization,
 not the envelope below, sets the distance to a true-disk dilation.
 
-Dilation builds its capsules on an envelope of the input, not on every
-input vertex. Pixel-traced footprints carry a vertex every 0.3-0.45 m,
-and their rectangles and disks made the partial-branch grow the
-kernel's dominant cost. The envelope has two steps:
+Erosion unions the capsules. Dilation does not: it traces one raw offset
+ring per ring of an envelope of its input (``offset_rings``, the
+Vatti/Clipper offsetting construction; Guibas–Ramshaw–Stolfi and Wein's
+convolution method), ~3-5 vertices per input vertex instead of the
+~12 of a rectangle and an 8-gon. As a chain, the offset ring is the sum
+of the envelope's boundary, the outer half of every edge rectangle and,
+at every left turn, the sector of the vertex's N-gon between the two
+edge normals: the edges they share cancel, so under nonzero winding the
+ring fills the envelope, the outer half-rectangles and the sectors, with
+every winding number non-negative. That is the capsule union up to
+where a neighbour's N-gon reaches past a vertex's sector: an edge
+shorter than ``d*sin(pi/N)`` lets its end's N-gon poke into the next
+vertex's sector beyond the N-gon chord (up to ~0.01 m² per ring at
+d = 2 on traced footprints). Every such point is within d of the
+envelope, so ``offset(d) ⊆ capsules(d) ⊆ offset(d / cos(pi/N))``,
+pinned in tests/test_geom_properties.py.
+
+The envelope has two steps. Pixel-traced footprints carry a vertex
+every 0.3-0.45 m, and a construction per vertex made the partial-branch
+grow the kernel's dominant cost:
 
 * ``fill_pockets`` drops each right-turn vertex whose neighbours are at
   most ``L <= d*sqrt(0.4)`` apart (a superset of the input). Filling a
@@ -71,8 +87,6 @@ def boundary_capsules(
     * "interior" (erosion): a convex corner's inside wedge is already
       covered by its two edge rectangles — disks only at right-turn
       (reflex-to-interior) vertices;
-    * "exterior" (dilation): symmetric — disks only at left-turn
-      vertices (the round outer join);
     * "all": both (boundary-neighborhood semantics).
 
     Pruning is exact up to scanbeam snap rounding (measured area deltas
@@ -126,9 +140,8 @@ def boundary_capsules(
             vout = r2 - r
             cross = vin[:, 0] * vout[:, 1] - vin[:, 1] * vout[:, 0]
             # interior is left of travel: right turns (cross<=0) are the
-            # reflex-to-interior corners; left turns stick out exterior
-            mask = cross <= 0 if joins == "interior" else cross >= 0
-            centers = r[mask]
+            # reflex-to-interior corners
+            centers = r[cross <= 0]
         if len(centers):
             caps.append(_unit_disk(nseg)[None, :, :] * d + centers[:, None, :])
     return caps
@@ -172,16 +185,71 @@ def fill_pockets(rings: list[np.ndarray], d: float) -> list[np.ndarray]:
     return out
 
 
+def offset_rings(
+    rings: list[np.ndarray], d: float, nseg: int = 32
+) -> list[np.ndarray]:
+    """One raw offset ring per ring, d to the right of travel (outside
+    CCW outers, inside CW holes): every edge shifted by d along its
+    right normal. Per vertex, between the two shifted endpoints, it
+    emits at a right turn the vertex itself and at a left turn the
+    points where the two edges' end normals meet the nseg-gon's chords,
+    with the nseg-gon vertices strictly between them. Nonzero winding
+    over ``rings + offset_rings(rings, d)`` fills the d-dilation (see
+    the module docstring); the ring itself self-intersects."""
+    from brdrq_spark.geom.core import rot1
+
+    step = 2.0 * np.pi / nseg
+    disk = _unit_disk(nseg) * d
+
+    def chord(a: np.ndarray) -> np.ndarray:
+        # distance from the centre to the nseg-gon boundary at angle a
+        return d * np.cos(0.5 * step) / np.cos(a - (np.floor(a / step) + 0.5) * step)
+
+    out = []
+    for ring in rings:
+        r = np.asarray(ring, dtype=np.float64)
+        r = r[(r != rot1(r)).any(axis=1)]
+        n = len(r)
+        if n < 3:
+            continue
+        t = rot1(r) - r
+        t /= np.hypot(t[:, 0], t[:, 1])[:, None]
+        n_out = np.column_stack([t[:, 1], -t[:, 0]])  # right normal of edge i
+        n_in = np.concatenate((n_out[-1:], n_out[:-1]))  # ... of edge i-1
+        cross = n_in[:, 0] * n_out[:, 1] - n_in[:, 1] * n_out[:, 0]
+        dot = (n_in * n_out).sum(axis=1)
+        left = (cross > 0) | ((cross == 0) & (dot < 0))  # a U-turn goes round
+        a1 = np.mod(np.arctan2(n_in[left, 1], n_in[left, 0]), 2.0 * np.pi)
+        a2 = a1 + np.where(cross[left] > 0, np.arctan2(cross[left], dot[left]), np.pi)
+        k_lo = np.floor(a1 / step).astype(np.int64) + 1
+        n_arc = np.maximum(np.ceil(a2 / step).astype(np.int64) - k_lo, 0)
+        m = np.full(n, 3, dtype=np.int64)
+        m[left] = 4 + n_arc
+        o = np.cumsum(m) - m
+        pts = np.empty((int(m[-1] + o[-1]), 2))
+        pts[o] = r + d * n_in
+        pts[o + m - 1] = r + d * n_out
+        pts[o[~left] + 1] = r[~left]
+        o, c = o[left], r[left]
+        pts[o + 1] = c + chord(a1)[:, None] * n_in[left]
+        pts[o + 2 + n_arc] = c + chord(a2)[:, None] * n_out[left]
+        i = np.repeat(np.arange(len(n_arc)), n_arc)
+        j = np.arange(len(i)) - np.repeat(np.cumsum(n_arc) - n_arc, n_arc)
+        pts[o[i] + 2 + j] = c[i] + disk[(k_lo[i] + j) % nseg]
+        out.append(pts)
+    return out
+
+
 def buffer_rings(
     rings: list[np.ndarray], d: float, nseg: int = 32
 ) -> list[np.ndarray]:
     """Positive (dilate) or negative (erode) buffer; d=0 normalizes.
 
-    A dilation unions the capsules of the input's envelope (pockets with
-    a mouth of at most d*sqrt(0.4) filled, then simplified at d/20; see
-    the module docstring) with that envelope, so it moves by at most
-    ~3d/20 against capsules on every input vertex and still contains the
-    input. Output is simplified at d/20 (far below any observable
+    A dilation unions the input's envelope (pockets with a mouth of at
+    most d*sqrt(0.4) filled, then simplified at d/20) with its raw
+    offset rings (see the module docstring), so it moves by at most
+    ~3d/20 against capsules on every input vertex and still contains
+    the input. Output is simplified at d/20 (far below any observable
     tolerance) so composed morphological stages don't multiply arc
     vertices.
     """
@@ -189,10 +257,7 @@ def buffer_rings(
         return []
     if d > 0:
         env = simplify_rings(fill_pockets(rings, d), d / 20.0)
-        # dilation keeps full vertex disks: exterior-only pruning leaves
-        # ~d*SNAP micro-slivers at pruned vertices (measured ~5e-4 m2) —
-        # exactness beats the small win outside the hot path
-        out = boolean_op(env, boundary_capsules(env, d, nseg), "union")
+        out = boolean_op(env + offset_rings(env, d, nseg), [], "union")
         return simplify_rings(out, d / 20.0)
     if d < 0:
         return erode_rings(rings, -d, nseg)

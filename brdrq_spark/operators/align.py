@@ -53,11 +53,16 @@ come from one of two paths:
     no job and no longer needs the broadcast. Two or more run ONE
     ``mapInPandas`` over a local scan of the collected rows, which cuts
     n rows into min(n, defaultParallelism) contiguous slices, one task
-    each, without a shuffle. The rows are first reordered so that every
-    slice carries a similar WKB byte total (``_balanced_slices``); with
-    ``kernel_partitions`` set they are repartitioned instead. The cutoff
-    is one theme, not the core count, so the driver's serial kernel work
-    stays one feature at any cluster size;
+    each, without a shuffle. ``kernel_partitions`` sets the task count:
+    fewer tasks ``coalesce`` runs of adjacent slices (still no
+    shuffle); more than min(n, defaultParallelism) repartition. The
+    rows are first reordered so that every task reads a similar WKB
+    byte total (``_balanced_slices``). Concurrent
+    ``checkpointed_align`` shards each take their share of the cores
+    this way, so the shards' kernel tasks run in one wave instead of
+    queueing behind each other. The cutoff is one theme, not the core
+    count, so the driver's serial kernel work stays one feature at any
+    cluster size;
   - above it or unknown, the theme side stays lazy: ONE ``mapInPandas``
     over ``theme_df``, repartitioned only when it has fewer partitions
     than cores.
@@ -146,11 +151,14 @@ class AlignConfig:
     # kernel-stage partition count; None = 4x defaultParallelism on the
     # shuffle path; on the prepared path, min(n, defaultParallelism)
     # for a collected theme side of n themes, or the theme input's own
-    # partitioning (raised to defaultParallelism) for a lazy one. A
-    # one-theme request is aligned in the driver whatever the value.
-    # Pin it when comparing runs at different core counts so both
-    # levels see the same per-partition work (scaling evidence,
-    # BASELINE.md).
+    # partitioning (raised to defaultParallelism) for a lazy one. On a
+    # collected side at most n tasks run; fewer than min(n,
+    # defaultParallelism) coalesce the local scan's slices without a
+    # shuffle. checkpointed_align fills it with each concurrent shard's
+    # share of the cores. A one-theme request is aligned in the driver
+    # whatever the value. Pin it when comparing runs at different core
+    # counts so both levels see the same per-partition work (scaling
+    # evidence, BASELINE.md).
     kernel_partitions: int | None = None
     # OD snap densification: no OD edge longer than this before snapping
     # (reference snap_max_segment_length default 2,
@@ -814,12 +822,12 @@ def _fits_broadcast(spark: SparkSession, df: DataFrame) -> bool:
     return 0 <= size <= spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
 
 
-def _balanced_slices(sizes: np.ndarray, k: int) -> np.ndarray:
-    """Row order under which the k contiguous slices of a local scan
-    (slice i holds rows [i*n/k, (i+1)*n/k)) carry similar ``sizes``
-    totals: largest first, each into the lightest slice with room."""
-    n = len(sizes)
-    room = np.diff([i * n // k for i in range(k + 1)])
+def _balanced_slices(sizes: np.ndarray, bounds: list[int]) -> np.ndarray:
+    """Row order under which the contiguous slices [bounds[i],
+    bounds[i+1]) carry similar ``sizes`` totals: largest first, each
+    into the lightest slice with room."""
+    room = np.diff(bounds)
+    k = len(room)
     load = np.zeros(k)
     slices: list[list[int]] = [[] for _ in range(k)]
     for row in np.argsort(-sizes, kind="stable"):
@@ -1029,17 +1037,29 @@ def align(
                 )
             # a local scan cuts n rows into min(n, defaultParallelism)
             # contiguous slices, one task each: no shuffle needed to fill
-            # the cores. Kernel time grows with the geometry, so order the
-            # rows to give every slice a similar WKB byte total.
-            if not cfg.kernel_partitions:
+            # the cores. Fewer slices coalesce runs of adjacent ones (a
+            # narrow dependency); more need a shuffle. Kernel time grows
+            # with the geometry, so order the rows to give every task a
+            # similar WKB byte total.
+            n = len(collected)
+            scan = min(n, par)
+            slices = min(cfg.kernel_partitions or scan, n)
+            if slices <= scan:
+                # coalesce task g reads scan slices [g*scan/slices, ...),
+                # and scan slice j holds rows [j*n/scan, ...)
+                bounds = [g * scan // slices * n // scan for g in range(slices + 1)]
                 sizes = collected["geom_wkb"].map(lambda b: len(b) if b else 0)
-                order = _balanced_slices(sizes.to_numpy(), min(len(collected), par))
-                collected = collected.iloc[order]
+                collected = collected.iloc[_balanced_slices(sizes.to_numpy(), bounds)]
             themes = spark.createDataFrame(collected, themes.schema)
+            if slices < scan:
+                themes = themes.coalesce(slices)
+            elif slices > scan:
+                themes = themes.repartition(slices)
+            return themes.mapInPandas(kernel, schema=ALIGN_SCHEMA)
         # the kernel stage is sized from its input: spread an
         # under-partitioned theme table over the cores, as the shuffle
         # path's theme side does
-        elif not cfg.kernel_partitions and plan_partitions(themes) < par:
+        if not cfg.kernel_partitions and plan_partitions(themes) < par:
             themes = themes.repartition(par)
         if cfg.kernel_partitions:
             themes = themes.repartition(cfg.kernel_partitions)

@@ -17,7 +17,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -135,22 +135,24 @@ def lsh_candidate_pairs(
         ).alias("band", "bucket"),
     )
     if max_bucket_size and max_bucket_size > 0:
-        # bucket-array pair generation: ONE aggregation computes every
-        # bucket's (sorted, capped) member list and pairs explode from
-        # the array — the previous left/right self-join re-evaluated the
-        # whole banding subtree (shingles -> explode -> 16-32 hashes ->
-        # groupBy-min -> banding -> window cap) once PER SIDE, because
-        # Catalyst does not dedupe common subtrees (plan audit r08: two
-        # identical 24-node pipelines under the join). Same kept set:
-        # array_sort + slice(1, cap) keeps the first `cap` ids in id
-        # order, exactly the row_number()-over-(orderBy id) cap it
-        # replaces; pairs (ids[i], ids[j]) with i<j are exactly the
-        # a < b join pairs. Per-bucket arrays are bounded by the cap
-        # (500 ids ~ 4 KB), so no task holds unbounded state at scale.
-        capped = F.slice(
-            F.array_sort(F.collect_list(F.col(id_col))), 1, max_bucket_size
+        # bucket-array pair generation: ONE aggregation collects every
+        # bucket's sorted member list and pairs explode from the array —
+        # a left/right self-join re-evaluates the whole banding subtree
+        # (shingles -> explode -> 16-32 hashes -> groupBy-min -> banding)
+        # once PER SIDE, because Catalyst does not dedupe common subtrees
+        # (plan audit r08: two identical 24-node pipelines under the
+        # join). The cap applies BEFORE the aggregation: row_number over
+        # (band, bucket) by id keeps the first `cap` ids, so no
+        # aggregation buffer holds more than `cap` ids (500 ids ~ 4 KB),
+        # however large a degenerate bucket grows. Pairs (ids[i], ids[j])
+        # with i<j are exactly the a < b join pairs.
+        rank = F.row_number().over(
+            Window.partitionBy("band", "bucket").orderBy(F.col(id_col))
         )
-        buckets = banded.groupBy("band", "bucket").agg(capped.alias("_ids"))
+        capped = banded.withColumn("_rank", rank).where(F.col("_rank") <= max_bucket_size)
+        buckets = capped.groupBy("band", "bucket").agg(
+            F.array_sort(F.collect_list(F.col(id_col))).alias("_ids")
+        )
         pair_structs = F.flatten(
             F.transform(
                 F.col("_ids"),

@@ -241,12 +241,26 @@ def checkpointed_align(
     for oracle checks), each shard aligns independently and commits
     atomically with lineage rows carrying the cell range, row count and
     alignment stats. A killed run resumes from the manifest and re-does
-    only uncommitted shards."""
+    only uncommitted shards.
+
+    With more than one shard in flight (``max_concurrent`` and the
+    uncommitted shards both > 1) and ``kernel_partitions`` left None,
+    each shard's kernel stage gets ``defaultParallelism // in_flight``
+    tasks, so the concurrent shards share the cores in one wave instead
+    of each claiming all of them. A lazy theme side or the shuffle path
+    repartitions its kernel stage to that share too."""
+    import dataclasses
+
     from pyspark.sql import functions as F
 
-    from brdrq_spark.operators.align import align
+    from brdrq_spark.operators.align import AlignConfig, align
 
     keys = [f"shard_{i:03d}" for i in range(n_partitions)]
+    config = config or AlignConfig()
+    in_flight = min(max_concurrent, len(table.resume_filter(keys)))
+    if config.kernel_partitions is None and in_flight > 1:
+        share = max(1, spark.sparkContext.defaultParallelism // in_flight)
+        config = dataclasses.replace(config, kernel_partitions=share)
     shard_expr = (
         F.pmod(F.col(shard_col), F.lit(n_partitions))
         if shard_col

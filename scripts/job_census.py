@@ -13,6 +13,11 @@ zip), and each re-read its archive's directory: ~0.2 s per call on a
 0.12-0.14 s (p50 of 30, two runs each). ``--run`` prints the in-worker
 call time and the zipimporters per archive from one 1-task probe.
 
+Per stage it also prints the peak number of tasks in flight (from task
+launch and finish times) against defaultParallelism: a stage whose peak
+stays below both its task count and defaultParallelism shared the cores
+with a concurrent stage, and its tasks ran in more than one wave.
+
 A one-theme request on the prepared path runs no Python task: its
 kernel runs in the driver. Its time then sits outside Spark jobs, so
 ``--run`` also prints each window's wall time that no job covers. On
@@ -62,11 +67,17 @@ def read_log(path: str) -> dict:
     jobs: dict[int, dict] = {}
     stages: dict[int, dict] = {}
     tasks: dict[int, list[dict]] = {}
+    cores = 0
+    parallelism = None
     with open(path) as f:
         for line in f:
             ev = json.loads(line)
             kind = ev.get("Event")
-            if kind == "SparkListenerJobStart":
+            if kind == "SparkListenerEnvironmentUpdate":
+                parallelism = (ev.get("Spark Properties") or {}).get("spark.default.parallelism")
+            elif kind == "SparkListenerExecutorAdded":
+                cores += (ev.get("Executor Info") or {}).get("Total Cores", 0)
+            elif kind == "SparkListenerJobStart":
                 props = ev.get("Properties") or {}
                 jobs[ev["Job ID"]] = {
                     "submit": ev["Submission Time"] / 1000.0,
@@ -95,6 +106,8 @@ def read_log(path: str) -> dict:
                 sw = m.get("Shuffle Write Metrics") or {}
                 tasks.setdefault(ev["Stage ID"], []).append({
                     "index": info.get("Index"),
+                    "launch": info.get("Launch Time", 0) / 1000.0,
+                    "finish": info.get("Finish Time", 0) / 1000.0,
                     "wall": (info.get("Finish Time", 0) - info.get("Launch Time", 0))
                     / 1000.0,
                     "run": m.get("Executor Run Time", 0) / 1000.0,
@@ -103,7 +116,20 @@ def read_log(path: str) -> dict:
                     "out": (m.get("Output Metrics") or {}).get("Records Written", 0)
                     + sw.get("Shuffle Records Written", 0),
                 })
-    return {"jobs": jobs, "stages": stages, "tasks": tasks}
+    # Spark's own default: spark.default.parallelism, else the total cores
+    par = int(parallelism) if parallelism else cores
+    return {"jobs": jobs, "stages": stages, "tasks": tasks, "parallelism": par}
+
+
+def peak_in_flight(tasks: list[dict]) -> int:
+    """Most of ``tasks`` running at one time, from their launch and
+    finish times (one finishing as another launches does not overlap)."""
+    events = sorted([(t["finish"], -1) for t in tasks] + [(t["launch"], 1) for t in tasks])
+    running = peak = 0
+    for _, step in events:
+        running += step
+        peak = max(peak, running)
+    return peak
 
 
 def census(log: dict, label: str, job_ids: list[int], per_task: bool) -> dict:
@@ -128,7 +154,9 @@ def census(log: dict, label: str, job_ids: list[int], per_task: bool) -> dict:
                 f" records in {sum(t['in'] for t in ts)} out {sum(t['out'] for t in ts)},"
                 f" task wall max {max(t['wall'] for t in ts):.3f} s"
                 f" sum {sum(t['wall'] for t in ts):.3f} s"
-                f", empty tasks {sum(t['in'] == 0 for t in ts)}  [{st['name'][:40]}]"
+                f", empty tasks {sum(t['in'] == 0 for t in ts)}, peak in flight"
+                f" {peak_in_flight(ts)} of defaultParallelism {log['parallelism']}"
+                f"  [{st['name'][:40]}]"
             )
             if per_task:
                 for t in sorted(ts, key=lambda t: t["index"]):

@@ -370,6 +370,19 @@ def test_collected_theme_slices_balance_wkb_bytes(spark, tables, local_scans):
     assert got == sorted(align(spark, themes, ref, cfg, broadcast_ref=False).collect())
     assert len(got) == N_THEMES
 
+    # fewer kernel tasks than slices: adjacent slices coalesce, no
+    # shuffle, and each task still reads the greedy byte total
+    few = AlignConfig(relevant_distances=[2.0], kernel_partitions=2)
+    local_scans.clear()
+    out = align(spark, themes, ref, few, broadcast_ref=True)
+    plan = _executed_plan(out)
+    assert "Coalesce 2" in plan and "Exchange" not in plan, plan
+    assert out.rdd.getNumPartitions() == 2
+    assert sorted(out.collect()) == got
+    (scan,) = local_scans
+    totals = _slice_wkb_bytes(scan)
+    assert [sum(totals[:k // 2]), sum(totals[k // 2:])] == _greedy_wkb_bytes(sizes, 2)
+
 
 def test_align_metadata_same_on_both_paths(spark, tables):
     """brdr_metadata lineage is byte-equal between the prepared path and

@@ -474,13 +474,26 @@ def test_weld_and_chain_matches_reference(seed):
             check_input(a, b, op)
 
 
+def _capsule_dilation(rings, d, nseg):
+    """``rings`` ∪ the capsules of every vertex and edge."""
+    from brdrq_spark.geom.buffer import boundary_capsules
+
+    return boolean_op(rings, boundary_capsules(rings, d, nseg), "union")
+
+
+def _offset_dilation(rings, d, nseg):
+    """``buffer_rings``' dilation of an envelope, before its simplify."""
+    from brdrq_spark.geom.buffer import offset_rings
+
+    return boolean_op(rings + offset_rings(rings, d, nseg), [], "union")
+
+
 def _dilate_unenveloped(rings, d, nseg):
     """``buffer_rings``' dilation before the envelope step: capsules of
     every input vertex, then the d/20 output simplification."""
-    from brdrq_spark.geom.buffer import boundary_capsules
     from brdrq_spark.geom.simplify import simplify_rings
 
-    return simplify_rings(boolean_op(rings, boundary_capsules(rings, d, nseg), "union"), d / 20.0)
+    return simplify_rings(_capsule_dilation(rings, d, nseg), d / 20.0)
 
 
 def _staircase_with_hole(px: float = 0.4) -> list:
@@ -559,3 +572,89 @@ def test_dilation_envelope_bounds(grow_inputs):
             area_of_op(new, _dilate_unenveloped(rings, 1.15 * d, nseg), "difference"),
         )
     assert worst <= 1e-6
+
+
+def _square(x0, y0, w, h, cw=False):
+    r = np.array([[x0, y0], [x0 + w, y0], [x0 + w, y0 + h], [x0, y0 + h]], dtype=float)
+    return r[::-1] if cw else r
+
+
+def _notched(width):
+    """A 20 x 10 rectangle with a 5 m deep notch of ``width`` in its top."""
+    a, b = 10.0 - width / 2, 10.0 + width / 2
+    return [np.array([[0, 0], [20, 0], [20, 10], [b, 10], [b, 5], [a, 5], [a, 10], [0, 10]], dtype=float)]
+
+
+_ADVERSARIAL = {
+    "narrow notch": _notched(1.0),  # narrower than 2d at d = 2
+    "wide notch": _notched(6.0),
+    "spike": [np.array([[0, 0], [10, 0], [10, 10], [5.1, 10], [5, 16], [4.9, 10], [0, 10]], dtype=float)],
+    # the 3 m hole closes at d = 2, the 8 m one survives
+    "holes": [_square(0, 0, 20, 20), _square(3, 3, 3, 3, cw=True), _square(9, 9, 8, 8, cw=True)],
+    "disjoint": [_square(0, 0, 5, 5), _square(8, 0, 5, 5)],  # 3 m apart
+    "collinear": [
+        np.array([[0, 0], [2, 0], [4, 0], [6, 0], [8, 0], [10, 0], [10, 2], [10, 4],
+                  [10, 6], [5, 6], [0, 6], [0, 3]], dtype=float)
+    ],
+}
+
+
+@pytest.fixture(scope="module")
+def dilation_calls(image_kernel_frames):
+    """(rings, d, nseg) of every dilation the alignment kernel runs at
+    rd 2 on the seed-1 and seed-7919 image footprints: open's and the
+    grow's."""
+    from brdrq_spark.geom import buffer
+    from brdrq_spark.operators import align as align_mod
+
+    seen = []
+    real = buffer.buffer_rings
+
+    def spy(rings, d, nseg=32):
+        if d > 0:
+            seen.append((rings, d, nseg))
+        return real(rings, d, nseg)
+
+    kern = align_mod._make_kernel(align_mod.AlignConfig(relevant_distances=[2.0]), 10)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(buffer, "buffer_rings", spy)
+        mp.setattr(align_mod, "buffer_rings", spy)
+        for seed in (1, 7919):
+            for pdf in image_kernel_frames(seed):
+                kern(pdf)
+    assert len(seen) >= 80
+    return seen
+
+
+def test_offset_dilation_brackets_capsule_union(dilation_calls):
+    """On the same rings, ``offset(d) ⊆ capsules(d) ⊆ offset(d / cos(pi/nseg))``
+    (the capsules reach past the offset only where a short edge's
+    nseg-gon pokes past the next vertex's sector), for the kernel's
+    envelopes and for adversarial rings at nseg 4, 8 and 32 — fed raw,
+    so collinear runs and the spike reach the offset. On the
+    adversarial rings the two agree up to snap rounding. Every dilation
+    contains its input."""
+    from brdrq_spark.geom.buffer import buffer_rings, fill_pockets
+    from brdrq_spark.geom.simplify import simplify_rings
+
+    def bracket(rings, d, nseg):
+        new = _offset_dilation(rings, d, nseg)
+        caps = _capsule_dilation(rings, d, nseg)
+        wider = _offset_dilation(rings, d / np.cos(np.pi / nseg), nseg)
+        assert area_of_op(new, caps, "difference") <= 1e-4
+        assert area_of_op(caps, wider, "difference") <= 1e-4
+        return area_of_op(caps, new, "difference")
+
+    for rings, d, nseg in dilation_calls:
+        bracket(simplify_rings(fill_pockets(rings, d), d / 20.0), d, nseg)
+        assert area_of_op(rings, buffer_rings(rings, d, nseg), "difference") <= 1e-6
+    for name, rings in _ADVERSARIAL.items():
+        for nseg in (4, 8, 32):
+            for d in (0.5, 2.0):
+                assert bracket(rings, d, nseg) <= 1e-4, (name, nseg, d)
+                assert area_of_op(rings, buffer_rings(rings, d, nseg), "difference") <= 1e-6
+    for nseg in (4, 8, 32):
+        assert len(buffer_rings(_ADVERSARIAL["holes"], 0.5, nseg)) == 3
+        assert len(buffer_rings(_ADVERSARIAL["holes"], 2.0, nseg)) == 2
+        assert len(buffer_rings(_ADVERSARIAL["disjoint"], 0.5, nseg)) == 2
+        assert len(buffer_rings(_ADVERSARIAL["disjoint"], 2.0, nseg)) == 1

@@ -225,7 +225,8 @@ def test_evaluate_original_strategy_restores_source(spark, small_tables):
 
 def test_lsh_degenerate_bucket_capped(spark):
     """A bucket of thousands of identical docs must not go quadratic:
-    max_bucket_size bounds the pair count."""
+    max_bucket_size keeps the bucket's first ids, so the pairs are
+    exactly those among the 100 smallest ids."""
     import pandas as pd
 
     from brdrq_spark.operators.dedup import (
@@ -244,8 +245,9 @@ def test_lsh_degenerate_bucket_capped(spark):
     )
     sigs = minhash_signatures(shingles(docs, k=3), num_perm=16)
     pairs = lsh_candidate_pairs(sigs, bands=8, max_bucket_size=100)
-    n = pairs.count()
-    assert 0 < n <= 100 * 99 // 2
+    got = {(r.a, r.b) for r in pairs.collect()}
+    kept = [f"d{i:05d}" for i in range(100)]
+    assert got == {(a, b) for a in kept for b in kept if a < b}
 
 
 def test_checkpointed_align_resume(spark, tmp_path, small_tables):

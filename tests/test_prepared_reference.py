@@ -253,6 +253,45 @@ def test_checkpointed_align_runs_two_jobs_per_shard(spark, tmp_path):
     assert resumed["computed"] == 0 and resumed["skipped_committed"] == 2
 
 
+def test_concurrent_shards_run_one_wave_of_kernel_tasks(spark, tmp_path, monkeypatch):
+    """Two shards committed concurrently split the cores: together they
+    launch at most defaultParallelism kernel tasks, so none waits for a
+    core, and they commit the rows and lineage of a sequential run."""
+    from brdrq_spark.sources.manifest import CommittedTable, checkpointed_align
+
+    th, ref = _tables(spark, n=12)
+    tasks = tmp_path / "tasks"
+    tasks.mkdir()
+    real = align_mod._make_probe_kernel
+
+    def counted(*args):
+        stream = real(*args)
+
+        def run(batches):
+            import os
+            import uuid
+
+            open(os.path.join(str(tasks), uuid.uuid4().hex), "w").close()
+            yield from stream(batches)
+
+        return run
+
+    def committed(name, conc):
+        table = CommittedTable(str(tmp_path / name))
+        summary = checkpointed_align(
+            spark, table, th, ref, CFG, n_partitions=2, broadcast_ref=True,
+            max_concurrent=conc,
+        )
+        assert summary["computed"] == 2
+        lineage = [{k: v for k, v in r.items() if k != "committed_at"} for r in table.lineage()]
+        return sorted(table.read(spark).collect()), lineage
+
+    sequential = committed("seq", 1)
+    monkeypatch.setattr(align_mod, "_make_probe_kernel", counted)
+    assert committed("par", 2) == sequential
+    assert 2 <= len(list(tasks.iterdir())) <= spark.sparkContext.defaultParallelism
+
+
 def test_checkpointed_align_empty_shard_commits_zero_rows(spark, tmp_path):
     from brdrq_spark.sources.manifest import CommittedTable, checkpointed_align
 
