@@ -155,10 +155,11 @@ class AlignConfig:
     # collected side at most n tasks run; fewer than min(n,
     # defaultParallelism) coalesce the local scan's slices without a
     # shuffle. checkpointed_align fills it with each concurrent shard's
-    # share of the cores. A one-theme request is aligned in the driver
-    # whatever the value. Pin it when comparing runs at different core
-    # counts so both levels see the same per-partition work (scaling
-    # evidence, BASELINE.md).
+    # share of the cores, on a collected theme side only (the lazy and
+    # shuffle plans keep their own). A one-theme request is aligned in
+    # the driver whatever the value. Pin it when comparing runs at
+    # different core counts so both levels see the same per-partition
+    # work (scaling evidence, BASELINE.md).
     kernel_partitions: int | None = None
     # OD snap densification: no OD edge longer than this before snapping
     # (reference snap_max_segment_length default 2,
@@ -822,6 +823,23 @@ def _fits_broadcast(spark: SparkSession, df: DataFrame) -> bool:
     return 0 <= size <= spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
 
 
+def _prepared_path(spark: SparkSession, ref_df: DataFrame, broadcast_ref: bool | None) -> bool:
+    """``align``'s choice between the prepared and the shuffle path."""
+    return bool(broadcast_ref) or (
+        broadcast_ref is None
+        and _fits_broadcast(spark, ref_df.select("ref_id", "geom_wkb"))
+    )
+
+
+def _theme_rows(theme_df: DataFrame, cfg: AlignConfig) -> DataFrame:
+    """The prepared path's theme side: (theme_id, geom_wkb [, theme_step]).
+    ``align`` collects it when it fits ``_fits_broadcast``."""
+    cols = [F.col("theme_id"), F.col("geom_wkb")]
+    if cfg.step_col is not None and cfg.step_col in theme_df.columns:
+        cols.append(F.col(cfg.step_col).cast("double").alias("theme_step"))
+    return theme_df.select(*cols)
+
+
 def _balanced_slices(sizes: np.ndarray, bounds: list[int]) -> np.ndarray:
     """Row order under which the contiguous slices [bounds[i],
     bounds[i+1]) carry similar ``sizes`` totals: largest first, each
@@ -1013,16 +1031,10 @@ def align(
 
     require_same_crs(cfg.crs, cfg.ref_crs if cfg.ref_crs is not None else cfg.crs)
     par = spark.sparkContext.defaultParallelism
-    if broadcast_ref or (
-        broadcast_ref is None
-        and _fits_broadcast(spark, ref_df.select("ref_id", "geom_wkb"))
-    ):
+    if _prepared_path(spark, ref_df, broadcast_ref):
         prepared = prepare_reference(spark, ref_df, cfg)
-        with_step = cfg.step_col is not None and cfg.step_col in theme_df.columns
-        cols = [F.col("theme_id"), F.col("geom_wkb")]
-        if with_step:
-            cols.append(F.col(cfg.step_col).cast("double").alias("theme_step"))
-        themes = theme_df.select(*cols)
+        themes = _theme_rows(theme_df, cfg)
+        with_step = "theme_step" in themes.columns
         kernel = _make_probe_kernel(cfg, _cell_res(cfg), prepared.broadcast, with_step)
         if _fits_broadcast(spark, themes):
             # a small theme side is read once, now, in one job

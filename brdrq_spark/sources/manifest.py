@@ -160,9 +160,12 @@ def run_partitioned(
     make_df,
     lineage: dict[str, Column] | None = None,
     max_concurrent: int = 1,
+    todo: list[str] | None = None,
 ) -> dict:
     """Drive a resumable partitioned job: for every uncommitted key,
     write ``make_df(key)`` and commit it with lineage. Returns summary.
+    ``todo``: the uncommitted keys, when the caller already read them
+    from the manifest (``table.resume_filter(keys)``).
 
     ``lineage`` maps lineage field names to aggregate columns. They are
     observed on the shard write (``DataFrame.observe``) together with
@@ -179,7 +182,8 @@ def run_partitioned(
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    todo = table.resume_filter(keys)
+    if todo is None:
+        todo = table.resume_filter(keys)
     done = 0
     publish_lock = threading.Lock()
     metrics = [F.count(F.lit(1)).alias("row_count")] + [
@@ -244,23 +248,39 @@ def checkpointed_align(
     only uncommitted shards.
 
     With more than one shard in flight (``max_concurrent`` and the
-    uncommitted shards both > 1) and ``kernel_partitions`` left None,
-    each shard's kernel stage gets ``defaultParallelism // in_flight``
-    tasks, so the concurrent shards share the cores in one wave instead
-    of each claiming all of them. A lazy theme side or the shuffle path
-    repartitions its kernel stage to that share too."""
+    uncommitted shards both > 1) and ``kernel_partitions`` left None, a
+    shard whose theme side ``align`` collects (the prepared path, theme
+    side within the broadcast threshold) gets ``defaultParallelism //
+    in_flight`` kernel tasks, coalesced from its local scan without a
+    shuffle, so the concurrent shards share the cores in one wave
+    instead of each claiming all of them. A lazy theme side and the
+    shuffle path keep their own partitioning. The share is fixed for
+    the run: once fewer shards than ``in_flight`` remain, the last ones
+    leave cores idle (with 64 shards at ``max_concurrent=4``, the final
+    1-3 shards run on a quarter of the cores each)."""
     import dataclasses
 
     from pyspark.sql import functions as F
 
-    from brdrq_spark.operators.align import AlignConfig, align
+    from brdrq_spark.operators.align import (
+        AlignConfig,
+        _fits_broadcast,
+        _prepared_path,
+        _theme_rows,
+        align,
+    )
 
     keys = [f"shard_{i:03d}" for i in range(n_partitions)]
+    todo = table.resume_filter(keys)
     config = config or AlignConfig()
-    in_flight = min(max_concurrent, len(table.resume_filter(keys)))
-    if config.kernel_partitions is None and in_flight > 1:
+    in_flight = min(max_concurrent, len(todo))
+    share = None
+    if (
+        config.kernel_partitions is None
+        and in_flight > 1
+        and _prepared_path(spark, ref_df, broadcast_ref)
+    ):
         share = max(1, spark.sparkContext.defaultParallelism // in_flight)
-        config = dataclasses.replace(config, kernel_partitions=share)
     shard_expr = (
         F.pmod(F.col(shard_col), F.lit(n_partitions))
         if shard_col
@@ -272,7 +292,10 @@ def checkpointed_align(
         shard = theme_df.filter(shard_expr == i)
         if shard_col:
             shard = shard.drop(shard_col)
-        return align(spark, shard, ref_df, config, broadcast_ref=broadcast_ref)
+        cfg = config
+        if share and _fits_broadcast(spark, _theme_rows(shard, config)):
+            cfg = dataclasses.replace(config, kernel_partitions=share)
+        return align(spark, shard, ref_df, cfg, broadcast_ref=broadcast_ref)
 
     lineage = {
         "cell_min": F.min(F.array_min("cell_ids")),
@@ -283,5 +306,5 @@ def checkpointed_align(
 
     return run_partitioned(
         spark, table, keys, make_df, lineage,
-        max_concurrent=max_concurrent,
+        max_concurrent=max_concurrent, todo=todo,
     )

@@ -626,32 +626,28 @@ def dilation_calls(image_kernel_frames):
     return seen
 
 
-def test_offset_dilation_brackets_capsule_union(dilation_calls):
-    """On the same rings, ``offset(d) ⊆ capsules(d) ⊆ offset(d / cos(pi/nseg))``
-    (the capsules reach past the offset only where a short edge's
-    nseg-gon pokes past the next vertex's sector), for the kernel's
-    envelopes and for adversarial rings at nseg 4, 8 and 32 — fed raw,
-    so collinear runs and the spike reach the offset. On the
-    adversarial rings the two agree up to snap rounding. Every dilation
-    contains its input."""
+def test_offset_dilation_matches_capsule_union(dilation_calls):
+    """The offset-ring dilation and the capsule union of the same rings
+    agree up to snap rounding (sym-diff ≤ 1e-4 m² per call; measured
+    ≤ 1.6e-5 on the kernel's envelopes): on every envelope the kernel
+    dilates at rd 2 for the seed-1 and seed-7919 images, and on
+    adversarial rings at nseg 4, 8 and 32 — fed raw, so collinear runs
+    and the spike reach the offset. Every dilation contains its input."""
     from brdrq_spark.geom.buffer import buffer_rings, fill_pockets
     from brdrq_spark.geom.simplify import simplify_rings
 
-    def bracket(rings, d, nseg):
+    def sym_diff(rings, d, nseg):
         new = _offset_dilation(rings, d, nseg)
         caps = _capsule_dilation(rings, d, nseg)
-        wider = _offset_dilation(rings, d / np.cos(np.pi / nseg), nseg)
-        assert area_of_op(new, caps, "difference") <= 1e-4
-        assert area_of_op(caps, wider, "difference") <= 1e-4
-        return area_of_op(caps, new, "difference")
+        return area_of_op(new, caps, "difference") + area_of_op(caps, new, "difference")
 
     for rings, d, nseg in dilation_calls:
-        bracket(simplify_rings(fill_pockets(rings, d), d / 20.0), d, nseg)
+        assert sym_diff(simplify_rings(fill_pockets(rings, d), d / 20.0), d, nseg) <= 1e-4
         assert area_of_op(rings, buffer_rings(rings, d, nseg), "difference") <= 1e-6
     for name, rings in _ADVERSARIAL.items():
         for nseg in (4, 8, 32):
             for d in (0.5, 2.0):
-                assert bracket(rings, d, nseg) <= 1e-4, (name, nseg, d)
+                assert sym_diff(rings, d, nseg) <= 1e-4, (name, nseg, d)
                 assert area_of_op(rings, buffer_rings(rings, d, nseg), "difference") <= 1e-6
     for nseg in (4, 8, 32):
         assert len(buffer_rings(_ADVERSARIAL["holes"], 0.5, nseg)) == 3

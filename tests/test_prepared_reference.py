@@ -292,6 +292,46 @@ def test_concurrent_shards_run_one_wave_of_kernel_tasks(spark, tmp_path, monkeyp
     assert 2 <= len(list(tasks.iterdir())) <= spark.sparkContext.defaultParallelism
 
 
+def test_concurrent_shards_share_cores_only_on_a_collected_theme_side(
+    spark, tmp_path, monkeypatch
+):
+    """The concurrent-shard share fills ``kernel_partitions`` only where
+    ``align`` collects the theme side; a lazy theme side and the shuffle
+    path keep their own kernel partitioning, and an explicit value is
+    kept everywhere."""
+    from brdrq_spark.sources.manifest import CommittedTable, checkpointed_align
+
+    th, ref = _tables(spark, n=12)
+    real = align_mod.align
+    seen = []
+
+    def spy(spark, theme_df, ref_df, config=None, broadcast_ref=None):
+        seen.append(config.kernel_partitions)
+        return real(spark, theme_df, ref_df, config, broadcast_ref=broadcast_ref)
+
+    monkeypatch.setattr(align_mod, "align", spy)
+
+    def shares(name, broadcast_ref, cfg=CFG):
+        seen.clear()
+        checkpointed_align(
+            spark, CommittedTable(str(tmp_path / name)), th, ref, cfg,
+            n_partitions=2, broadcast_ref=broadcast_ref, max_concurrent=2,
+        )
+        return seen
+
+    share = max(1, spark.sparkContext.defaultParallelism // 2)
+    assert shares("collected", True) == [share, share]
+    assert shares("shuffle", False) == [None, None]
+    assert shares("pinned", True, AlignConfig(relevant_distances=[2.0], kernel_partitions=3)) == [3, 3]
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        assert shares("lazy", True) == [None, None]
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_checkpointed_align_empty_shard_commits_zero_rows(spark, tmp_path):
     from brdrq_spark.sources.manifest import CommittedTable, checkpointed_align
 
