@@ -12,7 +12,7 @@ plugin/brdrq/brdrq_utils.py:1569-1590):
   (orientation-encoded, nonzero winding rule).
 * boolean ops (union / intersection / difference / symmetric difference)
   via a snap-rounded scanbeam trapezoidal decomposition (Vatti-style),
-* buffer / erosion / opening / closing via boundary-capsule unions,
+* buffer / erosion / opening via boundary-capsule unions,
 * metrics: area, perimeter, bbox, point-in-polygon, min distance,
 * WKB / WKT codecs.
 """
@@ -29,7 +29,7 @@ from brdrq_spark.geom.core import (
     snap_ring,
 )
 from brdrq_spark.geom.clip import boolean_op, normalize
-from brdrq_spark.geom.buffer import buffer_rings, close_rings, erode_rings, open_rings
+from brdrq_spark.geom.buffer import buffer_rings, erode_rings, open_rings
 from brdrq_spark.geom.wkb import (
     rings_from_wkb,
     rings_to_wkb,
@@ -43,7 +43,6 @@ __all__ = [
     "bbox_distance",
     "boolean_op",
     "buffer_rings",
-    "close_rings",
     "erode_rings",
     "min_distance",
     "normalize",

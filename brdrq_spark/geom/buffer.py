@@ -1,9 +1,8 @@
-"""Buffer / erosion / morphological opening+closing.
+"""Buffer / erosion / morphological opening.
 
 dilate(P, d)  = P ∪ capsules(boundary(P), d)   (traced as offset rings)
 erode(P, d)   = P \\ capsules(boundary(P), d)
 open(P, d)    = dilate(erode(P, d), d)      — drops slivers thinner than 2d
-close(P, d)   = erode(dilate(P, d), d)      — fills gaps thinner than 2d
 
 where capsules(boundary, d) is the union of one rectangle per boundary
 segment (width 2d) and one regular N-gon disk per vertex — the Minkowski
@@ -445,7 +444,3 @@ def erode_nonempty(rings: list[np.ndarray], d: float, nseg: int = 16) -> bool:
 
 def open_rings(rings: list[np.ndarray], d: float, nseg: int = 32) -> list[np.ndarray]:
     return buffer_rings(erode_rings(rings, d, nseg), d, nseg)
-
-
-def close_rings(rings: list[np.ndarray], d: float, nseg: int = 32) -> list[np.ndarray]:
-    return erode_rings(buffer_rings(rings, d, nseg), d, nseg)

@@ -1,8 +1,7 @@
 """Douglas–Peucker ring simplification.
 
 Buffer/erode stages add discretized-arc vertices; composing them (the
-morphological closing+opening used for correction_distance cleanup,
-reference brdrq_algorithm_autocorrectborders.py:193) would multiply edge
+align kernel's morphological opening and grow) would multiply edge
 counts geometrically. Simplifying at a tolerance well below the
 correction distance keeps edge counts bounded without observable
 geometric change.

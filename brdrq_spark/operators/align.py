@@ -24,9 +24,10 @@ verbatim, SNAP_SINGLE_SIDE keeps it with its edges snapped onto
 reference boundaries only where the snap moves the edge to the INNER
 side of the thematic polygon, SNAP_ALL_SIDE (the reference default,
 brdrq_settings.py:162) snaps its edges to reference boundaries within
-rd on both sides. Result cleaned by morphological closing+opening at
-correction_distance (0.01 m default,
-brdrq_algorithm_autocorrectborders.py:193).
+rd on both sides. Result cleaned by snap-rounding to a
+correction_distance / 2 grid (0.01 m default,
+brdrq_algorithm_autocorrectborders.py:193), which collapses
+sub-correction slivers and gaps.
 
 Execution shape. The kernel sees one thematic feature with its O(1)-ish
 candidate parcels at a time; the rd grid is looped *inside* the kernel
@@ -68,9 +69,13 @@ come from one of two paths:
     than cores.
 * shuffle (``broadcast_ref=False``, or a reference too large to
   broadcast): both layers are cell-exploded and equi-joined on cell
-  (salting and hot-cell splitting apply here), a bare row per theme is
-  unioned in, and the rows are repartitioned 4x by theme_id and streamed
-  through the kernel (``align_candidate_rows``).
+  (``AlignConfig.salt`` salts the join keys here), a bare row per theme
+  is unioned in, and the rows are repartitioned 4x by theme_id and
+  streamed through the kernel (``align_candidate_rows``, the same
+  ``candidates.cell_join_rows`` plan every operator's shuffle path
+  runs). Hot-cell splitting is not applied here: only a direct
+  ``cell_join_rows`` / ``candidate_groups`` call with
+  ``hot_cell_threshold`` reaches ``split_hot_cells``.
 
 Both paths feed the kernel the same candidate set, so they emit
 identical rows.
@@ -97,11 +102,18 @@ from brdrq_spark.geom import (
     rings_perimeter,
     rings_to_wkb,
 )
-from brdrq_spark.geom.buffer import close_rings, erode_nonempty, open_rings
+from brdrq_spark.geom.buffer import erode_nonempty, open_rings
 from brdrq_spark.geom.wkb import polygon_bboxes_batch, rings_from_wkb_hybrid
 from brdrq_spark.geom.coarse import snap_normalize
 from brdrq_spark.geom.clip import area_of_op
 from brdrq_spark.grid import cell_cover_bbox, pick_resolution
+from brdrq_spark.operators.candidates import (
+    _fits_broadcast,
+    _prepared_path,
+    cell_join_rows,
+    plan_partitions,
+    stream_kernel,
+)
 
 _TINY = 1e-6  # m²; below = empty for relevance purposes
 
@@ -139,14 +151,9 @@ class AlignConfig:
     relevant_distances: list[float] = field(default_factory=lambda: [2.0])
     od_strategy: str = OD_SNAP_ALL_SIDE  # reference default, brdrq_settings.py:162
     threshold_overlap_percentage: float = 50.0
+    # the result snap-rounds to a correction_distance/2 grid
     correction_distance: float = 0.01
-    # "snap": snap-round the result to a correction_distance/2 grid —
-    #   collapses sub-correction slivers/gaps in one cheap pass;
-    # "morph": literal brdr-style closing+opening by correction_distance
-    #   (4 capsule boolean passes; ~20x slower, near-identical output).
-    correction_mode: str = "snap"
     max_candidates_per_theme: int = 2000  # admission control (O5 analogue)
-    cell_res: int | None = None  # tile-assignment resolution; None = auto
     nseg: int = 8  # arc segments for erosion tests (speed/precision knob)
     # kernel-stage partition count; None = 4x defaultParallelism on the
     # shuffle path; on the prepared path, min(n, defaultParallelism)
@@ -459,14 +466,7 @@ def _finalize(parts, theme_rings, ref_ring_sets, od_part, rd: float, cfg: AlignC
 
     result = boolean_op(kept, [], "union")
     if cfg.correction_distance > 0 and result:
-        if cfg.correction_mode == "snap":
-            result = snap_normalize(result, cfg.correction_distance / 2.0)
-        else:
-            result = open_rings(
-                close_rings(result, cfg.correction_distance, 4),
-                cfg.correction_distance,
-                4,
-            )
+        result = snap_normalize(result, cfg.correction_distance / 2.0)
     return {
         "result": result,
         "relevant_intersection": boolean_op(parts["rel_inter"], [], "union"),
@@ -475,43 +475,15 @@ def _finalize(parts, theme_rings, ref_ring_sets, od_part, rd: float, cfg: AlignC
     }
 
 
-def _make_stream_kernel(cfg: AlignConfig, res: int):
-    """Partition-streaming wrapper: one Arrow stream per partition
-    (mapInPandas) instead of one round-trip per theme group
-    (applyInPandas). Rows arrive repartitioned and sorted by theme_id;
-    a theme split across adjacent Arrow batches is buffered until its
-    last row is seen. Cuts JVM<->Python chatter ~group_count times."""
-    kernel = _make_kernel(cfg, res)
-
-    def stream(batches):
-        buf = None
-        for pdf in batches:
-            if buf is not None and len(buf):
-                pdf = pd.concat([buf, pdf], ignore_index=True)
-            if not len(pdf):
-                buf = None
-                continue
-            last_tid = pdf["theme_id"].iloc[-1]
-            complete = pdf[pdf["theme_id"] != last_tid]
-            buf = pdf[pdf["theme_id"] == last_tid]
-            for _, g in complete.groupby("theme_id", sort=False):
-                yield kernel(g)
-        if buf is not None and len(buf):
-            yield kernel(buf)
-
-    return stream
-
-
-def _make_probe_kernel(cfg: AlignConfig, res: int, ref_bc, with_step: bool):
+def _make_probe_kernel(cfg: AlignConfig, res: int, ref_bc):
     """Prepared-reference kernel: each partition of theme rows
     (theme_id, geom_wkb[, theme_step]) probes the broadcast index for
-    its candidates (``prepared.probe``: cover at 2·max_rd·1.01, bbox
-    distance <= 2·max_rd, as the cell-join plan) and hands every theme's
-    rows to the same ``_make_kernel`` the shuffle path uses. A theme
-    without candidates gets one row with a NULL ref_wkb, as the bare
-    row gives it on the shuffle path."""
-    from brdrq_spark.operators.candidates import wkb_bboxes
-    from brdrq_spark.operators.prepared import probe
+    its candidates (``prepared.probe_groups``: cover at 2·max_rd·1.01,
+    bbox distance <= 2·max_rd, as the cell-join plan) and hands every
+    theme's rows to the same ``_make_kernel`` the shuffle path uses. A
+    theme without candidates gets one row with a NULL ref_wkb, as the
+    bare row gives it on the shuffle path."""
+    from brdrq_spark.operators.prepared import probe_groups
 
     kernel = _make_kernel(cfg, res)
     max_rd = max(cfg.relevant_distances)
@@ -519,28 +491,11 @@ def _make_probe_kernel(cfg: AlignConfig, res: int, ref_bc, with_step: bool):
     def stream(batches):
         ref = ref_bc.value
         for pdf in batches:
-            wkbs = pdf["geom_wkb"].tolist()
-            bb, has = wkb_bboxes(wkbs)
-            rows = np.nonzero(has)[0]
-            t, r = probe(ref, bb[has], res, 2.0 * max_rd * 1.01, 2.0 * max_rd)
-            bounds = np.searchsorted(rows[t], np.arange(len(pdf) + 1))
-            for i, tid in enumerate(pdf["theme_id"].tolist()):
-                cand = r[bounds[i]:bounds[i + 1]].tolist() or [None]
-                n = len(cand)
-                data = {
-                    "theme_id": [tid] * n,
-                    "theme_wkb": [wkbs[i]] * n,
-                    "ref_wkb": [None if j is None else ref["wkb"][j] for j in cand],
-                }
-                if cfg.emit_metadata:
-                    vers = ref["versions"]
-                    data["ref_id"] = [None if j is None else ref["ids"][j] for j in cand]
-                    data["ref_version"] = [
-                        None if j is None else vers[j] for j in cand
-                    ]
-                if with_step:
-                    data["theme_step"] = [pdf["theme_step"].iloc[i]] * n
-                yield kernel(pd.DataFrame(data))
+            for g in probe_groups(
+                pdf, ref, res, 2.0 * max_rd * 1.01, 2.0 * max_rd,
+                ids=cfg.emit_metadata,
+            ):
+                yield kernel(g)
 
     return stream
 
@@ -554,7 +509,7 @@ def _make_kernel(cfg: AlignConfig, res: int):
         _tw = pdf["theme_wkb"].dropna()
         theme_rings = rings_from_wkb(_tw.iloc[0]) if len(_tw) else []
         remark = ""
-        # per-theme sweep grid: the bare row may carry a step override
+        # per-theme sweep grid: the theme rows may carry a step override
         # (AlignConfig.step_col); the grid's max is shared — candidate
         # dilation was sized from max(relevant_distances) for everyone
         rds = cfg.relevant_distances
@@ -790,11 +745,7 @@ def _make_kernel(cfg: AlignConfig, res: int):
 
 
 def _cell_res(cfg: AlignConfig) -> int:
-    return (
-        cfg.cell_res
-        if cfg.cell_res is not None
-        else pick_resolution(max(cfg.relevant_distances))
-    )
+    return pick_resolution(max(cfg.relevant_distances))
 
 
 def prepare_reference(
@@ -809,26 +760,6 @@ def prepare_reference(
     cfg = config or AlignConfig()
     version_col = cfg.ref_version_col if cfg.emit_metadata else None
     return PreparedReference.of(spark, ref_df, _cell_res(cfg), version_col)
-
-
-def _fits_broadcast(spark: SparkSession, df: DataFrame) -> bool:
-    """Catalyst's own auto-broadcast rule: the plan-time size estimate
-    of ``df`` is within ``spark.sql.autoBroadcastJoinThreshold`` (-1
-    disables it)."""
-    from brdrq_spark.operators.candidates import plan_size_bytes
-
-    size = plan_size_bytes(df)
-    if size is None:
-        return False
-    return 0 <= size <= spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-
-
-def _prepared_path(spark: SparkSession, ref_df: DataFrame, broadcast_ref: bool | None) -> bool:
-    """``align``'s choice between the prepared and the shuffle path."""
-    return bool(broadcast_ref) or (
-        broadcast_ref is None
-        and _fits_broadcast(spark, ref_df.select("ref_id", "geom_wkb"))
-    )
 
 
 def _theme_rows(theme_df: DataFrame, cfg: AlignConfig) -> DataFrame:
@@ -864,136 +795,28 @@ def align_candidate_rows(
     cfg: AlignConfig,
     broadcast_ref: bool | None = None,
 ):
-    """Pre-kernel half of ``align``'s shuffle path: the fused candidate
-    plan, returned as (grouped_rows, res). Exposed separately so
-    benchmarks can time the relational stage apart from the geometry
-    kernel; ``broadcast_ref=True`` here only hints a broadcast join (the
-    prepared path of ``align`` does not run this plan)."""
-    max_rd = max(cfg.relevant_distances)
+    """Pre-kernel half of ``align``'s shuffle path: the cell-join
+    candidate plan (``candidates.cell_join_rows``), returned as
+    (grouped_rows, res). Exposed separately so benchmarks can time the
+    relational stage apart from the geometry kernel;
+    ``broadcast_ref=True`` here only hints a broadcast join (the
+    prepared path of ``align`` does not run this plan).
+
+    Both WKBs ride through the cell explode, so the whole job is ONE
+    broadcast (or cell-shuffle) join plus ONE repartition by theme_id —
+    no distinct, no join-back shuffles; duplicate (theme, ref) rows from
+    shared cells are deduped inside the kernel. Oversized themes ship
+    their WKB on the bare row only (``max_inline_wkb_bytes``). ref_id /
+    ref_version ride only for lineage emission (``emit_metadata``)."""
     res = _cell_res(cfg)
-    dilate = 2.0 * max_rd * 1.01
-
-    # Fused candidate plan: both WKBs ride through the cell explode, so
-    # the whole job is ONE broadcast (or cell-shuffle) join plus ONE
-    # repartition by theme_id — no distinct, no join-back shuffles.
-    # Duplicate (theme, ref) pairs from shared cells are deduped inside
-    # the kernel (cheap python set) instead of a full shuffle stage.
-    # decode + cover + explode happen inside ONE Arrow pass per side
-    # (cells_exploded) — no generator node, the UDF runs once per row.
-    from brdrq_spark.operators.candidates import cells_exploded, plan_partitions
-
-    par = spark.sparkContext.defaultParallelism
-    if plan_partitions(theme_df) < par:
-        theme_df = theme_df.repartition(par)
-    if plan_partitions(ref_df) < par:
-        ref_df = ref_df.repartition(par)
-
-    # hybrid WKB shipping: small features' WKB rides the cell explode
-    # (zero extra shuffle); oversized ones ship NULL and re-join their
-    # WKB by theme_id below — duplication stays bounded by the budget
-    t_cells = cells_exploded(
-        theme_df,
-        "theme_id",
-        res,
-        dilate,
-        "t",
-        wkb_out="theme_wkb",
+    max_rd = max(cfg.relevant_distances)
+    grouped = cell_join_rows(
+        spark, _theme_rows(theme_df, cfg), ref_df, "theme_id", res,
+        2.0 * max_rd * 1.01, 2.0 * max_rd,
+        version_col=cfg.ref_version_col if cfg.emit_metadata else None,
         inline_budget=int(cfg.max_inline_wkb_bytes),
-        outer=True,
-    )
-    # ref_id / ref_version are consumed by the kernel ONLY for SOSA
-    # lineage emission (cfg.emit_metadata); without it they would ride
-    # every exploded cell row AND the kernel repartition for nothing —
-    # project them out of the plan entirely (guide: shuffle fewer
-    # bytes), and the kernel's has_ids branch dedups by WKB bytes with
-    # the identical first-occurrence order either way.
-    if cfg.emit_metadata:
-        ref_ver = (
-            F.col(cfg.ref_version_col).cast("string")
-            if cfg.ref_version_col in ref_df.columns
-            else F.lit(None).cast("string")
-        ).alias("ref_version")
-        r_cells = cells_exploded(
-            ref_df.select("ref_id", "geom_wkb", ref_ver),
-            "ref_id",
-            res,
-            0.0,
-            "r",
-            wkb_out="ref_wkb",
-            extra_cols=["ref_version"],
-        )
-    else:
-        r_cells = cells_exploded(
-            ref_df.select("ref_id", "geom_wkb"),
-            "ref_id",
-            res,
-            0.0,
-            "r",
-            wkb_out="ref_wkb",
-        )
-    join_keys = ["cell"]
-    if cfg.salt > 0 and not broadcast_ref:
-        t_cells = t_cells.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col("theme_id")), F.lit(cfg.salt)).cast("int")
-        )
-        r_cells = r_cells.withColumn(
-            "_salt", F.explode(F.sequence(F.lit(0), F.lit(cfg.salt - 1)))
-        ).withColumn("_salt", F.col("_salt").cast("int"))
-        join_keys = ["cell", "_salt"]
-    if broadcast_ref:
-        r_cells = F.broadcast(r_cells)
-
-    dx = F.greatest(
-        F.col("t_minx") - F.col("r_maxx"), F.col("r_minx") - F.col("t_maxx"), F.lit(0.0)
-    )
-    dy = F.greatest(
-        F.col("t_miny") - F.col("r_maxy"), F.col("r_miny") - F.col("t_maxy"), F.lit(0.0)
-    )
-    cand = t_cells.join(r_cells, join_keys).where(
-        F.sqrt(dx * dx + dy * dy) <= F.lit(2.0 * max_rd)
-    )
-    # every theme emits a result row even with zero candidates (remark
-    # no_reference_candidates): union one bare row per theme — a no-op
-    # for matched themes (kernel drops null refs and dedupes). The bare
-    # row ALWAYS carries the theme WKB, so oversized features (hybrid
-    # shipping sent NULL through the cell explode) need no re-join: the
-    # kernel reads the group's first non-null WKB. One union branch,
-    # each MapInPandas pass evaluates exactly once.
-    # the per-theme sweep step (step_col) rides ONLY the bare row — it
-    # is per-theme, and the bare row is the one row guaranteed present
-    # for every theme; candidate rows carry NULL so the join width does
-    # not grow.
-    step_expr = (
-        F.col(cfg.step_col).cast("double")
-        if cfg.step_col is not None and cfg.step_col in theme_df.columns
-        else F.lit(None).cast("double")
-    ).alias("theme_step")
-    id_cols = (
-        [F.col("ref_id"), F.col("ref_version")] if cfg.emit_metadata else []
-    )
-    bare_id_cols = (
-        [
-            F.lit(None).cast("string").alias("ref_id"),
-            F.lit(None).cast("string").alias("ref_version"),
-        ]
-        if cfg.emit_metadata
-        else []
-    )
-    cand = cand.select(
-        "theme_id",
-        "theme_wkb",
-        "ref_wkb",
-        *id_cols,
-        F.lit(None).cast("double").alias("theme_step"),
-    )
-    grouped = cand.unionByName(
-        theme_df.select(
-            "theme_id",
-            F.col("geom_wkb").alias("theme_wkb"),
-            F.lit(None).cast("binary").alias("ref_wkb"),
-            *bare_id_cols,
-            step_expr,
-        )
+        salt=cfg.salt,
+        broadcast_ref=broadcast_ref,
     )
     return grouped, res
 
@@ -1027,15 +850,13 @@ def align(
     # CRS guard: one defined meter CRS for both layers (reference
     # brdrq_utils.py:1498-1502, 1551-1555)
     from brdrq_spark.functions.crs import require_same_crs
-    from brdrq_spark.operators.candidates import plan_partitions
 
     require_same_crs(cfg.crs, cfg.ref_crs if cfg.ref_crs is not None else cfg.crs)
     par = spark.sparkContext.defaultParallelism
     if _prepared_path(spark, ref_df, broadcast_ref):
         prepared = prepare_reference(spark, ref_df, cfg)
         themes = _theme_rows(theme_df, cfg)
-        with_step = "theme_step" in themes.columns
-        kernel = _make_probe_kernel(cfg, _cell_res(cfg), prepared.broadcast, with_step)
+        kernel = _make_probe_kernel(cfg, _cell_res(cfg), prepared.broadcast)
         if _fits_broadcast(spark, themes):
             # a small theme side is read once, now, in one job
             collected = themes.toPandas()
@@ -1078,11 +899,7 @@ def align(
         return themes.mapInPandas(kernel, schema=ALIGN_SCHEMA)
 
     grouped, res = align_candidate_rows(spark, theme_df, ref_df, cfg, broadcast_ref)
-
-    # partition-streaming kernel: co-locate each theme's candidate rows,
-    # sort so groups are contiguous, then stream whole partitions through
-    # one pandas iterator (see _make_stream_kernel). 4x parallelism:
-    # theme cost varies, smaller partitions keep the stage tail short.
-    n_part = cfg.kernel_partitions or par * 4
-    parts = grouped.repartition(n_part, "theme_id").sortWithinPartitions("theme_id")
-    return parts.mapInPandas(_make_stream_kernel(cfg, res), schema=ALIGN_SCHEMA)
+    return stream_kernel(
+        grouped, "theme_id", _make_kernel(cfg, res), ALIGN_SCHEMA,
+        cfg.kernel_partitions or par * 4,
+    )

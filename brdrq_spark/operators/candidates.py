@@ -4,31 +4,42 @@ Re-expresses the reference's three candidate mechanisms (SURVEY.md §2.3
 J1-J3: buffered-extent semi-join brdrq_utils.py:1569-1590 +
 brdrq_algorithm_autocorrectborders.py:782-800; bbox+distance refine
 brdrq_dockwidget_featurealigner.py:1653-1667; within-distance preselect
-brdrq_dockwidget_bulkaligner.py:211-227) as ONE relational plan:
+brdrq_dockwidget_bulkaligner.py:211-227) as ONE rule: a theme's cover
+at a dilation, matched cell for cell against the reference's cover,
+then a bbox-distance refine (``reach``; infinite keeps every cell-mate).
 
-    theme cells (dilated cover)  ⋈cell  reference cells
-    → distinct (theme_id, ref_id) pairs
-    → bbox-distance refine (pure column arithmetic, no UDF)
+Every operator gets its candidates through ``candidate_groups``, which
+hands each theme's candidate rows to the operator's own kernel along
+one of two paths:
 
-Catalyst then picks broadcast vs shuffle hash join; we force broadcast
-when the reference side is known-small. At cluster scale both sides are
-huge: the equi-join on int64 cell ids shuffles hash-partitioned by cell,
-and AQE's skew-join splitting handles hot cells (dense urban areas —
-reference qa.qmd:19-40); `salt` adds explicit key salting on top when a
-single cell key dominates.
+* prepared (``broadcast_ref=True``, or None with a reference within
+  ``spark.sql.autoBroadcastJoinThreshold``): the theme rows probe the
+  shared ``PreparedReference`` index (``prepared.probe_groups``); no
+  explode, join or repartition;
+* cell join (otherwise): both layers are cell-exploded
+  (``cells_exploded``) and equi-joined on cell (``cell_join_rows``),
+  then repartitioned by key and streamed through the kernel
+  (``stream_groups``). At cluster scale the equi-join on int64 cell ids
+  shuffles hash-partitioned by cell; AQE's skew-join splitting handles
+  hot cells (dense urban areas — reference qa.qmd:19-40), ``salt`` adds
+  explicit key salting on top, and ``hot_cell_threshold`` re-indexes
+  dense cells at a finer resolution (``split_hot_cells``).
+
+Both paths apply the same cover and distance arithmetic, so they hand
+the kernel the same candidate set.
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from brdrq_spark.functions.geo import geo_features_udf
 from brdrq_spark.geom import bbox, rings_from_wkb
 from brdrq_spark.geom.wkb import polygon_bboxes_batch
-from brdrq_spark.grid import cell_id, cover_ranges, pick_resolution
+from brdrq_spark.grid import cell_id, cover_ranges
 
 
 def plan_partitions(df: DataFrame) -> int:
@@ -98,6 +109,7 @@ def cells_exploded(
     inline_budget: int | None = None,
     outer: bool = False,
     extra_cols: list[str] | None = None,
+    bboxes=None,
 ) -> DataFrame:
     """decode → bbox → cell cover → EXPLODE, all inside ONE Arrow pass.
 
@@ -113,6 +125,9 @@ def cells_exploded(
     (caller re-joins it by id); None ships the WKB on every row.
     ``outer``: emit one NULL-cell row for empty geometries (explode_outer
     semantics) so every input id survives.
+    ``bboxes``: ``pdf -> (bb (n, 4), has (n,))`` for inputs that are not
+    polygon WKB in ``geom_wkb`` (lines, edge endpoint columns); None
+    decodes ``geom_wkb`` with ``wkb_bboxes``.
 
     The per-batch work is two-phase: the WKB decode walks rows (header
     structure is inherently per-geometry; the bbox comes from the same
@@ -146,11 +161,12 @@ def cells_exploded(
         for pdf in batches:
             # phase 1 — vectorized batch decode (wkb_bboxes: one numpy
             # offset walk, ~25x the per-row header walk); empty -> outer
-            wkb_list = pdf["geom_wkb"].tolist()
-            bb, has = wkb_bboxes(wkb_list)
+            wkb_list = pdf["geom_wkb"].tolist() if "geom_wkb" in pdf else []
+            bb, has = bboxes(pdf) if bboxes else wkb_bboxes(wkb_list)
             ids_all = pdf[id_col].to_numpy(dtype=object)
             wkb_all = np.empty(len(pdf), dtype=object)
-            wkb_all[:] = wkb_list
+            if wkb_out:
+                wkb_all[:] = wkb_list
             ex_all = {c: pdf[c].to_numpy(dtype=object) for c in extra_cols}
 
             # outer rows are built with EXPLICIT object dtype: concat of a
@@ -209,8 +225,8 @@ def cells_exploded(
                 body = pd.concat([body, _outer_pdf()], ignore_index=True)
             yield body
 
-    cols = [id_col, "geom_wkb", *extra_cols]
-    return df.select(*cols).mapInPandas(gen, schema=schema)
+    geom = ["geom_wkb"] if "geom_wkb" in df.columns and "geom_wkb" not in extra_cols else []
+    return df.select(id_col, *geom, *extra_cols).mapInPandas(gen, schema=schema)
 
 
 def with_geo_features(
@@ -279,8 +295,8 @@ def split_hot_cells(
     entirely inside the DAG: the stats aggregate rides the counts
     shuffle as a one-row broadcast, no driver-side probe action runs.
 
-    Inputs are the exploded cell tables built by candidate_pairs /
-    align_candidate_rows with bbox columns prefixed t_/r_.
+    Inputs are the exploded cell tables of ``cell_join_rows``, with
+    bbox columns prefixed t_/r_.
     """
     cnts = r.groupBy("cell").agg(F.count(F.lit(1)).alias("_n"))
     if threshold == "auto":
@@ -320,61 +336,118 @@ def split_hot_cells(
     return expand(t, "t_", dilate), expand(r, "r_", 0.0)
 
 
-def candidate_pairs(
-    theme_df: DataFrame,
+def _fits_broadcast(spark: SparkSession, df: DataFrame) -> bool:
+    """Catalyst's own auto-broadcast rule: the plan-time size estimate
+    of ``df`` is within ``spark.sql.autoBroadcastJoinThreshold`` (-1
+    disables it)."""
+    size = plan_size_bytes(df)
+    if size is None:
+        return False
+    return 0 <= size <= spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+
+
+def _prepared_path(spark: SparkSession, ref_df: DataFrame, broadcast_ref: bool | None) -> bool:
+    """The choice between the prepared and the cell-join path: True
+    probes, False joins, None probes when the reference fits
+    ``_fits_broadcast``."""
+    return bool(broadcast_ref) or (
+        broadcast_ref is None
+        and _fits_broadcast(spark, ref_df.select("ref_id", "geom_wkb"))
+    )
+
+
+def stream_groups(batches, key: str):
+    """Per-``key`` frames of a stream of pandas batches whose rows are
+    sorted by ``key`` (one Arrow stream per partition instead of one
+    round-trip per group); a group split across adjacent batches is
+    buffered until its last row is seen."""
+    import pandas as pd
+
+    buf = None
+    for pdf in batches:
+        if buf is not None and len(buf):
+            pdf = pd.concat([buf, pdf], ignore_index=True)
+        if not len(pdf):
+            buf = None
+            continue
+        last = pdf[key].iloc[-1]
+        done = pdf[pdf[key] != last]
+        buf = pdf[pdf[key] == last]
+        for _, g in done.groupby(key, sort=False):
+            yield g
+    if buf is not None and len(buf):
+        yield buf
+
+
+def cell_join_rows(
+    spark: SparkSession,
+    themes: DataFrame,
     ref_df: DataFrame,
-    max_rd: float,
-    res: int | None = None,
-    broadcast_ref: bool | None = None,
-    theme_id: str = "theme_id",
-    ref_id: str = "ref_id",
+    key: str,
+    res: int,
+    dilate: float,
+    reach: float,
+    bboxes=None,
+    outer: bool = True,
+    ids: bool = False,
+    version_col: str | None = None,
+    inline_budget: int | None = None,
     salt: int = 0,
     hot_cell_threshold: int | str | None = None,
-    hot_split: int = 2,
+    broadcast_ref: bool | None = None,
 ) -> DataFrame:
-    """Distinct (theme_id, ref_id) pairs within 2*max_rd of each other.
-    ``hot_cell_threshold`` accepts an int cutoff or ``"auto"``
-    (median-anchored self-tuning — see ``split_hot_cells``).
+    """The cell-join candidate plan: one row per (theme row, reference
+    cell-mate within ``reach``) with the theme's columns (``geom_wkb``
+    as ``theme_wkb``) and ``ref_wkb`` (plus ``ref_id`` when ``ids``, and
+    ``ref_version`` from ``version_col`` when given). A pair sharing
+    several cells repeats; kernels dedupe.
 
-    The dilation radius 2*max_rd is the superset of all three reference
-    mechanisms (J2/J3 use exactly 2 x max_rd). Returns the pair table
-    only — callers join geometries back by key (cheap: co-partitioned on
-    the same keys).
-
-    ``salt`` > 0 enables explicit hot-cell salting for the shuffle-join
-    path (reference O6: dense urban parcels produce hot cells,
-    docs/qa.qmd:19-40): the theme side's join key becomes
-    (cell, hash(theme_id) % salt) and the reference side replicates each
-    cell row ``salt`` times, so one dense cell spreads over ``salt``
-    shuffle partitions. Use when one cell dominates and AQE's skew
-    splitting (enabled by default) is not enough; pointless (and
-    ignored) with broadcast_ref.
-    """
-    if res is None:
-        res = pick_resolution(max_rd)
-    dilate = 2.0 * max_rd * 1.01
-
-    # the decode+cover UDF is the per-row cost here: make sure neither
+    ``outer`` unions one bare row per theme (NULL reference columns), so
+    a theme without candidates still reaches its kernel; it always
+    carries the theme WKB, which ``inline_budget`` (hybrid shipping,
+    see ``cells_exploded``) may NULL on the exploded rows of oversized
+    features. ``salt`` > 0 keys the theme side by (cell, hash(key) %
+    salt) and replicates the reference rows ``salt`` ways, so one dense
+    cell spreads over ``salt`` shuffle partitions; ``hot_cell_threshold``
+    (an int cutoff or ``"auto"``) re-indexes dense cells at a finer
+    resolution (``split_hot_cells``). Both are ignored with
+    ``broadcast_ref=True``, which hints a broadcast join."""
+    # the decode+cover pass is the per-row cost here: make sure neither
     # side arrives as a handful of parquet-file partitions and serializes
     # the pass (a single 4k-parcel file would otherwise run on one core)
-    par = theme_df.sparkSession.sparkContext.defaultParallelism
-    if plan_partitions(theme_df) < par:
-        theme_df = theme_df.repartition(par)
+    par = spark.sparkContext.defaultParallelism
+    if plan_partitions(themes) < par:
+        themes = themes.repartition(par)
     if plan_partitions(ref_df) < par:
         ref_df = ref_df.repartition(par)
-
+    has_wkb = "geom_wkb" in themes.columns
+    carry = [c for c in themes.columns if c not in (key, "geom_wkb")]
     t = cells_exploded(
-        theme_df.select(theme_id, "geom_wkb"), theme_id, res, dilate, "t"
+        themes, key, res, dilate, "t",
+        wkb_out="theme_wkb" if has_wkb else None,
+        inline_budget=inline_budget, extra_cols=carry, bboxes=bboxes,
     )
-    r = cells_exploded(ref_df.select(ref_id, "geom_wkb"), ref_id, res, 0.0, "r")
-    if hot_cell_threshold is not None and not broadcast_ref:
-        t, r = split_hot_cells(
-            t, r, res, dilate, hot_cell_threshold, hot_split
+    ref_cols = [F.col("ref_id"), F.col("geom_wkb")]
+    ref_extra = []
+    if version_col is not None:
+        ref_cols.append(
+            (
+                F.col(version_col).cast("string")
+                if version_col in ref_df.columns
+                else F.lit(None).cast("string")
+            ).alias("ref_version")
         )
+        ref_extra = ["ref_version"]
+    r = cells_exploded(
+        ref_df.select(*ref_cols), "ref_id", res, 0.0, "r",
+        wkb_out="ref_wkb", extra_cols=ref_extra,
+    )
+    if hot_cell_threshold is not None and not broadcast_ref:
+        t, r = split_hot_cells(t, r, res, dilate, hot_cell_threshold)
     join_keys = ["cell"]
     if salt > 0 and not broadcast_ref:
         t = t.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col(theme_id)), F.lit(salt)).cast("int")
+            "_salt", F.pmod(F.xxhash64(F.col(key)), F.lit(salt)).cast("int")
         )
         r = r.withColumn(
             "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
@@ -382,19 +455,99 @@ def candidate_pairs(
         join_keys = ["cell", "_salt"]
     if broadcast_ref:
         r = F.broadcast(r)
+    cand = t.join(r, join_keys)
+    if np.isfinite(reach):
+        # bbox distance <= reach as pure column arithmetic — the exact
+        # geometry test happens inside the operator's kernel
+        dx = F.greatest(
+            F.col("t_minx") - F.col("r_maxx"), F.col("r_minx") - F.col("t_maxx"), F.lit(0.0)
+        )
+        dy = F.greatest(
+            F.col("t_miny") - F.col("r_maxy"), F.col("r_miny") - F.col("t_maxy"), F.lit(0.0)
+        )
+        cand = cand.where(F.sqrt(dx * dx + dy * dy) <= F.lit(reach))
+    theme_out = [key, *(["theme_wkb"] if has_wkb else []), *carry]
+    ref_out = ["ref_wkb", *(["ref_id"] if ids or ref_extra else []), *ref_extra]
+    cand = cand.select(*theme_out, *ref_out)
+    if not outer:
+        return cand
+    types = dict(cand.dtypes)
+    return cand.unionByName(
+        themes.select(
+            key,
+            *([F.col("geom_wkb").alias("theme_wkb")] if has_wkb else []),
+            *carry,
+            *(F.lit(None).cast(types[c]).alias(c) for c in ref_out),
+        )
+    )
 
-    # bbox distance <= 2*max_rd as pure column arithmetic — the exact
-    # geometry test happens inside the alignment kernel itself.
-    dx = F.greatest(
-        F.col("t_minx") - F.col("r_maxx"), F.col("r_minx") - F.col("t_maxx"), F.lit(0.0)
+
+def candidate_groups(
+    spark: SparkSession,
+    themes: DataFrame,
+    ref_df: DataFrame,
+    kernel,
+    schema,
+    res: int,
+    dilate: float,
+    reach: float,
+    key: str = "theme_id",
+    bboxes=None,
+    outer: bool = True,
+    ids: bool = False,
+    broadcast_ref: bool | None = None,
+    inline_budget: int | None = None,
+    salt: int = 0,
+    hot_cell_threshold: int | str | None = None,
+) -> DataFrame:
+    """``kernel`` applied to every theme's candidate frame: the theme
+    row's columns (``geom_wkb`` as ``theme_wkb``) repeated once per
+    candidate, with ``ref_wkb`` (and ``ref_id`` when ``ids``). The
+    candidates are the reference rows sharing a cell with the theme's
+    bbox cover at ``dilate`` (cells of resolution ``res``) whose bbox
+    lies within ``reach`` of the theme's; ``bboxes`` computes the theme
+    bboxes from a pandas batch (``cells_exploded``). A theme without
+    candidates gets one row with NULL reference columns when ``outer``,
+    and no kernel call otherwise.
+
+    Where ``_prepared_path`` says so, the theme rows probe the shared
+    ``PreparedReference`` index; otherwise ``cell_join_rows`` builds the
+    rows (``inline_budget``, ``salt`` and ``hot_cell_threshold`` apply
+    there), which are repartitioned by ``key`` and streamed through the
+    kernel. Both paths hand the kernel the same candidate set; the
+    probe lists it in the index's reference order."""
+    par = spark.sparkContext.defaultParallelism
+    if _prepared_path(spark, ref_df, broadcast_ref):
+        from brdrq_spark.operators.prepared import PreparedReference, probe_groups
+
+        index = PreparedReference.of(spark, ref_df, res).broadcast
+
+        def probe_stream(batches):
+            ref = index.value
+            for pdf in batches:
+                for g in probe_groups(pdf, ref, res, dilate, reach, bboxes, outer, ids):
+                    yield kernel(g)
+
+        if plan_partitions(themes) < par:
+            themes = themes.repartition(par)
+        return themes.mapInPandas(probe_stream, schema=schema)
+    rows = cell_join_rows(
+        spark, themes, ref_df, key, res, dilate, reach, bboxes=bboxes,
+        outer=outer, ids=ids, inline_budget=inline_budget, salt=salt,
+        hot_cell_threshold=hot_cell_threshold,
     )
-    dy = F.greatest(
-        F.col("t_miny") - F.col("r_maxy"), F.col("r_miny") - F.col("t_maxy"), F.lit(0.0)
-    )
-    pairs = (
-        t.join(r, join_keys)
-        .where(F.sqrt(dx * dx + dy * dy) <= F.lit(2.0 * max_rd))
-        .select(theme_id, ref_id)
-        .distinct()
-    )
-    return pairs
+    return stream_kernel(rows, key, kernel, schema, par * 4)
+
+
+def stream_kernel(rows: DataFrame, key: str, kernel, schema, n_part: int) -> DataFrame:
+    """``kernel`` over every ``key`` group of ``rows``: co-locate each
+    group (``n_part`` hash partitions; theme cost varies, so smaller
+    partitions keep the stage tail short), sort so groups are
+    contiguous, and stream whole partitions (``stream_groups``)."""
+
+    def stream(batches):
+        for g in stream_groups(batches, key):
+            yield kernel(g)
+
+    parts = rows.repartition(n_part, key).sortWithinPartitions(key)
+    return parts.mapInPandas(stream, schema=schema)

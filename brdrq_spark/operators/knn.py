@@ -2,44 +2,43 @@
 "point-in-polygon and kNN-nearest-boundary-segment refinement").
 
 For every vertex of a thematic footprint, find the k nearest reference
-boundary segments. Execution shape: the cell-join candidate pairs bound
-the search (a vertex's nearest segments lie on candidate parcels within
-the dilated cover by construction), then a grouped pandas kernel does
-the exact vectorized point-segment distances — a per-partition index
-without any cross-partition traffic. Vertices with no candidate segment
-within the radius are ABSENT from the output (no rank-0 placeholder
-rows); ``knn_with_escalation`` wraps the search in the expanding-ring
-retry (SURVEY §2.3 J6: "search ring r, r+1…"): it anti-joins the
-output against the vertex set and re-runs only the uncovered vertices'
-themes at a widened radius (r, growth·r, growth²·r … capped), so
-sparse-area vertices (rural parcels, map edges — the reference's
-bbox-then-refine escalation always returns a candidate set,
+boundary segments. Execution shape: the theme's candidates come from
+``candidates.candidate_groups``, the path every operator shares — the
+prepared reference index when the reference fits the broadcast
+threshold, the cell-join plan otherwise — with the theme bbox covered
+at ``search_radius`` and reference bboxes kept within it (a vertex's
+nearest segments within the radius lie on those parcels by
+construction). A per-theme kernel then does the exact vectorized
+point-segment distances. Vertices with no candidate segment within the
+radius are ABSENT from the output (no rank-0 placeholder rows);
+``knn_with_escalation`` wraps the search in the expanding-ring retry
+(SURVEY §2.3 J6: "search ring r, r+1…"): it anti-joins the output
+against the vertex set and re-runs only the uncovered vertices' themes
+at a widened radius (r, growth·r, growth²·r … capped), so sparse-area
+vertices (rural parcels, map edges — the reference's bbox-then-refine
+escalation always returns a candidate set,
 plugin/brdrq/brdrq_dockwidget_featurealigner.py:1653-1667) are found
 without hand-written retry loops.
 
-Skew ceiling removed (round-4): grouping by theme_id alone lets one
-giant theme in a dense area gather ALL its candidate segments into a
-single task. Candidates are therefore hash-partitioned into sub-groups
-of <= ``max_refs_per_group`` reference parcels per (theme, group); the
-kernel computes per-vertex top-k inside each sub-group, and a window
-re-rank merges them exactly — the union of per-group top-k sets
-contains the global top-k, because each group's kept set includes its
-own k smallest distances (or everything within the radius, whichever
-is fewer). The merge key (theme_id, vertex_idx) is fine-grained, so no
-single task ever sees more than k x n_groups rows per vertex.
+Memory bound: the kernel walks a theme's candidates in chunks of at
+most ``max_refs_per_group`` reference parcels and keeps a running
+top-k, so it holds one (vertices x chunk segments) distance matrix plus
+(vertices x k) of best rows at a time, however many parcels a dense
+area puts near one theme. The top-k under the total order (dist,
+ref_id, seg_idx) does not depend on how the candidates are chunked.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from brdrq_spark.geom import rings_from_wkb
 from brdrq_spark.geom.core import _edges, _seg_point_dist2
-from brdrq_spark.operators.candidates import candidate_pairs
+from brdrq_spark.grid import pick_resolution
+from brdrq_spark.operators.candidates import candidate_groups
 
 KNN_SCHEMA = T.StructType(
     [
@@ -55,6 +54,65 @@ KNN_SCHEMA = T.StructType(
 )
 
 
+def _knn_kernel(k: int, search_radius: float, max_refs_per_group: int):
+    cols = [f.name for f in KNN_SCHEMA.fields]
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        theme_id = pdf["theme_id"].iloc[0]
+        rings = rings_from_wkb(pdf["theme_wkb"].iloc[0])
+        # one entry per reference row, in (ref_id, WKB) order: the
+        # position is then the ref_id tiebreak of the rank order
+        refs = sorted(
+            {(rid, bytes(w)) for rid, w in zip(pdf["ref_id"], pdf["ref_wkb"]) if w is not None}
+        )
+        if not rings or not refs:
+            return pd.DataFrame(columns=cols)
+        verts = np.vstack(rings)
+        nv = len(verts)
+        # running top-k per vertex: (dist, reference position, seg_idx)
+        best_d = np.zeros((nv, 0))
+        best_r = np.zeros((nv, 0), dtype=np.int64)
+        best_s = np.zeros((nv, 0), dtype=np.int64)
+        for lo in range(0, len(refs), max_refs_per_group):
+            edges = [_edges(rings_from_wkb(w)) for _, w in refs[lo:lo + max_refs_per_group]]
+            counts = [len(e) for e in edges]
+            if not sum(counts):
+                continue
+            E = np.vstack(edges)
+            d = np.sqrt(_seg_point_dist2(
+                verts[:, 0][:, None], verts[:, 1][:, None],
+                E[:, 0][None, :], E[:, 1][None, :],
+                E[:, 2][None, :], E[:, 3][None, :],
+            ))
+            seg_r = np.repeat(np.arange(lo, lo + len(counts)), counts)
+            seg_s = np.concatenate([np.arange(c) for c in counts])
+            all_d = np.hstack([best_d, d])
+            all_r = np.hstack([best_r, np.broadcast_to(seg_r, d.shape)])
+            all_s = np.hstack([best_s, np.broadcast_to(seg_s, d.shape)])
+            # deterministic k-smallest per vertex: sort by (dist, ref, seg)
+            order = np.lexsort((all_s, all_r, all_d), axis=-1)[:, :k]
+            best_d = np.take_along_axis(all_d, order, axis=-1)
+            best_r = np.take_along_axis(all_r, order, axis=-1)
+            best_s = np.take_along_axis(all_s, order, axis=-1)
+        vi, rank = np.nonzero(best_d <= search_radius)
+        ids = np.asarray([str(rid) for rid, _ in refs], dtype=object)
+        return pd.DataFrame(
+            {
+                "theme_id": theme_id,
+                "vertex_idx": vi,
+                "vx": verts[vi, 0],
+                "vy": verts[vi, 1],
+                "ref_id": ids[best_r[vi, rank]],
+                "seg_idx": best_s[vi, rank],
+                "dist": best_d[vi, rank],
+                "rank": rank + 1,
+            },
+            columns=cols,
+        )
+
+    return kernel
+
+
 def knn_boundary_segments(
     spark: SparkSession,
     theme_df: DataFrame,
@@ -64,97 +122,19 @@ def knn_boundary_segments(
     max_refs_per_group: int = 256,
 ) -> DataFrame:
     """One row per (theme vertex, neighbor segment), rank 1..k by
-    distance (ties broken by ref_id, seg_idx — deterministic, identical
-    inside the kernel's lexsort and the cross-group window merge)."""
-    pairs = candidate_pairs(theme_df, ref_df, max_rd=search_radius / 2.0)
-    # sub-group sizing is per theme: n_groups = ceil(candidates / cap),
-    # assignment by hash so every ref lands in exactly one group (no
-    # duplicate (vertex, segment) rows to dedup at merge time). The
-    # count is attached by a window over the pair table — deliberately
-    # NOT a groupBy + self-join: pairs is exactly two narrow key
-    # columns, so the window shuffles ~30 bytes/row once, while a
-    # self-join against its own aggregate re-executes the whole
-    # decode + cell-join + distinct subtree twice (measured on the
-    # executed plan: 4 MapInPandas nodes and 0 ReusedExchange vs 2
-    # MapInPandas for the single-pass window shape)
-    wcnt = Window.partitionBy("theme_id")
-    n_groups = F.greatest(
-        F.ceil(F.count("*").over(wcnt) / F.lit(max_refs_per_group)), F.lit(1)
-    )
-    pairs = pairs.withColumn(
-        "_sub", F.pmod(F.xxhash64("ref_id"), n_groups).cast("int")
-    )
-    t = theme_df.select("theme_id", F.col("geom_wkb").alias("theme_wkb"))
-    r = ref_df.select("ref_id", F.col("geom_wkb").alias("ref_wkb"))
-    grouped = (
-        t.join(pairs, "theme_id", "left")
-        .withColumn("_sub", F.coalesce(F.col("_sub"), F.lit(0)))
-        .join(r, "ref_id", "left")
-        .select("theme_id", "_sub", "theme_wkb", "ref_id", "ref_wkb")
-    )
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        theme_id = pdf["theme_id"].iloc[0]
-        rings = rings_from_wkb(pdf["theme_wkb"].iloc[0])
-        if not rings:
-            return pd.DataFrame(columns=[f.name for f in KNN_SCHEMA.fields])
-        verts = np.vstack(rings)
-        segs = []
-        seg_ref = []
-        seg_idx = []
-        for rid, rwkb in zip(pdf["ref_id"], pdf["ref_wkb"]):
-            if rwkb is None:
-                continue
-            e = _edges(rings_from_wkb(rwkb))
-            segs.append(e)
-            seg_ref.extend([rid] * len(e))
-            seg_idx.extend(range(len(e)))
-        out_rows = []
-        if segs:
-            E = np.vstack(segs)
-            d2 = _seg_point_dist2(
-                verts[:, 0][:, None], verts[:, 1][:, None],
-                E[:, 0][None, :], E[:, 1][None, :],
-                E[:, 2][None, :], E[:, 3][None, :],
-            )
-            d = np.sqrt(d2)
-            seg_ref_arr = np.asarray(seg_ref)
-            seg_idx_arr = np.asarray(seg_idx)
-            for vi in range(len(verts)):
-                dv = d[vi]
-                # deterministic k-smallest: sort by (dist, ref, seg)
-                order = np.lexsort((seg_idx_arr, seg_ref_arr, dv))[:k]
-                for rank, si in enumerate(order, start=1):
-                    if dv[si] > search_radius:
-                        break
-                    out_rows.append(
-                        {
-                            "theme_id": theme_id,
-                            "vertex_idx": vi,
-                            "vx": float(verts[vi, 0]),
-                            "vy": float(verts[vi, 1]),
-                            "ref_id": str(seg_ref_arr[si]),
-                            "seg_idx": int(seg_idx_arr[si]),
-                            "dist": float(dv[si]),
-                            "rank": rank,
-                        }
-                    )
-        return pd.DataFrame(
-            out_rows, columns=[f.name for f in KNN_SCHEMA.fields]
-        )
-
-    per_group = grouped.groupBy("theme_id", "_sub").applyInPandas(
-        kernel, schema=KNN_SCHEMA
-    )
-    # exact cross-group merge: re-rank each vertex's union of per-group
-    # top-k candidates under the SAME deterministic order as the
-    # kernel's lexsort, keep global rank <= k
-    wv = Window.partitionBy("theme_id", "vertex_idx").orderBy(
-        "dist", "ref_id", "seg_idx"
-    )
-    return (
-        per_group.withColumn("rank", F.row_number().over(wv))
-        .where(F.col("rank") <= k)
+    distance (ties broken by ref_id, seg_idx — deterministic)."""
+    max_rd = search_radius / 2.0
+    return candidate_groups(
+        spark,
+        theme_df.select("theme_id", "geom_wkb"),
+        ref_df,
+        _knn_kernel(k, search_radius, max_refs_per_group),
+        KNN_SCHEMA,
+        res=pick_resolution(max_rd),
+        dilate=2.0 * max_rd * 1.01,
+        reach=2.0 * max_rd,
+        outer=False,
+        ids=True,
     )
 
 

@@ -14,17 +14,22 @@ after densification. Consistency argument (why no network object is
 needed):
 
 * a reference boundary within rd of a vertex v is within rd of every
-  feature containing v, so the 2*rd-dilated cell join delivers it to
-  ALL of them — the argmin is computed over the same effective
-  candidate set on every side;
+  feature containing v, so the candidate search (theme bbox covered at
+  2*rd, reference bboxes within 2*rd) delivers it to ALL of them — the
+  argmin is computed over the same effective candidate set on every
+  side;
 * densification inserts vertices at identical positions on an edge
   shared by two features (same endpoints, same spacing rule);
 * therefore f(v) is identical across features and shared edges move
   rigidly together — topology preserved by construction, embarrassingly
   parallel, no cross-feature shuffle.
 
-Execution shape mirrors align(): fused cell join carrying WKBs →
-partition-streaming pandas kernel with vectorized point-segment math.
+Execution shape: each theme's candidates come from
+``candidates.candidate_groups`` with align's cover, distance bound and
+hybrid WKB shipping — a probe of the prepared reference index when the
+reference fits the broadcast threshold (or ``broadcast_ref=True``), the
+cell-join plan otherwise — and go to a per-theme pandas kernel with
+vectorized point-segment math.
 """
 
 from __future__ import annotations
@@ -38,7 +43,9 @@ from pyspark.sql import types as T
 from brdrq_spark.geom import boolean_op, rings_area, rings_from_wkb, rings_to_wkb
 from brdrq_spark.geom.wkb import rings_from_wkb_hybrid
 from brdrq_spark.geom.core import _edges
-from brdrq_spark.operators.align import AlignConfig, align_candidate_rows
+from brdrq_spark.grid import pick_resolution
+from brdrq_spark.operators.align import AlignConfig
+from brdrq_spark.operators.candidates import candidate_groups
 from brdrq_spark.operators.snaplines import SNAP_NO_PREFERENCE, _snap_vertices
 
 # Processor ids mirror the reference enum (brdrq_utils.py:102-111;
@@ -210,10 +217,6 @@ def align_network(
     snapped geometry; adjacent input features sharing an edge still
     share it in the output."""
     rd = relevant_distance
-    cfg = AlignConfig(relevant_distances=[rd])
-    grouped, _res = align_candidate_rows(
-        spark, theme_df, ref_df, cfg, broadcast_ref=broadcast_ref
-    )
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         theme_id = pdf["theme_id"].iloc[0]
@@ -242,22 +245,15 @@ def align_network(
             ]
         )
 
-    def stream(batches):
-        buf = None
-        for pdf in batches:
-            if buf is not None and len(buf):
-                pdf = pd.concat([buf, pdf], ignore_index=True)
-            if not len(pdf):
-                buf = None
-                continue
-            last = pdf["theme_id"].iloc[-1]
-            done = pdf[pdf["theme_id"] != last]
-            buf = pdf[pdf["theme_id"] == last]
-            for _, g in done.groupby("theme_id", sort=False):
-                yield kernel(g)
-        if buf is not None and len(buf):
-            yield kernel(buf)
-
-    par = spark.sparkContext.defaultParallelism
-    parts = grouped.repartition(par * 4, "theme_id").sortWithinPartitions("theme_id")
-    return parts.mapInPandas(stream, schema=NETWORK_SCHEMA)
+    return candidate_groups(
+        spark,
+        theme_df.select("theme_id", "geom_wkb"),
+        ref_df,
+        kernel,
+        NETWORK_SCHEMA,
+        res=pick_resolution(rd),
+        dilate=2.0 * rd * 1.01,
+        reach=2.0 * rd,
+        broadcast_ref=broadcast_ref,
+        inline_budget=int(AlignConfig.max_inline_wkb_bytes),
+    )

@@ -9,16 +9,18 @@ align ~5 ms of geometry. ``PreparedReference`` pays that once: one collect of th
 layer, a cell-sorted CSR index (cell -> reference rows) built on the
 driver with the same bbox decode and cover arithmetic the cell join uses
 (``candidates.wkb_bboxes`` / ``candidates.cover_cells``), shipped as ONE
-``SparkContext.broadcast``. The alignment kernel probes the index with
-``searchsorted`` (``probe``).
+``SparkContext.broadcast``. Every operator's candidate path (``align``'s
+prepared path and ``candidates.candidate_groups``) probes the index with
+``searchsorted`` (``probe``, framed per theme by ``probe_groups``).
 
 Lifecycle: ``PreparedReference.of`` memoizes one instance per
 (reference DataFrame, cell resolution, metadata columns), weakly keyed
-on the DataFrame object, so repeated ``align`` calls, evaluate, temporal
-and the concurrent shard threads of ``checkpointed_align`` share one
-broadcast. ``release()`` destroys the broadcast and drops the memo
-entry, so the next call rebuilds; a DataFrame planned against a released
-instance can no longer run (a one-theme result, aligned in the driver,
+on the DataFrame object, so repeated ``align`` calls, evaluate, temporal,
+the other operators at the same cell resolution and the concurrent shard
+threads of ``checkpointed_align`` share one broadcast. ``release()``
+destroys the broadcast and drops the memo entry, so the next call
+rebuilds; a DataFrame planned against a released instance can no longer
+run (a one-theme result, aligned in the driver,
 is a local relation and does not depend on it). When the reference DataFrame is
 garbage-collected, a weakref finalizer only unpersists the broadcast
 (drops its executor copies): a result planned against it may outlive the
@@ -158,3 +160,42 @@ def probe(index: dict, bb: np.ndarray, res: int, dilate: float, reach: float):
     n_ref = len(index["wkb"])
     pair = np.unique(t[near] * n_ref + r[near])
     return pair // n_ref, pair % n_ref
+
+
+def probe_groups(
+    pdf, index: dict, res: int, dilate: float, reach: float,
+    bboxes=None, outer: bool = True, ids: bool = False,
+):
+    """Per-theme candidate frames of one pandas batch of theme rows,
+    from ``probe``: each row's columns (``geom_wkb`` renamed
+    ``theme_wkb``, as ``cells_exploded`` ships it) repeated once per
+    candidate, with ``ref_wkb``, plus ``ref_id`` when ``ids`` and
+    ``ref_version`` when the index carries versions. ``bboxes`` maps
+    the batch to ``(bb, has)``, None decodes polygon WKB. A theme
+    without candidates yields one row with NULL reference columns when
+    ``outer``, and nothing otherwise."""
+    import pandas as pd
+
+    bb, has = bboxes(pdf) if bboxes else wkb_bboxes(pdf["geom_wkb"].tolist())
+    rows = np.nonzero(has)[0]
+    t, r = probe(index, bb[has], res, dilate, reach)
+    bounds = np.searchsorted(rows[t], np.arange(len(pdf) + 1))
+    values = {
+        "theme_wkb" if c == "geom_wkb" else c: pdf[c].tolist() for c in pdf.columns
+    }
+    refs = {"ref_wkb": index["wkb"]}
+    if ids:
+        refs["ref_id"] = index["ids"]
+        if index["versions"] is not None:
+            refs["ref_version"] = index["versions"]
+    for i in range(len(pdf)):
+        cand = r[bounds[i]:bounds[i + 1]].tolist()
+        if not cand:
+            if not outer:
+                continue
+            cand = [None]
+        n = len(cand)
+        data = {c: [v[i]] * n for c, v in values.items()}
+        for c, v in refs.items():
+            data[c] = [None if j is None else v[j] for j in cand]
+        yield pd.DataFrame(data)

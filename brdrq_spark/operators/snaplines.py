@@ -16,8 +16,15 @@ strategy:
 * PREFER_ENDS_AND_ANGLES → treated as PREFER_VERTICES (parcel corners
   are its "angles"; the reference leaves the distinction undocumented).
 
-Execution shape mirrors align(): fused cell join carrying WKBs, then a
-partition-streaming pandas kernel with vectorized point-segment math.
+Execution shape: a line's candidates are the reference parcels sharing
+a cell with the cover of its bbox (all vertices of all parts) dilated
+by 2·rd, with no distance refine. They come from
+``candidates.candidate_groups`` — a probe of the prepared reference
+index when the reference fits the broadcast threshold (or
+``broadcast_ref=True``), the cell-join plan otherwise — and go to a
+per-line pandas kernel with vectorized point-segment math. A line
+without cell-mates keeps its geometry with remark
+``no_reference_candidates``.
 """
 
 from __future__ import annotations
@@ -25,12 +32,12 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from brdrq_spark.geom.core import _edges, _seg_point_dist2
 from brdrq_spark.geom.wkb import lines_from_wkb, lines_to_wkb, rings_from_wkb_hybrid
 from brdrq_spark.grid import pick_resolution
+from brdrq_spark.operators.candidates import candidate_groups
 
 
 SNAP_NO_PREFERENCE = "NO_PREFERENCE"
@@ -125,6 +132,20 @@ def _snap_vertices(verts, edges, ref_verts, rd, strategy):
     return out, moved
 
 
+def _line_bboxes(pdf: pd.DataFrame):
+    """``(bb, has)`` of a batch of line/point WKB: the bbox of every
+    vertex of every part; ``has`` False for an empty geometry."""
+    bb = np.zeros((len(pdf), 4))
+    has = np.zeros(len(pdf), dtype=bool)
+    for i, w in enumerate(pdf["geom_wkb"]):
+        ls = lines_from_wkb(w)
+        if ls:
+            v = np.vstack(ls)
+            bb[i] = v[:, 0].min(), v[:, 1].min(), v[:, 0].max(), v[:, 1].max()
+            has[i] = True
+    return bb, has
+
+
 def align_lines(
     spark: SparkSession,
     theme_df: DataFrame,
@@ -140,78 +161,6 @@ def align_lines(
     Returns one row per theme with the snapped geometry + metrics.
     """
     rd = relevant_distance
-    res = pick_resolution(rd)
-    dilate = 2.0 * rd * 1.01
-
-    from brdrq_spark.operators.candidates import plan_partitions
-
-    par = spark.sparkContext.defaultParallelism
-    if plan_partitions(theme_df) < par:
-        theme_df = theme_df.repartition(par)
-    if plan_partitions(ref_df) < par:
-        ref_df = ref_df.repartition(par)
-
-    # lines have no area; geo_features' bbox/cells work on rings only,
-    # so compute the line bbox/cover with a dedicated pandas pass
-    import pandas as pd_  # noqa: F401
-
-    from brdrq_spark.grid import cell_cover_bbox
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def line_cells(wkb: pd.Series) -> pd.Series:
-        def cover(b):
-            ls = lines_from_wkb(b)
-            if not ls:
-                return []
-            allv = np.vstack(ls)
-            return cell_cover_bbox(
-                float(allv[:, 0].min()), float(allv[:, 1].min()),
-                float(allv[:, 0].max()), float(allv[:, 1].max()),
-                res, dilate,
-            ).tolist()
-
-        return wkb.map(cover)
-
-    t_cells = theme_df.select(
-        "theme_id",
-        F.col("geom_wkb").alias("theme_wkb"),
-        F.explode_outer(line_cells(F.col("geom_wkb"))).alias("cell"),
-    )
-    from brdrq_spark.operators.candidates import cells_exploded
-
-    r_cells = cells_exploded(
-        ref_df.select("ref_id", "geom_wkb"), "ref_id", res, 0.0, "r",
-        wkb_out="ref_wkb",
-    ).select("ref_wkb", "cell")
-    if broadcast_ref:
-        r_cells = F.broadcast(r_cells)
-    grouped = (
-        t_cells.join(r_cells, "cell")
-        .select("theme_id", "theme_wkb", "ref_wkb")
-        .unionByName(
-            theme_df.select(
-                "theme_id",
-                F.col("geom_wkb").alias("theme_wkb"),
-                F.lit(None).cast("binary").alias("ref_wkb"),
-            )
-        )
-    )
-
-    def stream(batches):
-        buf = None
-        for pdf in batches:
-            if buf is not None and len(buf):
-                pdf = pd.concat([buf, pdf], ignore_index=True)
-            if not len(pdf):
-                buf = None
-                continue
-            last = pdf["theme_id"].iloc[-1]
-            done = pdf[pdf["theme_id"] != last]
-            buf = pdf[pdf["theme_id"] == last]
-            for _, g in done.groupby("theme_id", sort=False):
-                yield _snap_one(g)
-        if buf is not None and len(buf):
-            yield _snap_one(buf)
 
     def _snap_one(pdf: pd.DataFrame) -> pd.DataFrame:
         theme_id = pdf["theme_id"].iloc[0]
@@ -261,5 +210,15 @@ def align_lines(
             ]
         )
 
-    parts = grouped.repartition(par * 4, "theme_id").sortWithinPartitions("theme_id")
-    return parts.mapInPandas(stream, schema=SNAPLINE_SCHEMA)
+    return candidate_groups(
+        spark,
+        theme_df.select("theme_id", "geom_wkb"),
+        ref_df,
+        _snap_one,
+        SNAPLINE_SCHEMA,
+        res=pick_resolution(rd),
+        dilate=2.0 * rd * 1.01,
+        reach=np.inf,
+        bboxes=_line_bboxes,
+        broadcast_ref=broadcast_ref,
+    )

@@ -14,12 +14,16 @@ once**:
    (lexicographically ordered, 1e-9-rounded, packed as one 32-byte
    binary key), with a per-theme direction
    flag. Edges shared by two adjacent themes collapse to ONE key.
-2. **snap** (distinct edges through the standard cell-join candidate
-   plan + a vectorized kernel): each distinct edge densifies and snaps
-   exactly once — endpoints PREFER_VERTICES, in-fill points to the
-   nearest reference boundary (same hybrid as the network processor).
-   The edge is represented to the candidate join as a degenerate
-   [a, b, a] ring, so the existing bbox/cell machinery applies as-is.
+2. **snap** (distinct edges through ``candidates.candidate_groups``
+   + a vectorized kernel): each distinct edge, keyed by ``ekey`` with
+   its endpoint bbox, gets the reference parcels sharing a cell with
+   that bbox's cover dilated by 2*rd (no distance refine) — a probe of
+   the prepared reference index when the reference fits the broadcast
+   threshold (or ``broadcast_ref=True``), the cell-join plan otherwise.
+   It densifies and snaps exactly once — endpoints PREFER_VERTICES,
+   in-fill points to the nearest reference boundary (same hybrid as the
+   network processor). An edge without cell-mates emits no snap row
+   and keeps its identity polyline (``shared`` False) at reassembly.
 3. **reassemble** (per-theme kernel after an ekey equi-join): each
    theme's rings rebuild from its snapped edge polylines in traversal
    order (reversed where the theme walked the edge backwards), then one
@@ -42,7 +46,8 @@ from pyspark.sql import types as T
 from brdrq_spark.geom import boolean_op, rings_area, rings_to_wkb
 from brdrq_spark.geom.core import _edges
 from brdrq_spark.geom.wkb import rings_from_wkb_batch, rings_from_wkb_hybrid
-from brdrq_spark.grid import cell_cover_bbox, pick_resolution
+from brdrq_spark.grid import pick_resolution
+from brdrq_spark.operators.candidates import candidate_groups
 from brdrq_spark.operators.network import _densify_with_mask
 from brdrq_spark.operators.snaplines import _snap_vertices
 
@@ -229,6 +234,17 @@ def _make_snap_kernel(rd: float, max_seg: float):
     return kernel
 
 
+def _edge_bboxes(pdf: pd.DataFrame):
+    """``(bb, has)`` of a batch of distinct edges: the bbox of the two
+    endpoints."""
+    ax, ay = pdf["ax"].to_numpy(), pdf["ay"].to_numpy()
+    bx, by = pdf["bx"].to_numpy(), pdf["by"].to_numpy()
+    bb = np.column_stack(
+        [np.minimum(ax, bx), np.minimum(ay, by), np.maximum(ax, bx), np.maximum(ay, by)]
+    )
+    return bb, np.ones(len(pdf), dtype=bool)
+
+
 def _reassemble(rd: float):
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         theme_id = pdf["theme_id"].iloc[0]
@@ -313,67 +329,21 @@ def align_topology(
         (F.count("*") > 1).alias("shared"),
     )
 
-    # edge-level candidate join, same shape as align's fused plan: cells
-    # of the edge bbox dilated 2*rd x ref cell cover, one equi-join
-    res = pick_resolution(rd)
-    dilate = 2.0 * rd * 1.01
-
-    def _cells(ax: pd.Series, ay: pd.Series, bx: pd.Series, by: pd.Series) -> pd.Series:
-        out = []
-        for a0, a1, b0, b1 in zip(ax, ay, bx, by):
-            out.append(
-                cell_cover_bbox(
-                    min(a0, b0), min(a1, b1), max(a0, b0), max(a1, b1), res, dilate
-                ).tolist()
-            )
-        return pd.Series(out)
-
-    cells_udf = F.pandas_udf(_cells, "array<long>")
-    edges_c = distinct_edges.withColumn(
-        "cell", F.explode(cells_udf("ax", "ay", "bx", "by"))
-    ).select("ekey", "ax", "ay", "bx", "by", "shared", "cell")
-
-    from brdrq_spark.operators.candidates import cells_exploded
-
-    refs_c = cells_exploded(
-        ref_df.select(F.col("ref_id"), "geom_wkb"),
-        "ref_id",
-        res,
-        0.0,
-        "r",
-        wkb_out="ref_wkb",
-    ).select("ref_wkb", "cell")
-    if broadcast_ref:
-        refs_c = F.broadcast(refs_c)
     # the shared flag rides through the snap kernel — no separate
     # ekey join to recover it at reassembly time
-    grouped = edges_c.join(refs_c, "cell").select(
-        "ekey", "ax", "ay", "bx", "by", "shared", "ref_wkb"
-    )
-
-    snap = _make_snap_kernel(rd, snap_max_segment_length)
-
-    def stream(batches):
-        buf = None
-        for pdf in batches:
-            if buf is not None and len(buf):
-                pdf = pd.concat([buf, pdf], ignore_index=True)
-            if not len(pdf):
-                buf = None
-                continue
-            last = pdf["ekey"].iloc[-1]
-            done = pdf[pdf["ekey"] != last]
-            buf = pdf[pdf["ekey"] == last]
-            for _, g in done.groupby("ekey", sort=False):
-                yield snap(g)
-        if buf is not None and len(buf):
-            yield snap(buf)
-
-    par = spark.sparkContext.defaultParallelism
-    snapped = (
-        grouped.repartition(par * 4, "ekey")
-        .sortWithinPartitions("ekey")
-        .mapInPandas(stream, schema=SNAPPED_SCHEMA)
+    snapped = candidate_groups(
+        spark,
+        distinct_edges,
+        ref_df,
+        _make_snap_kernel(rd, snap_max_segment_length),
+        SNAPPED_SCHEMA,
+        res=pick_resolution(rd),
+        dilate=2.0 * rd * 1.01,
+        reach=np.inf,
+        key="ekey",
+        bboxes=_edge_bboxes,
+        outer=False,
+        broadcast_ref=broadcast_ref,
     )
 
     # left join: candidate-less edges keep their identity polyline and

@@ -154,7 +154,6 @@ class CommittedTable:
 
 
 def run_partitioned(
-    spark: SparkSession,
     table: CommittedTable,
     keys: list[str],
     make_df,
@@ -262,13 +261,8 @@ def checkpointed_align(
 
     from pyspark.sql import functions as F
 
-    from brdrq_spark.operators.align import (
-        AlignConfig,
-        _fits_broadcast,
-        _prepared_path,
-        _theme_rows,
-        align,
-    )
+    from brdrq_spark.operators.align import AlignConfig, _theme_rows, align
+    from brdrq_spark.operators.candidates import _fits_broadcast, _prepared_path
 
     keys = [f"shard_{i:03d}" for i in range(n_partitions)]
     todo = table.resume_filter(keys)
@@ -305,6 +299,5 @@ def checkpointed_align(
     }
 
     return run_partitioned(
-        spark, table, keys, make_df, lineage,
-        max_concurrent=max_concurrent, todo=todo,
+        table, keys, make_df, lineage, max_concurrent=max_concurrent, todo=todo
     )

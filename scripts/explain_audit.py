@@ -117,40 +117,36 @@ def main() -> None:
           f"(self-join era planned 8); single aggregation feeds the pair explode")
 
     # 6. topology processor: the three-stage edge pipeline — decompose
-    # (MapInPandas), distinct-edge snap behind ONE aggregate exchange,
-    # membership re-join, per-theme reassembly
+    # (MapInPandas), distinct edges behind ONE aggregate exchange, the
+    # snap stage probing the prepared reference index (no reference
+    # explode or join), membership re-join, per-theme reassembly
     from brdrq_spark.operators.topology import align_topology
 
     plan = formatted(
         align_topology(spark, th, ref, relevant_distance=1.0, broadcast_ref=True)
     )
-    section("align_topology — edge-deduped snap pipeline (broadcast)", plan)
+    section("align_topology — edge-deduped snap pipeline (prepared reference)", plan)
     t = tree(plan)
     print(
         f"\njoins: {t.count('BroadcastHashJoin') + t.count('SortMergeJoin') + t.count('ShuffledHashJoin')}"
-        f" (broadcast {t.count('BroadcastHashJoin')}); "
+        f" (broadcast {t.count('BroadcastHashJoin')}; the membership re-join only); "
         f"shuffle exchanges: {t.count('Exchange') - t.count('BroadcastExchange')}; "
         f"python runners: {t.count('InPandas')} "
-        f"(decompose, edge cover, snap, reassemble)"
+        f"(decompose, twice: it feeds the edge dedup and the re-join; "
+        f"edge probe + snap; reassemble)"
     )
 
-    # 7. knn: candidate generation must run ONCE — the sub-group sizing
-    # count rides a window over the two-column pair table (narrow, one
-    # exchange); a groupBy + self-join variant re-executed the whole
-    # decode + cell-join subtree twice (4 MapInPandas, 0 ReusedExchange)
+    # 7. knn: candidates from the prepared reference probe — one
+    # MapInPandas over the theme rows, no pair table, join-back or window
     from brdrq_spark.operators.knn import knn_boundary_segments
 
     plan = formatted(knn_boundary_segments(spark, th, ref, k=2, search_radius=4.0))
-    section("knn — single-pass candidate generation + narrow sizing window", plan)
+    section("knn — prepared-reference probe + per-theme chunked top-k", plan)
     t = tree(plan)
-    n_pandas = t.count("MapInPandas")
     n_win = len(re.findall(r"\bWindow \(", t))
     print(
-        f"\nMapInPandas nodes: {n_pandas} (cells_exploded once per side "
-        f"— the decode subtree is NOT re-executed for the sizing count); "
-        f"Window nodes: {n_win} (narrow pair-count window + per-vertex "
-        f"top-k with {t.count('WindowGroupLimit')} WindowGroupLimit "
-        f"pushdown stages); shuffle exchanges: "
+        f"\nMapInPandas nodes: {t.count('MapInPandas')} (probe + kernel); "
+        f"joins: {t.count('Join')}; Window nodes: {n_win}; shuffle exchanges: "
         f"{t.count('Exchange') - t.count('BroadcastExchange')}"
     )
 
@@ -195,7 +191,7 @@ def main() -> None:
     print(
         f"\nMapInPandas nodes: {n_pandas} — ONE candidate cell-join "
         f"subtree serves both area buckets (the step column rides the "
-        f"bare union row; align.py AlignConfig.step_col); a doubled "
+        f"theme rows; align.py AlignConfig.step_col); a doubled "
         f"subtree would show ~2x the python runners. Shuffle "
         f"exchanges: {t.count('Exchange') - t.count('BroadcastExchange')}"
     )

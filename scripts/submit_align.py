@@ -71,7 +71,7 @@ def _checkpointed_evaluate(spark, table, theme, ref, cfg, args) -> dict:
     }
 
     return run_partitioned(
-        spark, table, keys, make_df, lineage,
+        table, keys, make_df, lineage,
         max_concurrent=max(args.concurrent, 1),
     )
 

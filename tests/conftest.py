@@ -18,6 +18,29 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def candidate_pairs(spark):
+    """``pairs(th, ref, max_rd, **kw)``: the DataFrame of distinct
+    (theme_id, ref_id) candidate pairs within 2*max_rd, from
+    ``candidate_groups`` — the path every operator's candidates take;
+    ``kw`` (broadcast_ref, salt, hot_cell_threshold) go to it."""
+    from brdrq_spark.grid import pick_resolution
+    from brdrq_spark.operators.candidates import candidate_groups
+
+    def kernel(g):
+        return g.loc[g["ref_id"].notna(), ["theme_id", "ref_id"]].drop_duplicates()
+
+    def pairs(th, ref, max_rd, **kw):
+        return candidate_groups(
+            spark, th.select("theme_id", "geom_wkb"), ref, kernel,
+            "theme_id string, ref_id string", res=pick_resolution(max_rd),
+            dilate=2.0 * max_rd * 1.01, reach=2.0 * max_rd, outer=False,
+            ids=True, **kw,
+        )
+
+    return pairs
+
+
+@pytest.fixture(scope="session")
 def image_kernel_frames():
     """seed -> the align kernel's input frames for the footprints of
     ``images_table(24, seed)``: one frame per footprint, holding every

@@ -11,7 +11,6 @@ import pytest
 from brdrq_spark.geom import rings_area, rings_from_wkb
 from brdrq_spark.geom.clip import area_of_op
 from brdrq_spark.operators.align import AlignConfig, align
-from brdrq_spark.operators.candidates import candidate_pairs
 from brdrq_spark.sources.synthetic import reference_parcels, thematic_polygons
 
 NX = NY = 12
@@ -25,19 +24,21 @@ def tables(spark):
     return th, ref
 
 
-def test_candidate_pairs_contain_source_parcel(spark, tables):
+def test_candidate_pairs_contain_source_parcel(spark, tables, candidate_pairs):
     th, ref = tables
-    pairs = candidate_pairs(th, ref, max_rd=2.0).collect()
-    by_theme = {}
-    for row in pairs:
-        by_theme.setdefault(row.theme_id, set()).add(row.ref_id)
     src = {r.theme_id: r.src_parcel for r in th.collect()}
-    assert len(by_theme) == N_THEMES
-    for tid, parcels in by_theme.items():
-        # jittered copy of parcel X must have X among its candidates
-        assert any(p.endswith(src[tid]) for p in parcels), (tid, parcels)
-        # and not absurdly many candidates (pruning works)
-        assert len(parcels) <= 16
+    # the prepared-index probe and the cell join
+    for broadcast_ref in (True, False):
+        pairs = candidate_pairs(th, ref, max_rd=2.0, broadcast_ref=broadcast_ref).collect()
+        by_theme = {}
+        for row in pairs:
+            by_theme.setdefault(row.theme_id, set()).add(row.ref_id)
+        assert len(by_theme) == N_THEMES
+        for tid, parcels in by_theme.items():
+            # jittered copy of parcel X must have X among its candidates
+            assert any(p.endswith(src[tid]) for p in parcels), (tid, parcels)
+            # and not absurdly many candidates (pruning works)
+            assert len(parcels) <= 16
 
 
 def test_align_snaps_to_source_parcel(spark, tables):

@@ -38,14 +38,12 @@ def test_knn_finds_nearest_segment(spark):
         assert ds == sorted(ds)
 
 
-def test_knn_hot_theme_subgroups_match_single_group(spark):
+def test_knn_hot_theme_subgroups_match_single_group(spark, candidate_pairs):
     """De-skew path: one giant theme over a dense 100-parcel grid. With
     max_refs_per_group=8 the candidates split into ~13 hash sub-groups
     (multi-task execution instead of one task owning every segment);
     the window merge must reproduce the single-group result exactly —
     same rows, same ranks, same distances."""
-    from brdrq_spark.operators.candidates import candidate_pairs
-
     # 10x10 grid of 4x4 parcels covering [0,40)^2
     refs = []
     for i in range(10):
@@ -213,3 +211,39 @@ def test_knn_escalation_cache_contract(spark):
     n1 = out1.count()
     assert n1 == out1.count() > 0
     out1.unpersist()
+
+
+def test_knn_escalation_builds_one_index_per_resolution(spark, monkeypatch):
+    """The default rings (10, 20, 40, 80 m) search at cell resolutions
+    10, 9, 8 and 7. A theme with no reference within max_radius keeps
+    every ring running, so one escalation builds four prepared indexes,
+    one per resolution, and a second escalation on the same reference
+    builds none."""
+    from brdrq_spark.operators.knn import knn_with_escalation
+
+    sc = spark.sparkContext
+    built = []
+    real = sc.broadcast
+
+    def counting(value):
+        built.append(value)
+        return real(value)
+
+    monkeypatch.setattr(sc, "broadcast", counting)
+    O = np.array([170100.0, 170100.0])
+    ref_df = spark.createDataFrame(
+        pd.DataFrame(
+            [{"ref_id": "A", "geom_wkb": rings_to_wkb(
+                [np.array([[0.0, 0], [10, 0], [10, 10], [0, 10]]) + O])}]
+        )
+    )
+    th_df = spark.createDataFrame(
+        pd.DataFrame(
+            [{"theme_id": "orphan", "geom_wkb": rings_to_wkb(
+                [np.array([[900.0, 900], [901, 900], [900, 901]]) + O])}]
+        )
+    )
+    assert knn_with_escalation(spark, th_df, ref_df).collect() == []
+    assert len(built) == 4
+    knn_with_escalation(spark, th_df, ref_df).collect()
+    assert len(built) == 4

@@ -114,11 +114,11 @@ def test_committed_table_resume(spark, tmp_path):
         return spark.range(10).withColumn("k", F.lit(key))
 
     keys = ["a", "b", "c"]
-    s1 = run_partitioned(spark, tab, keys, make_df)
+    s1 = run_partitioned(tab, keys, make_df)
     assert s1 == {"requested": 3, "skipped_committed": 0, "computed": 3}
     assert tab.read(spark).count() == 30
     # resume: nothing recomputed
-    s2 = run_partitioned(spark, tab, keys, make_df)
+    s2 = run_partitioned(tab, keys, make_df)
     assert s2["computed"] == 0 and s2["skipped_committed"] == 3
     assert calls == ["a", "b", "c"]
     # lineage rows recorded per partition
@@ -126,7 +126,7 @@ def test_committed_table_resume(spark, tmp_path):
     assert [r["partition"] for r in lin] == ["a", "b", "c"]
     assert all(r["row_count"] == 10 for r in lin)
     # a new key computes incrementally
-    s3 = run_partitioned(spark, tab, keys + ["d"], make_df)
+    s3 = run_partitioned(tab, keys + ["d"], make_df)
     assert s3["computed"] == 1
     assert tab.read(spark).count() == 40
 

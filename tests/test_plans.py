@@ -26,13 +26,15 @@ def test_parquet_filter_pushdown(spark):
 def test_candidate_join_broadcasts_small_reference(spark):
     import pandas as pd
 
-    from brdrq_spark.operators.candidates import candidate_pairs
+    from brdrq_spark.operators.align import AlignConfig, align_candidate_rows
     from brdrq_spark.sources.synthetic import reference_parcels, thematic_polygons
 
     ref = spark.createDataFrame(reference_parcels(6, 6, seed=2))
     th = spark.createDataFrame(thematic_polygons(4, 6, 6, seed=2))
-    pairs = candidate_pairs(th, ref, max_rd=2.0, broadcast_ref=True)
-    plan = _plan(pairs)
+    rows, _res = align_candidate_rows(
+        spark, th, ref, AlignConfig(relevant_distances=[2.0]), broadcast_ref=True
+    )
+    plan = _plan(rows)
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
 
 

@@ -7,7 +7,6 @@ import numpy as np
 import pandas as pd
 
 from brdrq_spark.geom import rings_to_wkb
-from brdrq_spark.operators.candidates import candidate_pairs
 
 
 def _hot_cell_tables(spark, n_themes=60, n_refs=40):
@@ -30,21 +29,27 @@ def _hot_cell_tables(spark, n_themes=60, n_refs=40):
     )
 
 
-def test_salted_join_matches_unsalted(spark):
+def test_salted_join_matches_unsalted(spark, candidate_pairs):
     th, ref = _hot_cell_tables(spark)
     plain = {
         (r.theme_id, r.ref_id)
-        for r in candidate_pairs(th, ref, max_rd=2.0).collect()
+        for r in candidate_pairs(th, ref, max_rd=2.0, broadcast_ref=False).collect()
     }
     salted = {
         (r.theme_id, r.ref_id)
-        for r in candidate_pairs(th, ref, max_rd=2.0, salt=8).collect()
+        for r in candidate_pairs(
+            th, ref, max_rd=2.0, broadcast_ref=False, salt=8
+        ).collect()
     }
-    assert plain == salted
+    probed = {
+        (r.theme_id, r.ref_id)
+        for r in candidate_pairs(th, ref, max_rd=2.0, broadcast_ref=True).collect()
+    }
+    assert plain == salted == probed
     assert len(plain) > 100  # the hot cell really is dense
 
 
-def test_salt_ignored_with_broadcast(spark):
+def test_salt_ignored_with_broadcast(spark, candidate_pairs):
     th, ref = _hot_cell_tables(spark, 10, 10)
     a = {
         (r.theme_id, r.ref_id)
@@ -115,7 +120,7 @@ def test_align_fused_path_salting_same_output(spark):
     assert plain == salted and len(plain) == 12
 
 
-def test_adaptive_hot_cell_split_same_pairs(spark):
+def test_adaptive_hot_cell_split_same_pairs(spark, candidate_pairs):
     """north_star: adaptive cell-level splitting of hot cells — one
     dense cell's pairs spread over finer join keys with IDENTICAL
     candidate output."""
@@ -123,7 +128,6 @@ def test_adaptive_hot_cell_split_same_pairs(spark):
     import pandas as pd
 
     from brdrq_spark.geom import rings_to_wkb
-    from brdrq_spark.operators.candidates import candidate_pairs
 
     rng = np.random.default_rng(11)
 
@@ -161,7 +165,7 @@ def test_adaptive_hot_cell_split_same_pairs(spark):
     assert adaptive == base and len(base) > 100
 
 
-def test_auto_hot_cell_threshold(spark):
+def test_auto_hot_cell_threshold(spark, candidate_pairs):
     """hot_cell_threshold="auto" self-tunes from the cell-count stats: a
     100x-dense urban block (one cell owning ~400 reference parcels — a
     straggler task under the default no-split path) splits without any
@@ -172,12 +176,8 @@ def test_auto_hot_cell_threshold(spark):
     from pyspark.sql import functions as F
 
     from brdrq_spark.geom import rings_to_wkb
-    from brdrq_spark.operators.candidates import (
-        candidate_pairs,
-        cells_exploded,
-        pick_resolution,
-        split_hot_cells,
-    )
+    from brdrq_spark.grid import pick_resolution
+    from brdrq_spark.operators.candidates import cells_exploded, split_hot_cells
 
     def small_sq(cx, cy, s=1.1):
         return rings_to_wkb(
