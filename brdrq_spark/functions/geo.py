@@ -106,22 +106,6 @@ def sym_diff_area_udf():
     return F.pandas_udf(_sym, "double")
 
 
-def area_udf():
-    """pandas UDF factory: polygon area (m²) from WKB. Map-only,
-    Arrow-batched — the light pass behind O5 admission control
-    (evaluate.adaptive_grid), where only the area is needed and the
-    full geo_features_udf decode (cover cells, perimeter) would be
-    wasted work."""
-
-    def _area(wkb: pd.Series) -> pd.Series:
-        return pd.Series(
-            [rings_area(rings_from_wkb(b)) if b is not None else 0.0 for b in wkb],
-            dtype="float64",
-        )
-
-    return F.pandas_udf(_area, "double")
-
-
 @F.pandas_udf(T.StringType())
 def geom_type_udf(wkb: pd.Series) -> pd.Series:
     """Geometry-type tag for P5 type filters / mixed-collection splits

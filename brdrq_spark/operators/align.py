@@ -40,8 +40,8 @@ come from one of two paths:
   ``spark.sql.autoBroadcastJoinThreshold``): the reference layer is
   collected ONCE per (reference DataFrame, cell resolution, metadata
   columns) into a ``PreparedReference`` — a cell-sorted CSR index plus
-  bboxes and WKB in one broadcast. Repeated calls, evaluate's buckets
-  and concurrent ``checkpointed_align`` shards share the instance;
+  bboxes and WKB in one broadcast. Repeated calls, evaluate and
+  concurrent ``checkpointed_align`` shards share the instance;
   ``prepare_reference(...).release()`` destroys its broadcast, and
   Spark's ContextCleaner reclaims it otherwise once the reference
   DataFrame and every plan using it are gone. Each theme is covered,
@@ -78,7 +78,10 @@ come from one of two paths:
   ``hot_cell_threshold`` reaches ``split_hot_cells``.
 
 Both paths feed the kernel the same candidate set, so they emit
-identical rows.
+identical rows. ``evaluate`` runs this plan too (``run_kernel``), with
+its scoring inside the kernel: each theme's sweep becomes its
+prediction rows in the task that computed it, so a one-feature evaluate
+is one job, like a one-feature align.
 """
 
 from __future__ import annotations
@@ -89,7 +92,6 @@ from dataclasses import dataclass, field
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from brdrq_spark.geom import (
@@ -121,16 +123,14 @@ _TINY = 1e-6  # m²; below = empty for relevance purposes
 def distance_grid(max_rd: float, step: float = 0.1) -> list[float]:
     """The reference's prediction grid: 0 .. max_rd in `step` meters
     (brdrq_algorithm_autocorrectborders.py:627-629; interactive step
-    coarsening 10/20/50 cm per brdrq_settings.py:70-73). Lives here —
-    not in evaluate — because the kernel rebuilds per-theme grids from
-    AlignConfig.step_col; evaluate re-exports it."""
+    coarsening 10/20/50 cm per brdrq_settings.py:70-73); evaluate
+    re-exports it."""
     cents = np.arange(0.0, max_rd * 100.0 + step * 100.0, step * 100.0)
     # Never exceed max_rd: when max_rd is not a step multiple the arange
     # endpoint overshoots (2.2/0.5 -> 2.5), and every dilation / bbox /
     # candidate bound downstream is sized from max(relevant_distances) —
     # an overshooting per-theme grid would silently sweep beyond the
-    # candidate radius (ADVICE r6). Capping HERE keeps the bucketed and
-    # fused (step_col) formulations identical by construction.
+    # candidate radius (ADVICE r6).
     cents = cents[cents <= max_rd * 100.0 + 1e-6]
     return [round(float(c) / 100.0, 2) for c in cents]
 
@@ -204,15 +204,6 @@ class AlignConfig:
     partial_snapping: bool = False
     partial_snap_strategy: str = "PREFER_VERTICES"
     partial_snap_max_segment_length: float = 2.0
-    # per-theme sweep step: names a theme_df DOUBLE column holding each
-    # feature's rd-grid step; themes then sweep
-    # distance_grid(max(relevant_distances), their step) instead of
-    # relevant_distances verbatim (NULL keeps the shared grid). Lets
-    # evaluate(auto_step=True) fuse its fine/coarse area buckets into
-    # ONE candidate-generation pass — the buckets differ only in grid
-    # resolution, so paying the cell-join subtree twice doubled the
-    # dominant fixed cost of a sweep for nothing.
-    step_col: str | None = None
     # calculation CRS (reference default EPSG:31370, updated from the
     # thematic layer — brdrq_algorithm_autocorrectborders.py:194). The
     # engine computes in ONE projected meter CRS; align() hard-errors on
@@ -475,17 +466,17 @@ def _finalize(parts, theme_rings, ref_ring_sets, od_part, rd: float, cfg: AlignC
     }
 
 
-def _make_probe_kernel(cfg: AlignConfig, res: int, ref_bc):
+def _make_probe_kernel(cfg: AlignConfig, res: int, ref_bc, sweep=None):
     """Prepared-reference kernel: each partition of theme rows
-    (theme_id, geom_wkb[, theme_step]) probes the broadcast index for
-    its candidates (``prepared.probe_groups``: cover at 2·max_rd·1.01,
-    bbox distance <= 2·max_rd, as the cell-join plan) and hands every
-    theme's rows to the same ``_make_kernel`` the shuffle path uses. A
-    theme without candidates gets one row with a NULL ref_wkb, as the
-    bare row gives it on the shuffle path."""
+    (theme_id, geom_wkb) probes the broadcast index for its candidates
+    (``prepared.probe_groups``: cover at 2·max_rd·1.01, bbox distance
+    <= 2·max_rd, as the cell-join plan) and hands every theme's rows to
+    the same ``_make_kernel`` the shuffle path uses. A theme without
+    candidates gets one row with a NULL ref_wkb, as the bare row gives
+    it on the shuffle path."""
     from brdrq_spark.operators.prepared import probe_groups
 
-    kernel = _make_kernel(cfg, res)
+    kernel = _make_kernel(cfg, res, sweep)
     max_rd = max(cfg.relevant_distances)
 
     def stream(batches):
@@ -500,23 +491,27 @@ def _make_probe_kernel(cfg: AlignConfig, res: int, ref_bc):
     return stream
 
 
-def _make_kernel(cfg: AlignConfig, res: int):
+def _make_kernel(cfg: AlignConfig, res: int, sweep=None):
+    """The per-theme kernel: one frame of a theme's candidate rows in,
+    its rows at every relevant distance out. ``sweep`` (evaluate's
+    ``Sweep``) picks each theme's grid from its area and turns the
+    theme's rows into evaluate's prediction rows."""
+
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         theme_id = pdf["theme_id"].iloc[0]
         # first NON-NULL WKB: oversized features ship NULL through the
         # cell explode (hybrid shipping) and deliver their WKB on the
         # bare union row instead
         _tw = pdf["theme_wkb"].dropna()
-        theme_rings = rings_from_wkb(_tw.iloc[0]) if len(_tw) else []
+        theme_wkb = _tw.iloc[0] if len(_tw) else None
+        theme_rings = rings_from_wkb(theme_wkb) if len(_tw) else []
+        t_area = rings_area(theme_rings)
         remark = ""
-        # per-theme sweep grid: the theme rows may carry a step override
-        # (AlignConfig.step_col); the grid's max is shared — candidate
-        # dilation was sized from max(relevant_distances) for everyone
         rds = cfg.relevant_distances
-        if "theme_step" in pdf.columns:
-            _st = pdf["theme_step"].dropna()
-            if len(_st):
-                rds = distance_grid(max(rds), float(_st.iloc[0]))
+        if sweep is not None:
+            rds = sweep.grid(t_area)
+            if rds is None:
+                return sweep.blocked(theme_id)
         # dedupe: shared cells produce repeated (theme, ref) rows; doing
         # it here replaces a full distinct() shuffle stage. refmap keeps
         # (ref_id, version_date) per candidate for lineage emission.
@@ -573,7 +568,6 @@ def _make_kernel(cfg: AlignConfig, res: int):
         if not ref_ring_sets and not remark:
             remark = "no_reference_candidates"
 
-        t_area = rings_area(theme_rings)
         t_perim = rings_perimeter(theme_rings)
         # multi_as_single_modus: decompose MultiPolygon themes into parts
         # so each runs its own relevance decisions (no-op for the common
@@ -739,6 +733,8 @@ def _make_kernel(cfg: AlignConfig, res: int):
             ):
                 cache[key] = row  # no rd-dependent branch: reusable
             out.append(row)
+        if sweep is not None:
+            return sweep.score(out, theme_wkb)
         return pd.DataFrame(out)
 
     return kernel
@@ -762,13 +758,10 @@ def prepare_reference(
     return PreparedReference.of(spark, ref_df, _cell_res(cfg), version_col)
 
 
-def _theme_rows(theme_df: DataFrame, cfg: AlignConfig) -> DataFrame:
-    """The prepared path's theme side: (theme_id, geom_wkb [, theme_step]).
-    ``align`` collects it when it fits ``_fits_broadcast``."""
-    cols = [F.col("theme_id"), F.col("geom_wkb")]
-    if cfg.step_col is not None and cfg.step_col in theme_df.columns:
-        cols.append(F.col(cfg.step_col).cast("double").alias("theme_step"))
-    return theme_df.select(*cols)
+def _theme_rows(theme_df: DataFrame) -> DataFrame:
+    """The kernel's theme side: (theme_id, geom_wkb). ``align`` collects
+    it when it fits ``_fits_broadcast``."""
+    return theme_df.select("theme_id", "geom_wkb")
 
 
 def _balanced_slices(sizes: np.ndarray, bounds: list[int]) -> np.ndarray:
@@ -811,7 +804,7 @@ def align_candidate_rows(
     res = _cell_res(cfg)
     max_rd = max(cfg.relevant_distances)
     grouped = cell_join_rows(
-        spark, _theme_rows(theme_df, cfg), ref_df, "theme_id", res,
+        spark, _theme_rows(theme_df), ref_df, "theme_id", res,
         2.0 * max_rd * 1.01, 2.0 * max_rd,
         version_col=cfg.ref_version_col if cfg.emit_metadata else None,
         inline_budget=int(cfg.max_inline_wkb_bytes),
@@ -846,7 +839,21 @@ def align(
     relation (see "Execution shape" above). A larger theme side stays
     lazy.
     """
-    cfg = config or AlignConfig()
+    return run_kernel(spark, theme_df, ref_df, config or AlignConfig(), broadcast_ref)
+
+
+def run_kernel(
+    spark: SparkSession,
+    theme_df: DataFrame,
+    ref_df: DataFrame,
+    cfg: AlignConfig,
+    broadcast_ref: bool | None,
+    sweep=None,
+) -> DataFrame:
+    """``align``'s plan with the kernel ``_make_kernel(cfg, res, sweep)``:
+    the same path choice (one theme in the driver, collected, lazy, or
+    shuffle) for ``align`` and evaluate."""
+    schema = ALIGN_SCHEMA if sweep is None else sweep.schema
     # CRS guard: one defined meter CRS for both layers (reference
     # brdrq_utils.py:1498-1502, 1551-1555)
     from brdrq_spark.functions.crs import require_same_crs
@@ -855,8 +862,8 @@ def align(
     par = spark.sparkContext.defaultParallelism
     if _prepared_path(spark, ref_df, broadcast_ref):
         prepared = prepare_reference(spark, ref_df, cfg)
-        themes = _theme_rows(theme_df, cfg)
-        kernel = _make_probe_kernel(cfg, _cell_res(cfg), prepared.broadcast)
+        themes = _theme_rows(theme_df)
+        kernel = _make_probe_kernel(cfg, _cell_res(cfg), prepared.broadcast, sweep)
         if _fits_broadcast(spark, themes):
             # a small theme side is read once, now, in one job
             collected = themes.toPandas()
@@ -866,7 +873,7 @@ def align(
                 # (createDataFrame maps pandas columns by position)
                 out = list(kernel([collected]))
                 return spark.createDataFrame(
-                    out[0][ALIGN_SCHEMA.names] if out else [], ALIGN_SCHEMA
+                    out[0][schema.names] if out and len(out[0]) else [], schema
                 )
             # a local scan cuts n rows into min(n, defaultParallelism)
             # contiguous slices, one task each: no shuffle needed to fill
@@ -888,7 +895,7 @@ def align(
                 themes = themes.coalesce(slices)
             elif slices > scan:
                 themes = themes.repartition(slices)
-            return themes.mapInPandas(kernel, schema=ALIGN_SCHEMA)
+            return themes.mapInPandas(kernel, schema=schema)
         # the kernel stage is sized from its input: spread an
         # under-partitioned theme table over the cores, as the shuffle
         # path's theme side does
@@ -896,10 +903,10 @@ def align(
             themes = themes.repartition(par)
         if cfg.kernel_partitions:
             themes = themes.repartition(cfg.kernel_partitions)
-        return themes.mapInPandas(kernel, schema=ALIGN_SCHEMA)
+        return themes.mapInPandas(kernel, schema=schema)
 
     grouped, res = align_candidate_rows(spark, theme_df, ref_df, cfg, broadcast_ref)
     return stream_kernel(
-        grouped, "theme_id", _make_kernel(cfg, res), ALIGN_SCHEMA,
+        grouped, "theme_id", _make_kernel(cfg, res, sweep), schema,
         cfg.kernel_partitions or par * 4,
     )

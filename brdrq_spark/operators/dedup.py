@@ -111,7 +111,12 @@ def lsh_candidate_pairs(
     a degenerate bucket (thousands of identical boilerplate docs) keeps
     only its first ``max_bucket_size`` members by id — deterministic, and
     pairs within the kept sample still mark the cluster as duplicated
-    (exact-hash dedup catches byte-identical members regardless)."""
+    (exact-hash dedup catches byte-identical members regardless). The
+    cost is still quadratic in the cap, and interpreted: a full bucket
+    explodes into cap·(cap − 1)/2 pair structs (~125k at the default
+    500) through nested higher-order ``transform`` lambdas, which Spark
+    evaluates per element without codegen (~20x slower, see
+    ``shingles``). Raising the cap 4x costs ~16x per full bucket."""
     banded = sigs.select(
         F.col(id_col),
         F.posexplode(

@@ -9,25 +9,33 @@ observable contract is the cheatsheet's "prediction = rd where the result
 stays constant across consecutive steps, score grows with the stable
 span" — SURVEY.md §2.6 W1):
 
-* one align pass computes the whole grid (intersections hoisted in the
-  kernel), producing (theme_id, rd) rows;
-* a row is *stable* when its sym-diff-area index changed less than
-  ``eps`` vs the previous grid step (lag window);
+* the align kernel computes a theme's whole grid (intersections
+  hoisted), one row per rd, and scores it before it yields anything
+  (``Sweep``): no window, shuffle or join follows;
+* a row is *stable* when its sym-diff-area index changed by at most
+  ``eps`` vs the previous grid step;
 * gaps-and-islands (cumsum of change flags) yields stable runs; a run of
   length >= ``min_stable`` is a *prediction*, represented by its first
   (cheapest) rd; ``brdr_prediction_score`` = run length;
 * ``brdr_evaluation`` labels follow the reference enum
   (docs/autocorrectborders.md:209, read at brdrq_utils.py:1259-1271).
 
-Everything after the align pass is pure Spark window algebra — no UDFs.
+Only the ``ref_key_col`` by-id equality label needs Spark: a join of the
+prediction rows with the claimed reference geometry.
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass, replace
+from functools import cached_property
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from brdrq_spark.operators.align import AlignConfig, align, distance_grid
+from brdrq_spark.operators.align import ALIGN_SCHEMA, AlignConfig, distance_grid, run_kernel
 
 # PredictionStrategy (reference brdrq_algorithm_common.py:123-130)
 STRATEGY_ALL = "ALL"
@@ -103,61 +111,6 @@ def _broadcast_if_small(df: DataFrame, force: bool | None, cap_bytes: int = 64 <
     return df
 
 
-def add_stability(
-    aligned: DataFrame, eps: float = 1e-3, min_stable: int = 2
-) -> DataFrame:
-    """Attach brdr_stability / brdr_prediction_score / brdr_prediction_count
-    / is_prediction / brdr_evaluation to an align-grid output."""
-    w = Window.partitionBy("theme_id").orderBy("brdr_relevant_distance")
-    delta = F.abs(
-        F.col("brdr_sym_diff_area_index")
-        - F.lag("brdr_sym_diff_area_index").over(w)
-    )
-    changed = F.when(delta.isNull() | (delta > eps), 1).otherwise(0)
-    df = aligned.withColumn("_chg", changed).withColumn(
-        "_run", F.sum("_chg").over(w.rowsBetween(Window.unboundedPreceding, 0))
-    )
-    wrun = Window.partitionBy("theme_id", "_run")
-    wrun_ord = wrun.orderBy("brdr_relevant_distance")
-    df = (
-        df.withColumn("_run_len", F.count("*").over(wrun))
-        .withColumn("_rn_in_run", F.row_number().over(wrun_ord))
-        .withColumn("brdr_stability", F.col("_run_len") >= min_stable)
-        .withColumn(
-            "is_prediction",
-            (F.col("_rn_in_run") == 1) & (F.col("_run_len") >= min_stable),
-        )
-        .withColumn(
-            "brdr_prediction_score",
-            F.when(F.col("brdr_stability"), F.col("_run_len").cast("double")).otherwise(
-                F.lit(0.0)
-            ),
-        )
-    )
-    wt = Window.partitionBy("theme_id")
-    df = df.withColumn(
-        "brdr_prediction_count",
-        F.sum(F.col("is_prediction").cast("int")).over(wt).cast("int"),
-    )
-    df = df.withColumn(
-        "brdr_evaluation",
-        F.when(
-            F.col("is_prediction") & (F.col("brdr_sym_diff_area_index") < 1e-9),
-            F.lit("no_change"),
-        )
-        .when(
-            F.col("is_prediction") & (F.col("brdr_prediction_count") == 1),
-            F.lit("prediction_unique"),
-        )
-        .when(
-            F.col("is_prediction") & (F.col("brdr_prediction_count") > 1),
-            F.lit("to_check_prediction_multi"),
-        )
-        .otherwise(F.lit("not_evaluated")),
-    )
-    return df.drop("_chg", "_run", "_rn_in_run", "_run_len")
-
-
 def diff_metrics_series(aligned: DataFrame) -> DataFrame:
     """G2: the per-(theme, rd) difference-metric series behind the
     FeatureAligner plot (reference
@@ -182,6 +135,108 @@ def diff_metrics_series(aligned: DataFrame) -> DataFrame:
     )
 
 
+EVALUATE_SCHEMA = T.StructType(
+    ALIGN_SCHEMA.fields
+    + [
+        T.StructField("brdr_stability", T.BooleanType()),
+        T.StructField("is_prediction", T.BooleanType()),
+        T.StructField("brdr_prediction_score", T.DoubleType()),
+        T.StructField("brdr_prediction_count", T.IntegerType()),
+        T.StructField("brdr_evaluation", T.StringType()),
+    ]
+)
+
+
+@dataclass
+class Sweep:
+    """evaluate's half of the align kernel (``align._make_kernel``):
+    ``grid`` gives a theme its distance grid, ``score`` turns the
+    theme's rows, in rd order, into its prediction rows, and
+    ``blocked`` is the row of a theme refused by admission control.
+    ``grids`` maps each ``adaptive_grid`` step (None without
+    ``auto_step``) to its grid; ``keep_aligned`` carries ORIGINAL's
+    unswapped results in ``_aligned_wkb`` for the by-id equality test."""
+
+    grids: dict
+    max_rd: float
+    eps: float
+    min_stable: int
+    max_predictions: int
+    strategy: str
+    full_reference: str
+    eq_tol: float
+    keep_aligned: bool
+
+    @cached_property
+    def schema(self) -> T.StructType:
+        extra = [T.StructField("_aligned_wkb", T.BinaryType())] if self.keep_aligned else []
+        return T.StructType(EVALUATE_SCHEMA.fields + extra)
+
+    def grid(self, area: float) -> list[float] | None:
+        """The theme's distance grid, or None when ``auto_step`` blocks it."""
+        if None in self.grids:
+            return self.grids[None]
+        step, blocked = adaptive_grid(area, self.max_rd)
+        return None if blocked else self.grids[step]
+
+    def blocked(self, theme_id) -> pd.DataFrame:
+        """One explicit row per blocked theme (mirrors the topology
+        sentinel contract): theme_id and the blocked label, every other
+        column null, so consumers can tell "refused by admission
+        control" from "lost"."""
+        row = dict.fromkeys(self.schema.names)
+        row.update(theme_id=theme_id, brdr_evaluation="blocked_by_area")
+        return pd.DataFrame([row], dtype=object)
+
+    def score(self, rows: list[dict], theme_wkb) -> pd.DataFrame:
+        """Stability runs (gaps and islands over the sym-diff index),
+        predictions, labels, the full-reference strategy, the rank by
+        score then rd, and ORIGINAL's swap, for one theme's rows."""
+        sdai = np.array([r["brdr_sym_diff_area_index"] for r in rows])
+        # a run starts at rd 0 and wherever the index moves by more than
+        # eps (NaN counts as a move)
+        start = np.ones(len(rows), dtype=bool)
+        start[1:] = ~(np.abs(np.diff(sdai)) <= self.eps)
+        run = np.cumsum(start) - 1
+        run_len = np.bincount(run)[run]
+        first = np.flatnonzero(start & (run_len >= self.min_stable))
+        count = len(first)
+        preds = []
+        for i in first:
+            r = rows[i]
+            full = r["brdr_full_actual"]
+            if self.full_reference == FULL_REF_ONLY and not full:
+                continue
+            boost = 1.5 if self.full_reference == FULL_REF_PREFER and full else 1.0
+            if r["brdr_sym_diff_area_index"] < 1e-9:
+                # the input already coincided with a full-reference
+                # composition: full-actual, and its area is the total of
+                # the references adopted whole
+                eq_full = full and abs(r["brdr_area"] - r["brdr_ref_full_area"]) <= self.eq_tol
+                label = "equality_by_full_reference" if eq_full else "no_change"
+            else:
+                label = "prediction_unique" if count == 1 else "to_check_prediction_multi"
+            preds.append(dict(
+                r, brdr_stability=True, is_prediction=True,
+                brdr_prediction_score=float(run_len[i]) * boost,
+                brdr_prediction_count=count, brdr_evaluation=label,
+            ))
+        preds.sort(key=lambda p: (-p["brdr_prediction_score"], p["brdr_relevant_distance"]))
+        if self.strategy == STRATEGY_BEST:
+            preds = preds[:1]
+        elif self.max_predictions and self.max_predictions > 0:
+            preds = preds[: self.max_predictions]
+        if self.strategy == STRATEGY_ORIGINAL and count > 1:
+            # several competing predictions -> keep the SOURCE geometry
+            # (reference brdrq_algorithm_common.py:123-130: "the ORIGINAL
+            # if there are multiple predictions")
+            for p in preds:
+                if self.keep_aligned:
+                    p["_aligned_wkb"] = p["result_wkb"]
+                p["result_wkb"] = theme_wkb
+        return pd.DataFrame(preds, columns=self.schema.names)
+
+
 def evaluate(
     spark: SparkSession,
     theme_df: DataFrame,
@@ -203,6 +258,8 @@ def evaluate(
     predictions per strategy (ALL / BEST / ORIGINAL) and max_predictions
     (reference: max_predictions=4 interactive, -1 bulk —
     brdrq_dockwidget_featurealigner.py:1677, brdrq_dockwidget_bulkaligner.py:236).
+    ``config``'s relevant_distances are replaced by the grid; the
+    caller's object is not changed.
 
     Equality labels (reference enum docs/autocorrectborders.md:209, read
     on every correction pass at brdrq_utils.py:1266-1271) refine the
@@ -219,180 +276,77 @@ def evaluate(
     * both -> ``equality_by_id_and_full_reference``.
 
     ``auto_step=True`` applies the reference's O5 admission control
-    (``adaptive_grid``): themes above 1e6 m² are excluded from the
-    sweep but still appear in the output as explicit rows with
-    ``brdr_evaluation = 'blocked_by_area'`` (the reference blocks them
-    loudly and points at the bulk path — silent disappearance would
-    break any consumer joining results back to the input), and the
-    grid step is the reference's PER-FEATURE resolution of the policy
-    chain: themes bucket by area (at most two steps for a given
-    ``max_rd``, since the rd branch overwrites the area branch) and a
-    per-theme step column (``AlignConfig.step_col``) lets ONE fused
-    align pass sweep each theme over its own grid — a small theme
-    co-swept with a big one keeps the 10 cm step the reference would
-    give it, and the candidate cell-join subtree runs once, not once
-    per bucket. No driver-side probe job runs; the admission filter
-    rides lineage — downstream passes re-run the map-only Arrow area
-    decode rather than pinning a persisted copy of the theme table in
-    executor memory (one extra decode per pass is cheap next to a
-    ~40-distance alignment sweep of the same geometry).
+    (``adaptive_grid``) per feature, from the area the kernel decodes
+    anyway: a theme above 1e6 m² is not swept but still appears in the
+    output as one explicit row with ``brdr_evaluation =
+    'blocked_by_area'`` (the reference blocks it loudly and points at
+    the bulk path — silent disappearance would break any consumer
+    joining results back to the input), and every other theme sweeps
+    the grid of its own step, so a small theme co-swept with a big one
+    keeps the 10 cm step the reference would give it.
+
+    Execution: ``align``'s plan (``align.run_kernel``) with the scoring
+    inside the kernel (``Sweep``), so a theme's sweep never leaves its
+    task; a one-theme request runs one job. Only the ``ref_key_col``
+    by-id join runs in Spark, over the prediction rows.
     """
-    cfg = config or AlignConfig()
-    blocked = None
+    grid = distance_grid(max_rd, adaptive_grid(0.0, max_rd)[0] if auto_step else step)
+    cfg = replace(config or AlignConfig(), relevant_distances=grid)
+    grids = {None: grid}
     if auto_step:
-        from dataclasses import replace as _dc_replace
-
-        from brdrq_spark.functions.geo import area_udf
-
-        with_area = theme_df.withColumn("_o5_area", area_udf()(F.col("geom_wkb")))
-        admitted = with_area.where(F.col("_o5_area") <= F.lit(MAX_AREA_LIMIT))
-        blocked = with_area.where(F.col("_o5_area") > F.lit(MAX_AREA_LIMIT)).select(
-            "theme_id"
-        )
-        theme_df = admitted.drop("_o5_area")
-        # PER-FEATURE grid step, exactly as the reference's chain
-        # resolves it per feature (featurealigner.py:1277-1299). The rd
-        # branch overwrites the area branch, so for a given max_rd at
-        # most TWO steps coexist (10 cm / 50 cm when max_rd <= 7.5 m; a
-        # single step above). A per-theme step column drives the
-        # kernel's grid, so BOTH steps ride one align pass — a small
-        # theme co-swept with a big one keeps its fine step instead of
-        # inheriting a coarse global one, no driver-side area-probe
-        # job runs at call time, and the candidate subtree isn't paid
-        # twice.
-        step_fine, _ = adaptive_grid(0.0, max_rd)
-        step_coarse, _ = adaptive_grid(MAX_AREA_OPTIMIZATION + 1.0, max_rd)
-        if step_fine == step_coarse:
-            bcfg = _dc_replace(
-                cfg, relevant_distances=distance_grid(max_rd, step_fine)
-            )
-            aligned = align(
-                spark, theme_df, ref_df, bcfg, broadcast_ref=broadcast_ref
-            )
-        else:
-            # ONE fused pass for both area buckets: the buckets differ
-            # only in grid step, so a per-theme step column
-            # (AlignConfig.step_col) lets every theme sweep its own
-            # distance_grid(max_rd, step) inside a single candidate
-            # plan — previously each bucket re-ran the whole cell-join
-            # subtree, doubling the sweep's dominant fixed cost.
-            stepped = admitted.withColumn(
-                "_o5_step",
-                F.when(
-                    F.col("_o5_area") > F.lit(MAX_AREA_OPTIMIZATION),
-                    F.lit(step_coarse),
-                ).otherwise(F.lit(step_fine)),
-            ).drop("_o5_area")
-            bcfg = _dc_replace(
-                cfg,
-                relevant_distances=distance_grid(max_rd, step_fine),
-                step_col="_o5_step",
-            )
-            aligned = align(
-                spark, stepped, ref_df, bcfg, broadcast_ref=broadcast_ref
-            )
-    else:
-        cfg.relevant_distances = distance_grid(max_rd, step)
-        aligned = align(spark, theme_df, ref_df, cfg, broadcast_ref=broadcast_ref)
-    scored = add_stability(aligned, eps=eps, min_stable=min_stable)
-
-    preds = scored.filter(F.col("is_prediction"))
-
-    # equality refinement on the (small) prediction set only — the
-    # by-id join + sym-diff UDF never touch the full grid output
-    if ref_key_col is not None and ref_key_col in theme_df.columns:
-        from brdrq_spark.functions.geo import sym_diff_area_udf
-
-        # both side tables join the already-filtered prediction set;
-        # broadcast them when the caller or the size estimate says they
-        # fit (_broadcast_if_small) so the path adds no shuffle
-        # exchanges on small/medium layers while an explicit
-        # broadcast_ref=False keeps the shuffled join for layers whose
-        # WKB payload cannot sit on the driver
-        keys = _broadcast_if_small(
-            theme_df.select("theme_id", F.col(ref_key_col).alias("_ref_key")),
-            broadcast_ref,
-        )
-        refgeo = _broadcast_if_small(
-            ref_df.select(
-                F.col("ref_id").alias("_ref_key"), F.col("geom_wkb").alias("_ref_geom")
-            ),
-            broadcast_ref,
-        )
-        preds = (
-            preds.join(keys, "theme_id", "left")
-            .join(refgeo, "_ref_key", "left")
-            .withColumn(
-                "_eq_id",
-                F.col("_ref_geom").isNotNull()
-                & (
-                    sym_diff_area_udf()(F.col("result_wkb"), F.col("_ref_geom"))
-                    <= F.lit(eq_tol)
-                ),
-            )
-            .drop("_ref_key", "_ref_geom")
-        )
-    else:
-        preds = preds.withColumn("_eq_id", F.lit(False))
-    unchanged = F.col("brdr_sym_diff_area_index") < 1e-9
-    eq_full = F.col("brdr_full_actual") & (
-        F.abs(F.col("brdr_area") - F.col("brdr_ref_full_area")) <= F.lit(eq_tol)
+        # the rd branch overwrites the area branch, so for a given max_rd
+        # at most two steps coexist (featurealigner.py:1277-1299); every
+        # grid ends at the fine grid's max, the distance the candidates
+        # were sized for
+        steps = {adaptive_grid(a, max_rd)[0] for a in (0.0, MAX_AREA_OPTIMIZATION + 1.0)}
+        grids = {s: distance_grid(max(grid), s) if len(steps) > 1 else grid for s in steps}
+    by_id = ref_key_col is not None and ref_key_col in theme_df.columns
+    sweep = Sweep(
+        grids, max_rd, eps, min_stable, max_predictions, prediction_strategy,
+        full_reference_strategy, eq_tol,
+        keep_aligned=by_id and prediction_strategy == STRATEGY_ORIGINAL,
     )
-    preds = preds.withColumn(
-        "brdr_evaluation",
-        F.when(
-            unchanged & F.col("_eq_id") & eq_full,
-            F.lit("equality_by_id_and_full_reference"),
-        )
-        .when(unchanged & F.col("_eq_id"), F.lit("equality_by_id"))
-        .when(unchanged & eq_full, F.lit("equality_by_full_reference"))
-        .otherwise(F.col("brdr_evaluation")),
-    ).drop("_eq_id")
-    if full_reference_strategy == FULL_REF_ONLY:
-        preds = preds.filter(F.col("brdr_full_actual"))
-    elif full_reference_strategy == FULL_REF_PREFER:
-        preds = preds.withColumn(
-            "brdr_prediction_score",
+    out = run_kernel(spark, theme_df, ref_df, cfg, broadcast_ref, sweep)
+    if not by_id:
+        return out
+    from brdrq_spark.functions.geo import sym_diff_area_udf
+
+    # both side tables join the prediction rows; broadcast them when the
+    # caller or the size estimate says they fit (_broadcast_if_small) so
+    # the path adds no shuffle exchanges on small/medium layers while an
+    # explicit broadcast_ref=False keeps the shuffled join for layers
+    # whose WKB payload cannot sit on the driver
+    keys = _broadcast_if_small(
+        theme_df.select("theme_id", F.col(ref_key_col).alias("_ref_key")),
+        broadcast_ref,
+    )
+    refgeo = _broadcast_if_small(
+        ref_df.select(
+            F.col("ref_id").alias("_ref_key"), F.col("geom_wkb").alias("_ref_geom")
+        ),
+        broadcast_ref,
+    )
+    aligned = (
+        F.coalesce(F.col("_aligned_wkb"), F.col("result_wkb"))
+        if sweep.keep_aligned
+        else F.col("result_wkb")
+    )
+    eq_id = F.col("_ref_geom").isNotNull() & (
+        sym_diff_area_udf()(aligned, F.col("_ref_geom")) <= F.lit(eq_tol)
+    )
+    label = F.col("brdr_evaluation")
+    return (
+        out.join(keys, "theme_id", "left")
+        .join(refgeo, "_ref_key", "left")
+        .withColumn(
+            "brdr_evaluation",
             F.when(
-                F.col("brdr_full_actual"), F.col("brdr_prediction_score") * 1.5
-            ).otherwise(F.col("brdr_prediction_score")),
-        )
-    wbest = Window.partitionBy("theme_id").orderBy(
-        F.desc("brdr_prediction_score"), F.asc("brdr_relevant_distance")
-    )
-    preds = preds.withColumn("_rank", F.row_number().over(wbest))
-    if prediction_strategy == STRATEGY_BEST:
-        preds = preds.filter(F.col("_rank") == 1)
-    elif max_predictions and max_predictions > 0:
-        preds = preds.filter(F.col("_rank") <= max_predictions)
-    if prediction_strategy == STRATEGY_ORIGINAL:
-        # several competing predictions -> keep the SOURCE geometry
-        # (reference brdrq_algorithm_common.py:123-130: "the ORIGINAL if
-        # there are multiple predictions")
-        src = theme_df.select("theme_id", F.col("geom_wkb").alias("_src_wkb"))
-        preds = (
-            preds.join(src, "theme_id", "left")
-            .withColumn(
-                "result_wkb",
+                (F.col("brdr_sym_diff_area_index") < 1e-9) & eq_id,
                 F.when(
-                    F.col("brdr_prediction_count") > 1, F.col("_src_wkb")
-                ).otherwise(F.col("result_wkb")),
-            )
-            .drop("_src_wkb")
+                    label == "equality_by_full_reference",
+                    F.lit("equality_by_id_and_full_reference"),
+                ).otherwise(F.lit("equality_by_id")),
+            ).otherwise(label),
         )
-    out = preds.drop("_rank")
-    if blocked is not None:
-        # one explicit row per blocked theme (mirrors the topology
-        # sentinel contract): theme_id + the blocked label, every other
-        # column null — consumers can distinguish "refused by admission
-        # control" from "lost"
-        sentinel_cols = [
-            F.col("theme_id")
-            if f.name == "theme_id"
-            else F.lit("blocked_by_area").alias(f.name)
-            if f.name == "brdr_evaluation"
-            else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in out.schema.fields
-        ]
-        out = out.unionByName(blocked.select(*sentinel_cols))
-    return out
+        .drop("_ref_key", "_ref_geom", "_aligned_wkb")
+    )

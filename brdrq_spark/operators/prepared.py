@@ -17,11 +17,14 @@ Lifecycle: ``PreparedReference.of`` memoizes one instance per
 (reference DataFrame, cell resolution, metadata columns), weakly keyed
 on the DataFrame object, so repeated ``align`` calls, evaluate, temporal,
 the other operators at the same cell resolution and the concurrent shard
-threads of ``checkpointed_align`` share one broadcast. ``release()``
-destroys the broadcast and drops the memo entry, so the next call
-rebuilds; a DataFrame planned against a released instance can no longer
-run (a one-theme result, aligned in the driver,
-is a local relation and does not depend on it). When the reference DataFrame is
+threads of ``checkpointed_align`` share one broadcast. The collected and
+decoded layer is memoized per (reference DataFrame, metadata columns):
+an index at another cell resolution (kNN escalation's rings) is built
+from it without collecting the layer again. ``release()`` destroys the
+broadcast and drops both memo entries, so the next call rebuilds; a
+DataFrame planned against a released instance can no longer run (a
+one-theme result, aligned in the driver, is a local relation and does
+not depend on it). When the reference DataFrame is
 garbage-collected, a weakref finalizer only unpersists the broadcast
 (drops its executor copies): a result planned against it may outlive the
 reference object (a function that returns a lazy align of a layer it
@@ -44,6 +47,41 @@ from brdrq_spark.operators.candidates import cover_cells, wkb_bboxes
 # for the same layer must wait for one build, not start their own
 _LOCK = threading.Lock()
 _MEMO: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_LAYERS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _layer(ref_df: DataFrame, version_col: str | None) -> dict:
+    """The reference rows of ``ref_df``, collected once per
+    ``version_col`` (callers hold ``_LOCK``): ``ids``, ``wkb`` and
+    ``versions`` sorted by (ref_id, WKB), with their bboxes ``bb`` and
+    ``has`` (``candidates.wkb_bboxes``)."""
+    per_df = _LAYERS.setdefault(ref_df, {})
+    layer = per_df.get(version_col)
+    if layer is not None:
+        return layer
+    cols = [F.col("ref_id"), F.col("geom_wkb")]
+    if version_col is not None:
+        cols.append(
+            (
+                F.col(version_col).cast("string")
+                if version_col in ref_df.columns
+                else F.lit(None).cast("string")
+            ).alias("ref_version")
+        )
+    rows = ref_df.select(*cols).collect()
+    # a fixed row order whatever order the collect returned: the
+    # kernel sees candidates in this order
+    rows.sort(key=lambda r: (str(r.ref_id), bytes(r.geom_wkb or b"")))
+    wkb = [None if r.geom_wkb is None else bytes(r.geom_wkb) for r in rows]
+    bb, has = wkb_bboxes(wkb)
+    layer = per_df[version_col] = {
+        "ids": [r.ref_id for r in rows],
+        "wkb": wkb,
+        "versions": None if version_col is None else [r.ref_version for r in rows],
+        "bb": bb,
+        "has": has,
+    }
+    return layer
 
 
 def _unpersist(sc, bc) -> None:
@@ -80,21 +118,8 @@ class PreparedReference:
 
     def __init__(self, spark, ref_df, res, version_col):
         self.key = (res, version_col)
-        cols = [F.col("ref_id"), F.col("geom_wkb")]
-        if version_col is not None:
-            cols.append(
-                (
-                    F.col(version_col).cast("string")
-                    if version_col in ref_df.columns
-                    else F.lit(None).cast("string")
-                ).alias("ref_version")
-            )
-        rows = ref_df.select(*cols).collect()
-        # a fixed row order whatever order the collect returned: the
-        # kernel sees candidates in this order
-        rows.sort(key=lambda r: (str(r.ref_id), bytes(r.geom_wkb or b"")))
-        wkb = [None if r.geom_wkb is None else bytes(r.geom_wkb) for r in rows]
-        bb, has = wkb_bboxes(wkb)
+        layer = _layer(ref_df, version_col)
+        bb, has = layer["bb"], layer["has"]
         ref_rows = np.nonzero(has)[0]
         counts, cells = cover_cells(bb[has], res, 0.0)
         cell_rows = np.repeat(ref_rows, counts)
@@ -102,11 +127,9 @@ class PreparedReference:
         cells, cell_rows = cells[order], cell_rows[order]
         uniq, start = np.unique(cells, return_index=True)
         payload = {
-            "ids": [r.ref_id for r in rows],
-            "wkb": wkb,
-            "versions": None
-            if version_col is None
-            else [r.ref_version for r in rows],
+            "ids": layer["ids"],
+            "wkb": layer["wkb"],
+            "versions": layer["versions"],
             "bb": bb,
             "cells": uniq,
             "offsets": np.append(start, len(cells)).astype(np.int64),
@@ -129,6 +152,7 @@ class PreparedReference:
             per_df = _MEMO.get(ref_df) if ref_df is not None else None
             if per_df is not None and per_df.get(self.key) is self:
                 del per_df[self.key]
+                _LAYERS.get(ref_df, {}).pop(self.key[1], None)
 
 
 def probe(index: dict, bb: np.ndarray, res: int, dilate: float, reach: float):

@@ -13,6 +13,21 @@ import os
 
 from pyspark.sql import SparkSession
 
+_MAX_DRIVER_GIB = 24
+
+
+def driver_memory(physical_bytes: int | None = None) -> str:
+    """Default ``spark.driver.memory``: half the machine's physical memory
+    (``os.sysconf``), at least 1g and at most 24g. A local-mode driver
+    heap is the whole engine's heap; one sized above the machine loses
+    the JVM to the OS instead of raising a Java ``OutOfMemoryError``."""
+    if physical_bytes is None:
+        try:
+            physical_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        except (AttributeError, ValueError, OSError):
+            return f"{_MAX_DRIVER_GIB}g"
+    return f"{max(1, min(_MAX_DRIVER_GIB, physical_bytes // 2 // 2**30))}g"
+
 
 def get_spark(
     app_name: str = "brdrq_spark",
@@ -22,7 +37,8 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    ``cpus`` defaults to $SPARK_GRAFT_CPUS or all cores. On a real
+    ``cpus`` defaults to $SPARK_GRAFT_CPUS or all cores, the driver heap
+    to $SPARK_GRAFT_DRIVER_MEM or ``driver_memory()``. On a real
     cluster the master/memory settings come from spark-submit; every
     option set here is safe to override there.
     """
@@ -57,7 +73,7 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "16m")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or driver_memory())
         .config("spark.ui.enabled", "false")
         # pyspark's daemon, with a per-task import-cache reset that reads
         # each zip archive once instead of once per importer (daemon.py);

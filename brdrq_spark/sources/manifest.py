@@ -287,7 +287,7 @@ def checkpointed_align(
         if shard_col:
             shard = shard.drop(shard_col)
         cfg = config
-        if share and _fits_broadcast(spark, _theme_rows(shard, config)):
+        if share and _fits_broadcast(spark, _theme_rows(shard)):
             cfg = dataclasses.replace(config, kernel_partitions=share)
         return align(spark, shard, ref_df, cfg, broadcast_ref=broadcast_ref)
 

@@ -150,12 +150,14 @@ def main() -> None:
         f"{t.count('Exchange') - t.count('BroadcastExchange')}"
     )
 
-    # 8. evaluate equality refinement: with broadcast_ref unset the
-    # side tables consult the optimizer's size estimate
-    # (_broadcast_if_small) — small/medium layers join the prediction
-    # set as BROADCAST joins (no extra shuffle exchanges on the sweep
-    # tail), while an explicit broadcast_ref=False keeps the shuffled
-    # join for reference layers whose WKB cannot sit on the driver
+    # 8. evaluate with a claimed reference id: the kernel scores the
+    # sweep, so the only operators after it are the two by-id joins over
+    # the prediction rows and the sym-diff UDF. With broadcast_ref unset
+    # the side tables consult the optimizer's size estimate
+    # (_broadcast_if_small): small/medium layers join as BROADCAST joins
+    # (no shuffle exchange), while an explicit broadcast_ref=False keeps
+    # the shuffled join for reference layers whose WKB cannot sit on the
+    # driver
     from brdrq_spark.operators.evaluate import evaluate
 
     th_keyed = th.withColumn("claimed_ref", F_lit_ref(th))
@@ -165,35 +167,34 @@ def main() -> None:
             broadcast_ref=None, ref_key_col="claimed_ref",
         )
     )
-    section("evaluate — equality-refinement joins (size-aware broadcast)", plan)
+    section("evaluate — by-id equality joins over the prediction rows", plan)
     t = tree(plan)
+    n_win = len(re.findall(r"\bWindow \(", t))
     print(
-        f"\nequality-path joins: side tables below the size cap join as "
-        f"BroadcastHashJoin without a caller hint "
-        f"(BroadcastHashJoin count {t.count('BroadcastHashJoin')}, "
-        f"shuffle exchanges {t.count('Exchange') - t.count('BroadcastExchange')})"
+        f"\nWindow nodes: {n_win} (the sweep is scored "
+        f"in the kernel); BroadcastHashJoin: {t.count('BroadcastHashJoin')} "
+        f"(claimed id, claimed geometry; no caller hint); python runners: "
+        f"{t.count('InPandas') + t.count('ArrowEvalPython')} (kernel, sym-diff "
+        f"UDF); shuffle exchanges: {t.count('Exchange') - t.count('BroadcastExchange')}"
     )
 
-    # 9. fused auto_step sweep: BOTH area buckets (fine + coarse step)
-    # must ride ONE candidate cell-join subtree — the per-theme step
-    # column drives the kernel grid, so the plan shows the same number
-    # of MapInPandas nodes as a plain align (a two-bucket formulation
-    # doubled the decode+cover+kernel chain; the knn groupBy+join probe
-    # caught exactly this regression class)
+    # 9. auto_step sweep: each theme's step (or its blocked_by_area row)
+    # comes from the area the kernel decodes, so the plan is align's
+    # plan — one MapInPandas, no area UDF, window, join or union
     plan = formatted(
         evaluate(
             spark, th, ref, max_rd=2.0, broadcast_ref=True, auto_step=True
         )
     )
-    section("evaluate_sweep — fused per-theme-step auto_step plan", plan)
+    section("evaluate_sweep — auto_step, the step from the kernel", plan)
     t = tree(plan)
-    n_pandas = t.count("MapInPandas")
+    n_win = len(re.findall(r"\bWindow \(", t))
     print(
-        f"\nMapInPandas nodes: {n_pandas} — ONE candidate cell-join "
-        f"subtree serves both area buckets (the step column rides the "
-        f"theme rows; align.py AlignConfig.step_col); a doubled "
-        f"subtree would show ~2x the python runners. Shuffle "
-        f"exchanges: {t.count('Exchange') - t.count('BroadcastExchange')}"
+        f"\nMapInPandas nodes: {t.count('MapInPandas')} (the kernel); "
+        f"ArrowEvalPython: {t.count('ArrowEvalPython')}; Window nodes: "
+        f"{n_win}; joins: {t.count('Join')}; "
+        f"Union: {t.count('Union')}; shuffle exchanges: "
+        f"{t.count('Exchange') - t.count('BroadcastExchange')}"
     )
 
     # 10. expanding-ring kNN escalation: the returned union must show

@@ -29,9 +29,11 @@ Usage:
   python scripts/job_census.py --run [--seed 1] [--tasks]
       Generates the benchmark-sized inputs (a 64x64 reference layer, a
       1024-theme pool, 24 images), warms up, then runs ONE interactive
-      request (align of one theme at rd 2) and ONE image pass
-      (footprints -> checkpointed_align, 2 concurrent shards) with the
-      event log on, and prints the census of each and the wall time
+      request (align of one theme at rd 2), ONE image pass
+      (footprints -> checkpointed_align, 2 concurrent shards) and ONE
+      feature-aligner request (evaluate(max_rd=5, step=0.1) of one
+      theme) with the event log on, and prints the census of each and
+      the wall time
       outside any job (planning, an in-driver kernel, result
       conversion). Before those windows, one 1-task probe prints the
       time of ``importlib.invalidate_caches()`` in a worker and its
@@ -214,8 +216,8 @@ def worker_import_probe(spark) -> None:
 
 
 def run(seed: int, per_task: bool) -> None:
-    """One warmed-up interactive request and one image pass, each in its
-    own time window; jobs are attributed by submission time, because
+    """One warmed-up interactive request, image pass and one-theme
+    evaluate, each in its own time window; jobs are attributed by submission time, because
     the shard threads of checkpointed_align do not inherit a job group."""
     os.environ["PYTHONPATH"] = os.pathsep.join(
         p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
@@ -225,6 +227,7 @@ def run(seed: int, per_task: bool) -> None:
     from pyspark.sql import functions as F
 
     from brdrq_spark.operators.align import AlignConfig, align
+    from brdrq_spark.operators.evaluate import evaluate
     from brdrq_spark.operators.footprints import extract_footprints
     from brdrq_spark.session import get_spark
     from brdrq_spark.sources.manifest import CommittedTable, checkpointed_align
@@ -268,14 +271,20 @@ def run(seed: int, per_task: bool) -> None:
                                spark.read.parquet(fp), ref, cfg, n_partitions=2,
                                broadcast_ref=True, max_concurrent=4)
 
+        def sweep(tid):
+            evaluate(spark, themes.where(F.col("theme_id") == tid), ref,
+                     max_rd=5.0, step=0.1, broadcast_ref=True).collect()
+
         ids = list(th_pdf.theme_id)
         for tid in ids[:4]:
             request(tid)
         image_pass(0)
+        sweep(ids[5])
         worker_import_probe(spark)
         windows = {}
         for label, fn in (("interactive request", lambda: request(ids[4])),
-                          ("image pass", lambda: image_pass(1))):
+                          ("image pass", lambda: image_pass(1)),
+                          ("evaluate request", lambda: sweep(ids[6]))):
             time.sleep(0.5)  # keep the windows apart at the log's ms clock
             t0 = time.time()
             fn()

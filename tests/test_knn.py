@@ -213,12 +213,13 @@ def test_knn_escalation_cache_contract(spark):
     out1.unpersist()
 
 
-def test_knn_escalation_builds_one_index_per_resolution(spark, monkeypatch):
+def test_knn_escalation_builds_one_index_per_resolution(spark, monkeypatch, tmp_path):
     """The default rings (10, 20, 40, 80 m) search at cell resolutions
     10, 9, 8 and 7. A theme with no reference within max_radius keeps
     every ring running, so one escalation builds four prepared indexes,
-    one per resolution, and a second escalation on the same reference
-    builds none."""
+    one per resolution, from ONE collect of the reference layer, and a
+    second escalation on the same reference builds and collects
+    nothing."""
     from brdrq_spark.operators.knn import knn_with_escalation
 
     sc = spark.sparkContext
@@ -231,19 +232,40 @@ def test_knn_escalation_builds_one_index_per_resolution(spark, monkeypatch):
 
     monkeypatch.setattr(sc, "broadcast", counting)
     O = np.array([170100.0, 170100.0])
-    ref_df = spark.createDataFrame(
+    # a parquet scan: collecting a local relation would run no job
+    spark.createDataFrame(
         pd.DataFrame(
             [{"ref_id": "A", "geom_wkb": rings_to_wkb(
                 [np.array([[0.0, 0], [10, 0], [10, 10], [0, 10]]) + O])}]
         )
-    )
+    ).write.parquet(str(tmp_path / "ref"))
+    ref_df = spark.read.parquet(str(tmp_path / "ref"))
     th_df = spark.createDataFrame(
         pd.DataFrame(
             [{"theme_id": "orphan", "geom_wkb": rings_to_wkb(
                 [np.array([[900.0, 900], [901, 900], [900, 901]]) + O])}]
         )
     )
+
+    # the jobs of every collect of the reference layer's (ref_id, geom_wkb)
+    collect_jobs = []
+    real_collect = type(ref_df).collect
+
+    def spy(df):
+        if df.columns != ["ref_id", "geom_wkb"]:
+            return real_collect(df)
+        group = f"reference_collect_{len(collect_jobs)}"
+        sc.setJobGroup(group, group)
+        try:
+            return real_collect(df)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            collect_jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+    monkeypatch.setattr(type(ref_df), "collect", spy)
     assert knn_with_escalation(spark, th_df, ref_df).collect() == []
     assert len(built) == 4
+    assert len(collect_jobs) == 1
     knn_with_escalation(spark, th_df, ref_df).collect()
     assert len(built) == 4
+    assert len(collect_jobs) == 1

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from brdrq_spark.operators.align import AlignConfig
 from brdrq_spark.operators.classify import classify_correction
-from brdrq_spark.operators.evaluate import add_stability, distance_grid, evaluate
+from brdrq_spark.operators.evaluate import distance_grid, evaluate
 from brdrq_spark.operators.temporal import changed_themes, update_to_actual
 from brdrq_spark.sources.manifest import CommittedTable, run_partitioned
 from brdrq_spark.sources.synthetic import (
@@ -37,6 +37,17 @@ def test_distance_grid_matches_reference_shape():
     # sweep beyond the candidate radius (ADVICE r6)
     assert distance_grid(2.2, 0.5) == [0.0, 0.5, 1.0, 1.5, 2.0]
     assert distance_grid(2.2, 0.1)[-1] == 2.2
+
+
+def test_evaluate_leaves_the_callers_config_alone(spark, small_tables):
+    """evaluate sweeps its own grid on a copy of ``config``: the caller's
+    relevant_distances stay as they were, with and without auto_step."""
+    th, ref = small_tables
+    cfg = AlignConfig(relevant_distances=[2.0])
+    for auto_step in (False, True):
+        evaluate(spark, th, ref, max_rd=1.0, step=0.5, config=cfg,
+                 broadcast_ref=True, auto_step=auto_step)
+        assert cfg.relevant_distances == [2.0]
 
 
 def test_evaluate_stability_and_predictions(spark, small_tables):

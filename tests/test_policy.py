@@ -104,21 +104,21 @@ def test_evaluate_auto_step_blocks_and_coarsens(spark):
     assert small and not (small <= coarse)  # small theme: fine 10 cm grid
 
 
-import pytest
-
-
 @pytest.mark.parametrize("max_rd", [2.0, 2.2])
 def test_fused_auto_step_matches_per_bucket_aligns(spark, max_rd):
-    """The per-theme-step fused sweep (one align pass, step column
-    driving the kernel grid) must produce EXACTLY the rows of the
-    two-bucket formulation it replaced: align(small themes, fine grid)
-    union align(big themes, coarse grid), value for value. max_rd=2.2
-    exercises the non-step-multiple case where an overshooting kernel
-    grid (2.5 > 2.2) would out-sweep the candidate dilation sized from
+    """The fused auto_step sweep (one kernel pass, each theme's grid from
+    its own area) must produce EXACTLY the rows of the two-bucket
+    formulation: evaluate(small themes, fine grid) union evaluate(big
+    themes, coarse grid), value for value. min_stable=1 makes every run
+    of equal sym-diff index a prediction scored by its length, so the
+    prediction rows tile each theme's whole sweep. max_rd=2.2 exercises
+    the non-step-multiple case where an overshooting kernel grid
+    (2.5 > 2.2) would out-sweep the candidate dilation sized from
     max(relevant_distances) (ADVICE r6)."""
-    from brdrq_spark.operators.align import AlignConfig, align, distance_grid
-    from dataclasses import replace as _dc_replace
     from pyspark.sql import functions as F
+
+    from brdrq_spark.operators.align import distance_grid
+    from brdrq_spark.operators.evaluate import evaluate
 
     themes = spark.createDataFrame(
         pd.DataFrame(
@@ -139,36 +139,21 @@ def test_fused_auto_step_matches_per_bucket_aligns(spark, max_rd):
         )
     )
     fine, coarse = 0.1, 0.5
-    cfg = AlignConfig(relevant_distances=distance_grid(max_rd, fine))
-    stepped = themes.withColumn(
-        "_step",
-        F.when(F.col("theme_id") == "t_big", F.lit(coarse)).otherwise(F.lit(fine)),
-    )
-    fused = align(
-        spark, stepped, refs, _dc_replace(cfg, step_col="_step"),
-        broadcast_ref=True,
-    )
-    small_part = align(
-        spark,
-        themes.where(F.col("theme_id") != "t_big"),
-        refs,
-        cfg,
-        broadcast_ref=True,
-    )
-    big_part = align(
-        spark,
-        themes.where(F.col("theme_id") == "t_big"),
-        refs,
-        _dc_replace(cfg, relevant_distances=distance_grid(max_rd, coarse)),
-        broadcast_ref=True,
-    )
-    cols = ["theme_id", "brdr_relevant_distance"]
-    key = cols + ["brdr_area", "brdr_sym_diff_area_index", "brdr_nr_references"]
-    f_rows = sorted(map(tuple, fused.select(*key).collect()))
-    b_rows = sorted(
-        map(tuple, small_part.unionByName(big_part).select(*key).collect())
-    )
-    assert f_rows == b_rows
-    assert len(f_rows) == 2 * len(distance_grid(max_rd, fine)) + len(
-        distance_grid(max_rd, coarse)
-    )
+
+    def sweep(th, **kw):
+        return evaluate(
+            spark, th, refs, max_rd=max_rd, min_stable=1, broadcast_ref=True, **kw
+        ).collect()
+
+    fused = sweep(themes, auto_step=True)
+    small_part = sweep(themes.where(F.col("theme_id") != "t_big"), step=fine)
+    big_part = sweep(themes.where(F.col("theme_id") == "t_big"), step=coarse)
+    assert sorted(fused) == sorted(small_part + big_part)
+    swept = {}
+    for r in fused:
+        swept[r.theme_id] = swept.get(r.theme_id, 0) + r.brdr_prediction_score
+    assert swept == {
+        "t_small": len(distance_grid(max_rd, fine)),
+        "t_small2": len(distance_grid(max_rd, fine)),
+        "t_big": len(distance_grid(max_rd, coarse)),
+    }

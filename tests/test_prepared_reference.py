@@ -84,6 +84,30 @@ def test_one_theme_align_runs_one_job(spark):
     assert sorted(rows) == sorted(align(spark, one, ref, CFG, broadcast_ref=False).collect())
 
 
+@pytest.mark.parametrize("auto_step", [False, True])
+def test_one_theme_evaluate_runs_one_job(spark, auto_step):
+    """The feature aligner's click, a one-feature ``evaluate(max_rd=5,
+    step=0.1)``, runs only the theme collect on a warmed reference: the
+    kernel sweeps and scores the theme in the driver (with ``auto_step``
+    its area too) and the result is a local relation."""
+    from brdrq_spark.operators.evaluate import evaluate
+
+    th, ref = _tables(spark)
+    one = th.where(F.col("theme_id") == th.first().theme_id)
+
+    def run(broadcast_ref=True):
+        return evaluate(
+            spark, one, ref, max_rd=5.0, step=0.1, auto_step=auto_step,
+            broadcast_ref=broadcast_ref,
+        ).collect()
+
+    run()
+    rows = []
+    jobs = _job_ids(spark, f"brdrq_one_theme_evaluate_{auto_step}", lambda: rows.extend(run()))
+    assert len(jobs) == 1, jobs
+    assert rows and sorted(rows) == sorted(run(broadcast_ref=False))
+
+
 def test_theme_side_runs_once_per_align(spark):
     """The theme plan runs exactly once per align call, on the in-driver
     (one theme) and the collected (several themes) paths: a Python UDF
@@ -123,8 +147,8 @@ def test_checkpointed_align_one_theme_shards_align_in_driver_threads(
     threads = []
     real = align_mod._make_kernel
 
-    def in_step(cfg, res):
-        kernel = real(cfg, res)
+    def in_step(*args):
+        kernel = real(*args)
 
         def run(pdf):
             threads.append(threading.current_thread())
