@@ -76,32 +76,34 @@ def geo_features_udf(res: int, dilate: float = 0.0):
     return _feat
 
 
-def sym_diff_area_udf():
-    """pandas UDF factory: symmetrical-difference area (m²) between two
-    WKB polygons per row. (Factory, not module-level decorator — the
-    type-string parse needs an active SparkSession, absent on workers.)
+def sym_diff_area(a_wkb, b_wkb) -> float:
+    """Symmetrical-difference area (m²) between two WKB polygons (None
+    reads as empty). One scanbeam table yields both difference
+    directions; symdiff area = their sum (disjoint pieces).
 
     Drives the equality_by_id evaluation (reference label enum
     docs/autocorrectborders.md:209, consumed at brdrq_utils.py:1266-1271):
-    the aligned result is compared against the theme's identically-keyed
-    reference parcel. One scanbeam table yields both difference
-    directions; symdiff area = their sum (disjoint pieces)."""
+    evaluate's kernel compares the aligned result against the theme's
+    identically-keyed reference parcel (``evaluate.Sweep``)."""
     from brdrq_spark.geom.clip import boolean_op_multi
 
+    ra = rings_from_wkb(a_wkb) if a_wkb is not None else []
+    rb = rings_from_wkb(b_wkb) if b_wkb is not None else []
+    if not ra and not rb:
+        return 0.0
+    if not ra or not rb:
+        return rings_area(ra) + rings_area(rb)
+    dplus, dmin = boolean_op_multi(ra, rb, ("difference", "rdifference"))
+    return rings_area(dplus) + rings_area(dmin)
+
+
+def sym_diff_area_udf():
+    """pandas UDF factory: ``sym_diff_area`` per row. (Factory, not
+    module-level decorator — the type-string parse needs an active
+    SparkSession, absent on workers.)"""
+
     def _sym(a_wkb: pd.Series, b_wkb: pd.Series) -> pd.Series:
-        out = []
-        for a, b in zip(a_wkb, b_wkb):
-            ra = rings_from_wkb(a) if a is not None else []
-            rb = rings_from_wkb(b) if b is not None else []
-            if not ra and not rb:
-                out.append(0.0)
-                continue
-            if not ra or not rb:
-                out.append(rings_area(ra) + rings_area(rb))
-                continue
-            dplus, dmin = boolean_op_multi(ra, rb, ("difference", "rdifference"))
-            out.append(rings_area(dplus) + rings_area(dmin))
-        return pd.Series(out, dtype="float64")
+        return pd.Series([sym_diff_area(a, b) for a, b in zip(a_wkb, b_wkb)], dtype="float64")
 
     return F.pandas_udf(_sym, "double")
 

@@ -118,6 +118,9 @@ from brdrq_spark.operators.candidates import (
 )
 
 _TINY = 1e-6  # m²; below = empty for relevance purposes
+# evaluate's equality_by_id: the reference id a theme claims, carried on
+# the theme row into the kernel; its candidate rows then carry ref_id
+CLAIM_COL = "_ref_key"
 
 
 def distance_grid(max_rd: float, step: float = 0.1) -> list[float]:
@@ -484,7 +487,7 @@ def _make_probe_kernel(cfg: AlignConfig, res: int, ref_bc, sweep=None):
         for pdf in batches:
             for g in probe_groups(
                 pdf, ref, res, 2.0 * max_rd * 1.01, 2.0 * max_rd,
-                ids=cfg.emit_metadata,
+                ids=cfg.emit_metadata or CLAIM_COL in pdf.columns,
             ):
                 yield kernel(g)
 
@@ -734,7 +737,7 @@ def _make_kernel(cfg: AlignConfig, res: int, sweep=None):
                 cache[key] = row  # no rd-dependent branch: reusable
             out.append(row)
         if sweep is not None:
-            return sweep.score(out, theme_wkb)
+            return sweep.score(out, theme_wkb, sweep.claimed(pdf))
         return pd.DataFrame(out)
 
     return kernel
@@ -759,9 +762,12 @@ def prepare_reference(
 
 
 def _theme_rows(theme_df: DataFrame) -> DataFrame:
-    """The kernel's theme side: (theme_id, geom_wkb). ``align`` collects
-    it when it fits ``_fits_broadcast``."""
-    return theme_df.select("theme_id", "geom_wkb")
+    """The kernel's theme side: (theme_id, geom_wkb), plus evaluate's
+    claimed reference id ``CLAIM_COL`` when ``theme_df`` carries it.
+    ``align`` collects it when it fits ``_fits_broadcast``."""
+    return theme_df.select(
+        "theme_id", "geom_wkb", *[c for c in theme_df.columns if c == CLAIM_COL]
+    )
 
 
 def _balanced_slices(sizes: np.ndarray, bounds: list[int]) -> np.ndarray:
@@ -799,13 +805,16 @@ def align_candidate_rows(
     broadcast (or cell-shuffle) join plus ONE repartition by theme_id —
     no distinct, no join-back shuffles; duplicate (theme, ref) rows from
     shared cells are deduped inside the kernel. Oversized themes ship
-    their WKB on the bare row only (``max_inline_wkb_bytes``). ref_id /
-    ref_version ride only for lineage emission (``emit_metadata``)."""
+    their WKB on the bare row only (``max_inline_wkb_bytes``). ref_id
+    rides for lineage emission (``emit_metadata``, with ref_version) and
+    for evaluate's claimed id (``CLAIM_COL``)."""
     res = _cell_res(cfg)
     max_rd = max(cfg.relevant_distances)
+    themes = _theme_rows(theme_df)
     grouped = cell_join_rows(
-        spark, _theme_rows(theme_df), ref_df, "theme_id", res,
+        spark, themes, ref_df, "theme_id", res,
         2.0 * max_rd * 1.01, 2.0 * max_rd,
+        ids=CLAIM_COL in themes.columns,
         version_col=cfg.ref_version_col if cfg.emit_metadata else None,
         inline_budget=int(cfg.max_inline_wkb_bytes),
         salt=cfg.salt,

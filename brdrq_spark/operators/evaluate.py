@@ -18,16 +18,15 @@ span" — SURVEY.md §2.6 W1):
   length >= ``min_stable`` is a *prediction*, represented by its first
   (cheapest) rd; ``brdr_prediction_score`` = run length;
 * ``brdr_evaluation`` labels follow the reference enum
-  (docs/autocorrectborders.md:209, read at brdrq_utils.py:1259-1271).
-
-Only the ``ref_key_col`` by-id equality label needs Spark: a join of the
-prediction rows with the claimed reference geometry.
+  (docs/autocorrectborders.md:209, read at brdrq_utils.py:1259-1271),
+  ``equality_by_id`` included: the claimed reference id rides on the
+  theme row into the kernel, which finds its geometry among the theme's
+  candidates.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, replace
-from functools import cached_property
 
 import numpy as np
 import pandas as pd
@@ -35,7 +34,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from brdrq_spark.operators.align import ALIGN_SCHEMA, AlignConfig, distance_grid, run_kernel
+from brdrq_spark.functions.geo import sym_diff_area
+from brdrq_spark.operators.align import (
+    ALIGN_SCHEMA,
+    CLAIM_COL,
+    AlignConfig,
+    distance_grid,
+    run_kernel,
+)
 
 # PredictionStrategy (reference brdrq_algorithm_common.py:123-130)
 STRATEGY_ALL = "ALL"
@@ -86,31 +92,6 @@ def adaptive_grid(area: float, max_rd: float) -> tuple[float, bool]:
     return step, False
 
 
-def _broadcast_if_small(df: DataFrame, force: bool | None, cap_bytes: int = 64 << 20):
-    """Broadcast hint policy for the equality-refinement side tables:
-    ``force=True`` (caller asserts the reference is small) always
-    broadcasts, ``force=False`` (caller asserts it is NOT) never does —
-    a blind F.broadcast of a projection that keeps geometry WKB would
-    collect the whole layer to the driver at cluster scale — and the
-    ``None`` default consults the optimizer's plan-time size estimate,
-    so small/medium layers drop the two side-join shuffles without
-    removing the shuffle-join escape hatch for layers that don't fit.
-    The cap is deliberately conservative (64 MB): the estimate for a
-    file scan is the ON-DISK compressed size, and decoded WKB inflates
-    several-fold on the driver — a cap near the broadcast hard limit
-    would OOM default-sized drivers on layers it nominally admits."""
-    if force is True:
-        return F.broadcast(df)
-    if force is False:
-        return df
-    from brdrq_spark.operators.candidates import plan_size_bytes
-
-    size = plan_size_bytes(df)
-    if size is not None and size <= cap_bytes:
-        return F.broadcast(df)
-    return df
-
-
 def diff_metrics_series(aligned: DataFrame) -> DataFrame:
     """G2: the per-(theme, rd) difference-metric series behind the
     FeatureAligner plot (reference
@@ -154,8 +135,7 @@ class Sweep:
     theme's rows, in rd order, into its prediction rows, and
     ``blocked`` is the row of a theme refused by admission control.
     ``grids`` maps each ``adaptive_grid`` step (None without
-    ``auto_step``) to its grid; ``keep_aligned`` carries ORIGINAL's
-    unswapped results in ``_aligned_wkb`` for the by-id equality test."""
+    ``auto_step``) to its grid."""
 
     grids: dict
     max_rd: float
@@ -165,12 +145,8 @@ class Sweep:
     strategy: str
     full_reference: str
     eq_tol: float
-    keep_aligned: bool
 
-    @cached_property
-    def schema(self) -> T.StructType:
-        extra = [T.StructField("_aligned_wkb", T.BinaryType())] if self.keep_aligned else []
-        return T.StructType(EVALUATE_SCHEMA.fields + extra)
+    schema = EVALUATE_SCHEMA
 
     def grid(self, area: float) -> list[float] | None:
         """The theme's distance grid, or None when ``auto_step`` blocks it."""
@@ -188,10 +164,30 @@ class Sweep:
         row.update(theme_id=theme_id, brdr_evaluation="blocked_by_area")
         return pd.DataFrame([row], dtype=object)
 
-    def score(self, rows: list[dict], theme_wkb) -> pd.DataFrame:
+    @staticmethod
+    def claimed(pdf: pd.DataFrame) -> list[bytes]:
+        """The geometries of the reference id the theme claims
+        (``CLAIM_COL``), looked up by ``ref_id`` among all of the
+        theme's candidate rows, before admission control caps them.
+
+        A claimed reference that is not a candidate cannot be equal to
+        an unchanged result: it lies more than 2·max_rd from the
+        theme's bbox, so it is disjoint from the result, and their
+        sym-diff area is the sum of both areas, which stays within
+        ``eq_tol`` only for empty or near-empty geometries."""
+        if CLAIM_COL not in pdf.columns:
+            return []
+        key = pdf[CLAIM_COL].iloc[0]
+        if pd.isna(key):
+            return []
+        hit = (pdf["ref_id"] == key) & pdf["ref_wkb"].notna()
+        return list(dict.fromkeys(bytes(w) for w in pdf["ref_wkb"][hit]))
+
+    def score(self, rows: list[dict], theme_wkb, claimed: list[bytes]) -> pd.DataFrame:
         """Stability runs (gaps and islands over the sym-diff index),
         predictions, labels, the full-reference strategy, the rank by
-        score then rd, and ORIGINAL's swap, for one theme's rows."""
+        score then rd, and ORIGINAL's swap, for one theme's rows;
+        ``claimed`` holds the geometries of its claimed reference id."""
         sdai = np.array([r["brdr_sym_diff_area_index"] for r in rows])
         # a run starts at rd 0 and wherever the index moves by more than
         # eps (NaN counts as a move)
@@ -210,10 +206,15 @@ class Sweep:
             boost = 1.5 if self.full_reference == FULL_REF_PREFER and full else 1.0
             if r["brdr_sym_diff_area_index"] < 1e-9:
                 # the input already coincided with a full-reference
-                # composition: full-actual, and its area is the total of
-                # the references adopted whole
+                # composition (full-actual, and its area is the total of
+                # the references adopted whole) and/or with the claimed
+                # reference (the aligned result, before ORIGINAL's swap)
                 eq_full = full and abs(r["brdr_area"] - r["brdr_ref_full_area"]) <= self.eq_tol
-                label = "equality_by_full_reference" if eq_full else "no_change"
+                eq_id = any(sym_diff_area(r["result_wkb"], w) <= self.eq_tol for w in claimed)
+                if eq_id:
+                    label = "equality_by_id_and_full_reference" if eq_full else "equality_by_id"
+                else:
+                    label = "equality_by_full_reference" if eq_full else "no_change"
             else:
                 label = "prediction_unique" if count == 1 else "to_check_prediction_multi"
             preds.append(dict(
@@ -231,8 +232,6 @@ class Sweep:
             # (reference brdrq_algorithm_common.py:123-130: "the ORIGINAL
             # if there are multiple predictions")
             for p in preds:
-                if self.keep_aligned:
-                    p["_aligned_wkb"] = p["result_wkb"]
                 p["result_wkb"] = theme_wkb
         return pd.DataFrame(preds, columns=self.schema.names)
 
@@ -268,7 +267,8 @@ def evaluate(
 
     * ``equality_by_id``: ``ref_key_col`` names a theme column carrying
       the claimed reference id; the label fires when the aligned result
-      equals that reference feature (sym-diff area <= ``eq_tol`` m²);
+      equals a reference feature with that id among the theme's
+      candidates (sym-diff area <= ``eq_tol`` m²; see ``Sweep.claimed``);
     * ``equality_by_full_reference``: the result is full-actual AND its
       area equals the total area of the references adopted whole
       (|brdr_area - brdr_ref_full_area| <= ``eq_tol``) — i.e. the input
@@ -287,8 +287,11 @@ def evaluate(
 
     Execution: ``align``'s plan (``align.run_kernel``) with the scoring
     inside the kernel (``Sweep``), so a theme's sweep never leaves its
-    task; a one-theme request runs one job. Only the ``ref_key_col``
-    by-id join runs in Spark, over the prediction rows.
+    task and a one-theme request runs one job, with or without
+    ``ref_key_col``. The claimed id rides on the theme row
+    (``CLAIM_COL``), the candidate rows carry their ``ref_id``s, and
+    the kernel compares the aligned result with the claimed candidate's
+    geometry (``functions.geo.sym_diff_area``).
     """
     grid = distance_grid(max_rd, adaptive_grid(0.0, max_rd)[0] if auto_step else step)
     cfg = replace(config or AlignConfig(), relevant_distances=grid)
@@ -300,53 +303,10 @@ def evaluate(
         # were sized for
         steps = {adaptive_grid(a, max_rd)[0] for a in (0.0, MAX_AREA_OPTIMIZATION + 1.0)}
         grids = {s: distance_grid(max(grid), s) if len(steps) > 1 else grid for s in steps}
-    by_id = ref_key_col is not None and ref_key_col in theme_df.columns
+    if ref_key_col is not None and ref_key_col in theme_df.columns:
+        theme_df = theme_df.withColumn(CLAIM_COL, F.col(ref_key_col))
     sweep = Sweep(
         grids, max_rd, eps, min_stable, max_predictions, prediction_strategy,
         full_reference_strategy, eq_tol,
-        keep_aligned=by_id and prediction_strategy == STRATEGY_ORIGINAL,
     )
-    out = run_kernel(spark, theme_df, ref_df, cfg, broadcast_ref, sweep)
-    if not by_id:
-        return out
-    from brdrq_spark.functions.geo import sym_diff_area_udf
-
-    # both side tables join the prediction rows; broadcast them when the
-    # caller or the size estimate says they fit (_broadcast_if_small) so
-    # the path adds no shuffle exchanges on small/medium layers while an
-    # explicit broadcast_ref=False keeps the shuffled join for layers
-    # whose WKB payload cannot sit on the driver
-    keys = _broadcast_if_small(
-        theme_df.select("theme_id", F.col(ref_key_col).alias("_ref_key")),
-        broadcast_ref,
-    )
-    refgeo = _broadcast_if_small(
-        ref_df.select(
-            F.col("ref_id").alias("_ref_key"), F.col("geom_wkb").alias("_ref_geom")
-        ),
-        broadcast_ref,
-    )
-    aligned = (
-        F.coalesce(F.col("_aligned_wkb"), F.col("result_wkb"))
-        if sweep.keep_aligned
-        else F.col("result_wkb")
-    )
-    eq_id = F.col("_ref_geom").isNotNull() & (
-        sym_diff_area_udf()(aligned, F.col("_ref_geom")) <= F.lit(eq_tol)
-    )
-    label = F.col("brdr_evaluation")
-    return (
-        out.join(keys, "theme_id", "left")
-        .join(refgeo, "_ref_key", "left")
-        .withColumn(
-            "brdr_evaluation",
-            F.when(
-                (F.col("brdr_sym_diff_area_index") < 1e-9) & eq_id,
-                F.when(
-                    label == "equality_by_full_reference",
-                    F.lit("equality_by_id_and_full_reference"),
-                ).otherwise(F.lit("equality_by_id")),
-            ).otherwise(label),
-        )
-        .drop("_ref_key", "_ref_geom", "_aligned_wkb")
-    )
+    return run_kernel(spark, theme_df, ref_df, cfg, broadcast_ref, sweep)

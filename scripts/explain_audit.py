@@ -150,14 +150,10 @@ def main() -> None:
         f"{t.count('Exchange') - t.count('BroadcastExchange')}"
     )
 
-    # 8. evaluate with a claimed reference id: the kernel scores the
-    # sweep, so the only operators after it are the two by-id joins over
-    # the prediction rows and the sym-diff UDF. With broadcast_ref unset
-    # the side tables consult the optimizer's size estimate
-    # (_broadcast_if_small): small/medium layers join as BROADCAST joins
-    # (no shuffle exchange), while an explicit broadcast_ref=False keeps
-    # the shuffled join for reference layers whose WKB cannot sit on the
-    # driver
+    # 8. evaluate with a claimed reference id: the claim rides on the
+    # theme row into the kernel, which finds the claimed geometry among
+    # the theme's candidates and scores the sweep, so the plan is
+    # align's plan — one MapInPandas, no join, sym-diff UDF or exchange
     from brdrq_spark.operators.evaluate import evaluate
 
     th_keyed = th.withColumn("claimed_ref", F_lit_ref(th))
@@ -167,15 +163,14 @@ def main() -> None:
             broadcast_ref=None, ref_key_col="claimed_ref",
         )
     )
-    section("evaluate — by-id equality joins over the prediction rows", plan)
+    section("evaluate — by-id equality scored in the kernel", plan)
     t = tree(plan)
     n_win = len(re.findall(r"\bWindow \(", t))
     print(
-        f"\nWindow nodes: {n_win} (the sweep is scored "
-        f"in the kernel); BroadcastHashJoin: {t.count('BroadcastHashJoin')} "
-        f"(claimed id, claimed geometry; no caller hint); python runners: "
-        f"{t.count('InPandas') + t.count('ArrowEvalPython')} (kernel, sym-diff "
-        f"UDF); shuffle exchanges: {t.count('Exchange') - t.count('BroadcastExchange')}"
+        f"\nMapInPandas nodes: {t.count('MapInPandas')} (the kernel); "
+        f"joins: {t.count('Join')}; ArrowEvalPython: {t.count('ArrowEvalPython')}; "
+        f"Window nodes: {n_win}; shuffle exchanges: "
+        f"{t.count('Exchange') - t.count('BroadcastExchange')}"
     )
 
     # 9. auto_step sweep: each theme's step (or its blocked_by_area row)

@@ -234,6 +234,46 @@ def test_evaluate_original_strategy_restores_source(spark, small_tables):
             assert bytes(r.result_wkb) == src[r.theme_id]
 
 
+@pytest.mark.parametrize("broadcast_ref", [True, False])
+def test_evaluate_by_id_looks_the_claim_up_by_id(spark, broadcast_ref):
+    """equality_by_id finds the claimed id among the theme's candidate
+    rows: a claim on the second of two parcels with the same geometry
+    fires (the kernel dedupes candidates by WKB, keeping the first id),
+    and an id held by two parcels gives one row per prediction."""
+    import numpy as np
+    import pandas as pd
+
+    from brdrq_spark.geom import rings_to_wkb
+
+    def square(x0):
+        o = np.array([170000.0 + x0, 170000.0])
+        return rings_to_wkb([np.array([[0.0, 0], [10, 0], [10, 10], [0, 10]]) + o])
+
+    ref = spark.createDataFrame(pd.DataFrame([
+        {"ref_id": "A", "geom_wkb": square(0.0)},
+        {"ref_id": "B", "geom_wkb": square(0.0)},
+        {"ref_id": "D", "geom_wkb": square(40.0)},
+        {"ref_id": "D", "geom_wkb": square(50.0)},
+    ]))
+    th = spark.createDataFrame(pd.DataFrame([
+        {"theme_id": "same_geometry", "geom_wkb": square(0.0), "claim": "B"},
+        {"theme_id": "shared_id", "geom_wkb": square(40.0), "claim": "D"},
+        {"theme_id": "wrong_id", "geom_wkb": square(40.0), "claim": "A"},
+    ]))
+    rows = evaluate(
+        spark, th, ref, max_rd=1.0, step=0.5, broadcast_ref=broadcast_ref,
+        ref_key_col="claim",
+    ).collect()
+    labels = {}
+    for r in rows:
+        labels.setdefault(r.theme_id, []).append(r.brdr_evaluation)
+    assert labels == {
+        "same_geometry": ["equality_by_id_and_full_reference"],
+        "shared_id": ["equality_by_id_and_full_reference"],
+        "wrong_id": ["equality_by_full_reference"],
+    }
+
+
 def test_lsh_degenerate_bucket_capped(spark):
     """A bucket of thousands of identical docs must not go quadratic:
     max_bucket_size keeps the bucket's first ids, so the pairs are

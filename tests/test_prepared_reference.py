@@ -84,26 +84,36 @@ def test_one_theme_align_runs_one_job(spark):
     assert sorted(rows) == sorted(align(spark, one, ref, CFG, broadcast_ref=False).collect())
 
 
-@pytest.mark.parametrize("auto_step", [False, True])
-def test_one_theme_evaluate_runs_one_job(spark, auto_step):
+@pytest.mark.parametrize(
+    "auto_step, ref_key_col",
+    [(False, None), (True, None), (False, "claimed_ref")],
+    ids=["False", "True", "by_id"],
+)
+def test_one_theme_evaluate_runs_one_job(spark, auto_step, ref_key_col):
     """The feature aligner's click, a one-feature ``evaluate(max_rd=5,
     step=0.1)``, runs only the theme collect on a warmed reference: the
     kernel sweeps and scores the theme in the driver (with ``auto_step``
-    its area too) and the result is a local relation."""
+    its area too, with ``ref_key_col`` its by-id label) and the result is
+    a local relation."""
     from brdrq_spark.operators.evaluate import evaluate
 
     th, ref = _tables(spark)
+    # each theme claims the parcel it was jittered from
+    th = th.withColumn("claimed_ref", F.concat(F.lit("44000"), "src_parcel"))
     one = th.where(F.col("theme_id") == th.first().theme_id)
 
     def run(broadcast_ref=True):
         return evaluate(
             spark, one, ref, max_rd=5.0, step=0.1, auto_step=auto_step,
-            broadcast_ref=broadcast_ref,
+            broadcast_ref=broadcast_ref, ref_key_col=ref_key_col,
         ).collect()
 
     run()
     rows = []
-    jobs = _job_ids(spark, f"brdrq_one_theme_evaluate_{auto_step}", lambda: rows.extend(run()))
+    jobs = _job_ids(
+        spark, f"brdrq_one_theme_evaluate_{auto_step}_{ref_key_col}",
+        lambda: rows.extend(run()),
+    )
     assert len(jobs) == 1, jobs
     assert rows and sorted(rows) == sorted(run(broadcast_ref=False))
 
