@@ -513,10 +513,12 @@ def _stitch_events_small(K) -> list:
         kl_hi = int(kl_hi); kr_hi = int(kr_hi)
         if kl_lo == kr_lo and kl_hi == kr_hi:
             continue  # zero width at snap resolution — nothing to bound
-        if kl_lo < kr_lo:
+        # a snapped crossing y can leave l > r at an edge: its horizontal
+        # still closes the chain, and the level sign gives its direction
+        if kl_lo != kr_lo:
             deltas[kylo][kl_lo] += 1
             deltas[kylo][kr_lo] -= 1
-        if kl_hi < kr_hi:
+        if kl_hi != kr_hi:
             deltas[kyhi][kl_hi] -= 1
             deltas[kyhi][kr_hi] += 1
         # sides: left goes down (top->bottom), right goes up (CCW interior left)
@@ -568,8 +570,9 @@ def _stitch_events_vec(K) -> np.ndarray:
     # --- horizontal interval cancellation per y ---------------------------
     # bottom of a trapezoid: interior above => rightward (+1)
     # top: interior below => leftward (-1); overlaps cancel.
-    b = kl_lo < kr_lo
-    t = kl_hi < kr_hi
+    # l > r (a snapped crossing y) still bounds: the level sign orients it
+    b = kl_lo != kr_lo
+    t = kl_hi != kr_hi
     nb, nt = int(b.sum()), int(t.sum())
     if nb + nt:
         ev_y = np.concatenate([kylo[b], kylo[b], kyhi[t], kyhi[t]])

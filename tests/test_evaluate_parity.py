@@ -1,7 +1,10 @@
 """evaluate's output pinned row for row: sha256 digests of the sorted
 rows, all columns (and the schema), of the sweep scorer that ran as
 Spark window algebra over the align output, before the scoring moved
-into the align kernel.
+into the align kernel. The ``grid`` digests were re-captured once since,
+when the stitch stopped dropping rings at inverted crossings
+(``geom/clip.py``); the in-kernel scorer as it was before equality_by_id
+moved into the kernel, with only that fix, gives the same digests.
 
 The 64-theme set on ``reference_parcels(16, 16)`` holds 59 jittered
 parcels (each claiming its source parcel through ``claimed_ref``), an
@@ -186,41 +189,41 @@ def run_case(spark, frames: dict, name: str):
 
 DIGESTS: dict[str, str] = {
     "grid-ALL-NO--1-nokey-join":
-        "800c0485c0a4a22618c72bb3ad7bac2faf9681f615eefe279a806ee36fdefd3b",
+        "c456240831f8f4117d38027b7513001c4ee2ced344fdda47e795510fbe27f679",
     "grid-ALL-NO--1-nokey-prepared":
-        "800c0485c0a4a22618c72bb3ad7bac2faf9681f615eefe279a806ee36fdefd3b",
+        "c456240831f8f4117d38027b7513001c4ee2ced344fdda47e795510fbe27f679",
     "grid-ALL-NO--1-nokey-rule":
-        "800c0485c0a4a22618c72bb3ad7bac2faf9681f615eefe279a806ee36fdefd3b",
+        "c456240831f8f4117d38027b7513001c4ee2ced344fdda47e795510fbe27f679",
     "grid-ALL-ONLY-1-claimed_ref-prepared":
-        "fd6c07941294bd16f9d79334c5cfe20e068d8d567b221028f0a5adb10780de68",
+        "8f4ee929520b3299ce127f5b17022022b5ebe323641d139cdd17dc6084bae1b6",
     "grid-ALL-PREFER-4-claimed_ref-prepared":
-        "c55fa2c09554d025fb585e984f2adec13c13e36dddf618f00021ef86bdf3b2c2",
+        "db75210977e5f1024f41bff8d9065480820161bf12d3bc6d1dde63b6f940eadf",
     "grid-BEST-NO-1-claimed_ref-prepared":
-        "800c0485c0a4a22618c72bb3ad7bac2faf9681f615eefe279a806ee36fdefd3b",
+        "c456240831f8f4117d38027b7513001c4ee2ced344fdda47e795510fbe27f679",
     "grid-BEST-ONLY-4-nokey-prepared":
-        "fd6c07941294bd16f9d79334c5cfe20e068d8d567b221028f0a5adb10780de68",
+        "8f4ee929520b3299ce127f5b17022022b5ebe323641d139cdd17dc6084bae1b6",
     "grid-BEST-PREFER--1-claimed_ref-prepared":
-        "c55fa2c09554d025fb585e984f2adec13c13e36dddf618f00021ef86bdf3b2c2",
+        "db75210977e5f1024f41bff8d9065480820161bf12d3bc6d1dde63b6f940eadf",
     "grid-ORIGINAL-NO-4-claimed_ref-prepared":
-        "800c0485c0a4a22618c72bb3ad7bac2faf9681f615eefe279a806ee36fdefd3b",
+        "c456240831f8f4117d38027b7513001c4ee2ced344fdda47e795510fbe27f679",
     "grid-ORIGINAL-ONLY--1-claimed_ref-prepared":
-        "fd6c07941294bd16f9d79334c5cfe20e068d8d567b221028f0a5adb10780de68",
+        "8f4ee929520b3299ce127f5b17022022b5ebe323641d139cdd17dc6084bae1b6",
     "grid-ORIGINAL-PREFER-1-nokey-prepared":
-        "c55fa2c09554d025fb585e984f2adec13c13e36dddf618f00021ef86bdf3b2c2",
+        "db75210977e5f1024f41bff8d9065480820161bf12d3bc6d1dde63b6f940eadf",
     "grid-ORIGINAL-PREFER-4-claimed_ref-join":
-        "c55fa2c09554d025fb585e984f2adec13c13e36dddf618f00021ef86bdf3b2c2",
+        "db75210977e5f1024f41bff8d9065480820161bf12d3bc6d1dde63b6f940eadf",
     "grid-ORIGINAL-PREFER-4-claimed_ref-rule":
-        "c55fa2c09554d025fb585e984f2adec13c13e36dddf618f00021ef86bdf3b2c2",
+        "db75210977e5f1024f41bff8d9065480820161bf12d3bc6d1dde63b6f940eadf",
     "grid-ORIGINAL-min_stable_1-join":
-        "bc1ee908021d53d34a2adcd8b73952998be509ccc6029695529b7bcb5f7312f0",
+        "b4c456eb38b60059fd11041b1ea277373da6c3de6f365ac84dd0abdafd959128",
     "grid-ORIGINAL-min_stable_1-prepared":
-        "bc1ee908021d53d34a2adcd8b73952998be509ccc6029695529b7bcb5f7312f0",
+        "b4c456eb38b60059fd11041b1ea277373da6c3de6f365ac84dd0abdafd959128",
     "grid-auto_step-BEST-join":
-        "70bd2fca6a39e211fa58e3e1f2bfa6397e388ef8e09a17d4790ee5c18eb0e15a",
+        "9f6d912bd7085e222ecb04529e581f7acd6def0f5805f1d3064c45e3a20e25c2",
     "grid-auto_step-BEST-prepared":
-        "70bd2fca6a39e211fa58e3e1f2bfa6397e388ef8e09a17d4790ee5c18eb0e15a",
+        "9f6d912bd7085e222ecb04529e581f7acd6def0f5805f1d3064c45e3a20e25c2",
     "grid-auto_step-BEST-rule":
-        "70bd2fca6a39e211fa58e3e1f2bfa6397e388ef8e09a17d4790ee5c18eb0e15a",
+        "9f6d912bd7085e222ecb04529e581f7acd6def0f5805f1d3064c45e3a20e25c2",
     "one-blocked-auto_step":
         "26dd170e5a80612b0658e4cc1cc1e7ead7cace9107197d816f7e3274080663c0",
     "one-copy-auto_step":
