@@ -55,8 +55,8 @@ def _ops(spark, ref, th, ln):
 PER_OPERATOR_PLANS = {
     "knn": "3e6af57ea73b087686f088a650d330a7b5c931392595bca6fc35397acd2e37f5",
     "lines": "ee859aa39e389df5567e8de5940debb4a634276679f19c12c89dd0ab1600a718",
-    "topology": "6c19a9964b5d68999e79a756c835b7cc572eddc7a13e8a2fa98994b656db86b8",
-    "network": "edd053373aa56e4914bfa08da1b2373f82a65932340c50622ba0ecb721ce2d37",
+    "topology": "1fe5ad7808d2fdfed39c57d4d22627f8368cb4c415ad17342c5df26f41485533",
+    "network": "f4ebb13f4747b7efd17c5fc4faa555a154e256c1e92c192f6b89236b186794ba",
 }
 
 
