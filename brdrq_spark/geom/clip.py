@@ -999,8 +999,16 @@ def boolean_op(
         return []
     if not a_rings and op in ("intersection", "difference"):
         return []
-    traps = _trapezoids(a_rings, b_rings, op)
-    return _stitch(traps)
+    return _stitch_op(_trap_table(a_rings, b_rings), op)
+
+
+def _stitch_op(tbl, op: str) -> list[np.ndarray]:
+    """``op``'s rings from a ``_trap_table`` result. A symdiff is the
+    stitched A−B plus the stitched B−A: the two touch at crossings, and
+    one stitch over both welds them there into rings that lose area."""
+    if op == "symdiff":
+        return _stitch_op(tbl, "difference") + _stitch_op(tbl, "rdifference")
+    return _stitch(_traps_from_table(tbl, op))
 
 
 def boolean_op_multi(
@@ -1010,15 +1018,15 @@ def boolean_op_multi(
     table — edge collection, crossing enumeration and winding cumsums
     (the expensive ~60% of a pass) run once; each op adds only run
     extraction + stitching. The alignment kernel uses this for
-    intersection+uncovered per candidate pair and for the
-    dplus/dmin/symdiff triple per result."""
+    intersection+uncovered per candidate pair and for the dplus/dmin
+    pair per result."""
     for op in ops:
         if op not in _OPS:
             raise ValueError(f"unknown op {op!r}")
     if not a_rings and not b_rings:
         return [[] for _ in ops]
     tbl = _trap_table(a_rings, b_rings)
-    return [_stitch(_traps_from_table(tbl, op)) for op in ops]
+    return [_stitch_op(tbl, op) for op in ops]
 
 
 def normalize(rings: list[np.ndarray]) -> list[np.ndarray]:

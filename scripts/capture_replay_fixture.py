@@ -9,6 +9,12 @@ compact npz fixture to tests/fixtures/boolop_replay.npz that
 tests/test_boolop_replay.py replays on every suite run.
 
 Usage: python scripts/capture_replay_fixture.py [per_stratum]
+       python scripts/capture_replay_fixture.py --recompute OP [OP ...]
+
+``--recompute`` re-pins only the outputs of the committed calls of the
+named ops (a declared change of those ops' output); every input and
+every other call stays as captured. A fresh capture resamples the live
+stream, which moves with every kernel change.
 """
 
 from __future__ import annotations
@@ -80,7 +86,19 @@ def decode(path: str):
     return calls
 
 
+def recompute(ops: set[str]) -> None:
+    from brdrq_spark.geom.clip import boolean_op
+
+    calls = decode(FIXTURE)
+    outs = [boolean_op(a, b, op) if op in ops else out for a, b, op, out in calls]
+    encode([(a, b, op) for a, b, op, _ in calls], outs, FIXTURE)
+    print(f"re-pinned {sum(op in ops for _, _, op, _ in calls)} of {len(calls)} calls")
+
+
 def main() -> None:
+    if sys.argv[1:2] == ["--recompute"]:
+        recompute(set(sys.argv[2:]))
+        return
     per_stratum = int(sys.argv[1]) if len(sys.argv) > 1 else 12
     from scripts.replay_boolop import _drive
     from brdrq_spark.geom import clip as C

@@ -679,15 +679,13 @@ CONSERVATION_SETS = {
 @pytest.mark.parametrize("name", sorted(CONSERVATION_SETS))
 def test_stitch_conserves_area_on_generated_pairs(name):
     """Every theme against its source parcel: the stitched rings of
-    intersection, difference, rdifference and union hold the area
-    identities, and each op's rings cover the area of its own
+    intersection, difference, rdifference, union and symdiff hold the
+    area identities, and each op's rings cover the area of its own
     trapezoids, so a ring the stitch drops shows up as a stitch defect,
     not a table defect. The weld moves vertices by up to 1e-4 m, a few
-    1e-3 m² on these parcels; a lost ring is square metres. The stitched
-    symdiff is not checked: A−B and B−A touch at crossings and overlap
-    by more than the weld there, and no operator stitches a symdiff."""
+    1e-3 m² on these parcels; a lost ring is square metres."""
     from brdrq_spark.geom import rings_from_wkb
-    from brdrq_spark.geom.clip import _stitch, _trap_table, _traps_from_table, trapezoid_area
+    from brdrq_spark.geom.clip import _stitch_op, _trap_table, _traps_from_table, trapezoid_area
 
     th, ref = CONSERVATION_SETS[name]()
     parcels = {rid[-len("P0000C0000"):]: w for rid, w in zip(ref.ref_id, ref.geom_wkb)}
@@ -697,16 +695,17 @@ def test_stitch_conserves_area_on_generated_pairs(name):
         a, b = rings_from_wkb(w), rings_from_wkb(parcels[src])
         tbl = _trap_table(a, b)
         area = {}
-        for op in ("intersection", "difference", "rdifference", "union"):
-            traps = _traps_from_table(tbl, op)
-            area[op] = rings_area(_stitch(traps))
-            if abs(area[op] - trapezoid_area(traps)) > tol:
-                bad.append((tid, op, area[op], trapezoid_area(traps)))
+        for op in ("intersection", "difference", "rdifference", "union", "symdiff"):
+            area[op] = rings_area(_stitch_op(tbl, op))
+            want = trapezoid_area(_traps_from_table(tbl, op))
+            if abs(area[op] - want) > tol:
+                bad.append((tid, op, area[op], want))
         i, area_a, area_b = area["intersection"], rings_area(a), rings_area(b)
         for law, err in (
             ("A∩B + A−B = A", i + area["difference"] - area_a),
             ("A∩B + B−A = B", i + area["rdifference"] - area_b),
             ("A∪B + A∩B = A + B", area["union"] + i - area_a - area_b),
+            ("A△B = (A−B) + (B−A)", area["symdiff"] - area["difference"] - area["rdifference"]),
         ):
             if abs(err) > tol:
                 bad.append((tid, law, err))
