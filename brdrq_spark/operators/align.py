@@ -34,54 +34,30 @@ candidate parcels at a time; the rd grid is looped *inside* the kernel
 so per-pair intersections are computed once and reused across distances
 (the reference recomputes per distance —
 brdrq_dockwidget_featurealigner.py:1676-1688 — we hoist). Its candidates
-come from one of two paths:
+come from ``candidates``: a probe of the reference layer's shared
+``PreparedReference`` index (``broadcast_ref=True``, or None with a
+reference within ``spark.sql.autoBroadcastJoinThreshold``), the
+cell-join plan otherwise. Both emit identical rows. On the prepared
+path a theme side whose plan-estimated size is within the same
+threshold is collected when ``align`` is called (one job); this is the
+only part of the plan ``align`` owns. Zero or one theme is aligned
+right there in the driver and returned as a local relation: collecting
+it runs no job and no longer needs the broadcast. Two or more run ONE
+``mapInPandas`` over a local scan of the collected rows, which cuts n
+rows into min(n, defaultParallelism) contiguous slices, one task each,
+without a shuffle; the rows are first reordered so that every task
+reads a similar WKB byte total (``_balanced_slices``). A ``share``
+(``checkpointed_align``'s per-shard share of the cores) coalesces runs
+of adjacent slices, still without a shuffle, so concurrent shards run
+their kernel tasks in one wave. The cutoff is one theme, not the core
+count, so the driver's serial kernel work stays one feature at any
+cluster size. Every other theme side goes to
+``candidates.candidate_groups``.
 
-* prepared (``broadcast_ref=True``, or None with a reference within
-  ``spark.sql.autoBroadcastJoinThreshold``): the reference layer is
-  collected ONCE per (reference DataFrame, cell resolution, metadata
-  columns) into a ``PreparedReference`` — a cell-sorted CSR index plus
-  bboxes and WKB in one broadcast. Repeated calls, evaluate and
-  concurrent ``checkpointed_align`` shards share the instance;
-  ``prepare_reference(...).release()`` destroys its broadcast, and
-  Spark's ContextCleaner reclaims it otherwise once the reference
-  DataFrame and every plan using it are gone. Each theme is covered,
-  probes the index and goes to the kernel; no explode, join or union.
-  The theme side's plan-estimated size, against the same threshold,
-  decides where that runs:
-  - within it, the theme columns are collected once, when ``align`` is
-    called (one job). Zero or one theme is aligned right there
-    in the driver and returned as a local relation: collecting it runs
-    no job and no longer needs the broadcast. Two or more run ONE
-    ``mapInPandas`` over a local scan of the collected rows, which cuts
-    n rows into min(n, defaultParallelism) contiguous slices, one task
-    each, without a shuffle. ``kernel_partitions`` sets the task count:
-    fewer tasks ``coalesce`` runs of adjacent slices (still no
-    shuffle); more than min(n, defaultParallelism) repartition. The
-    rows are first reordered so that every task reads a similar WKB
-    byte total (``_balanced_slices``). Concurrent
-    ``checkpointed_align`` shards each take their share of the cores
-    this way, so the shards' kernel tasks run in one wave instead of
-    queueing behind each other. The cutoff is one theme, not the core
-    count, so the driver's serial kernel work stays one feature at any
-    cluster size;
-  - above it or unknown, the theme side stays lazy: ONE ``mapInPandas``
-    over ``theme_df``, repartitioned only when it has fewer partitions
-    than cores.
-* shuffle (``broadcast_ref=False``, or a reference too large to
-  broadcast): both layers are cell-exploded and equi-joined on cell
-  (``AlignConfig.salt`` salts the join keys here), a bare row per theme
-  is unioned in, and the rows are repartitioned 4x by theme_id and
-  streamed through the kernel (``align_candidate_rows``, the same
-  ``candidates.cell_join_rows`` plan every operator's shuffle path
-  runs). Hot-cell splitting is not applied here: only a direct
-  ``cell_join_rows`` / ``candidate_groups`` call with
-  ``hot_cell_threshold`` reaches ``split_hot_cells``.
-
-Both paths feed the kernel the same candidate set, so they emit
-identical rows. ``evaluate`` runs this plan too (``run_kernel``), with
-its scoring inside the kernel: each theme's sweep becomes its
-prediction rows in the task that computed it, so a one-feature evaluate
-is one job, like a one-feature align.
+``evaluate`` runs this plan too (``run_kernel``), with its scoring
+inside the kernel: each theme's sweep becomes its prediction rows in
+the task that computed it, so a one-feature evaluate is one job, like a
+one-feature align.
 """
 
 from __future__ import annotations
@@ -110,11 +86,12 @@ from brdrq_spark.geom.coarse import snap_normalize
 from brdrq_spark.geom.clip import area_of_op
 from brdrq_spark.grid import cell_cover_bbox, pick_resolution
 from brdrq_spark.operators.candidates import (
+    INLINE_WKB_BYTES,
     _fits_broadcast,
     _prepared_path,
+    candidate_groups,
     cell_join_rows,
-    plan_partitions,
-    stream_kernel,
+    probe_stream,
 )
 
 _TINY = 1e-6  # m²; below = empty for relevance purposes
@@ -158,19 +135,6 @@ class AlignConfig:
     correction_distance: float = 0.01
     max_candidates_per_theme: int = 2000  # admission control (O5 analogue)
     nseg: int = 8  # arc segments for erosion tests (speed/precision knob)
-    # kernel-stage partition count; None = 4x defaultParallelism on the
-    # shuffle path; on the prepared path, min(n, defaultParallelism)
-    # for a collected theme side of n themes, or the theme input's own
-    # partitioning (raised to defaultParallelism) for a lazy one. On a
-    # collected side at most n tasks run; fewer than min(n,
-    # defaultParallelism) coalesce the local scan's slices without a
-    # shuffle. checkpointed_align fills it with each concurrent shard's
-    # share of the cores, on a collected theme side only (the lazy and
-    # shuffle plans keep their own). A one-theme request is aligned in
-    # the driver whatever the value. Pin it when comparing runs at
-    # different core counts so both levels see the same per-partition
-    # work (scaling evidence, BASELINE.md).
-    kernel_partitions: int | None = None
     # OD snap densification: no OD edge longer than this before snapping
     # (reference snap_max_segment_length default 2,
     # plugin/brdrq/brdrq_settings.py:294-304)
@@ -186,13 +150,6 @@ class AlignConfig:
     # (cell, hash(theme_id) % salt), reference rows replicated salt ways.
     # 0 = rely on AQE skew splitting; the prepared path has no join.
     salt: int = 0
-    # fused-plan admission (shuffle path): a theme whose cells x
-    # wkb_bytes exceeds this budget ships ids-only through the cell
-    # explode and re-joins its WKB on the theme_id key (which the kernel
-    # repartition needs anyway) — bounds shuffle amplification for
-    # huge/detailed geometries instead of duplicating a 100 KB polygon
-    # into 1000 cell rows. The prepared path explodes nothing.
-    max_inline_wkb_bytes: int = 1 << 18
     # multi_as_single_modus (reference default True,
     # brdrq_algorithm_autocorrectborders.py:192 via
     # brdrq_algorithm_common.py:97): True aligns each polygon part of a
@@ -469,31 +426,6 @@ def _finalize(parts, theme_rings, ref_ring_sets, od_part, rd: float, cfg: AlignC
     }
 
 
-def _make_probe_kernel(cfg: AlignConfig, res: int, ref_bc, sweep=None):
-    """Prepared-reference kernel: each partition of theme rows
-    (theme_id, geom_wkb) probes the broadcast index for its candidates
-    (``prepared.probe_groups``: cover at 2·max_rd·1.01, bbox distance
-    <= 2·max_rd, as the cell-join plan) and hands every theme's rows to
-    the same ``_make_kernel`` the shuffle path uses. A theme without
-    candidates gets one row with a NULL ref_wkb, as the bare row gives
-    it on the shuffle path."""
-    from brdrq_spark.operators.prepared import probe_groups
-
-    kernel = _make_kernel(cfg, res, sweep)
-    max_rd = max(cfg.relevant_distances)
-
-    def stream(batches):
-        ref = ref_bc.value
-        for pdf in batches:
-            for g in probe_groups(
-                pdf, ref, res, 2.0 * max_rd * 1.01, 2.0 * max_rd,
-                ids=cfg.emit_metadata or CLAIM_COL in pdf.columns,
-            ):
-                yield kernel(g)
-
-    return stream
-
-
 def _make_kernel(cfg: AlignConfig, res: int, sweep=None):
     """The per-theme kernel: one frame of a theme's candidate rows in,
     its rows at every relevant distance out. ``sweep`` (evaluate's
@@ -761,13 +693,24 @@ def prepare_reference(
     return PreparedReference.of(spark, ref_df, _cell_res(cfg), version_col)
 
 
-def _theme_rows(theme_df: DataFrame) -> DataFrame:
+def _theme_rows(theme_df: DataFrame, claim: bool) -> DataFrame:
     """The kernel's theme side: (theme_id, geom_wkb), plus evaluate's
-    claimed reference id ``CLAIM_COL`` when ``theme_df`` carries it.
-    ``align`` collects it when it fits ``_fits_broadcast``."""
-    return theme_df.select(
-        "theme_id", "geom_wkb", *[c for c in theme_df.columns if c == CLAIM_COL]
-    )
+    claimed reference id ``CLAIM_COL`` when ``claim``."""
+    return theme_df.select("theme_id", "geom_wkb", *([CLAIM_COL] if claim else []))
+
+
+def _candidate_plan(cfg: AlignConfig, claim: bool) -> dict:
+    """The candidate arguments of ``cfg``: cells at ``_cell_res``, cover
+    at 2·max_rd·1.01, bbox distance <= 2·max_rd; ``ref_id`` for lineage
+    (``emit_metadata``, with ``ref_version``) and for a claimed id."""
+    max_rd = max(cfg.relevant_distances)
+    return {
+        "res": _cell_res(cfg),
+        "dilate": 2.0 * max_rd * 1.01,
+        "reach": 2.0 * max_rd,
+        "ids": cfg.emit_metadata or claim,
+        "version_col": cfg.ref_version_col if cfg.emit_metadata else None,
+    }
 
 
 def _balanced_slices(sizes: np.ndarray, bounds: list[int]) -> np.ndarray:
@@ -794,33 +737,19 @@ def align_candidate_rows(
     cfg: AlignConfig,
     broadcast_ref: bool | None = None,
 ):
-    """Pre-kernel half of ``align``'s shuffle path: the cell-join
-    candidate plan (``candidates.cell_join_rows``), returned as
-    (grouped_rows, res). Exposed separately so benchmarks can time the
+    """Pre-kernel half of ``align``'s cell-join path: the candidate rows
+    of ``candidates.cell_join_rows`` with align's arguments, returned as
+    (rows, res). Exposed separately so benchmarks can time the
     relational stage apart from the geometry kernel;
     ``broadcast_ref=True`` here only hints a broadcast join (the
-    prepared path of ``align`` does not run this plan).
-
-    Both WKBs ride through the cell explode, so the whole job is ONE
-    broadcast (or cell-shuffle) join plus ONE repartition by theme_id —
-    no distinct, no join-back shuffles; duplicate (theme, ref) rows from
-    shared cells are deduped inside the kernel. Oversized themes ship
-    their WKB on the bare row only (``max_inline_wkb_bytes``). ref_id
-    rides for lineage emission (``emit_metadata``, with ref_version) and
-    for evaluate's claimed id (``CLAIM_COL``)."""
-    res = _cell_res(cfg)
-    max_rd = max(cfg.relevant_distances)
-    themes = _theme_rows(theme_df)
-    grouped = cell_join_rows(
-        spark, themes, ref_df, "theme_id", res,
-        2.0 * max_rd * 1.01, 2.0 * max_rd,
-        ids=CLAIM_COL in themes.columns,
-        version_col=cfg.ref_version_col if cfg.emit_metadata else None,
-        inline_budget=int(cfg.max_inline_wkb_bytes),
-        salt=cfg.salt,
-        broadcast_ref=broadcast_ref,
+    prepared path of ``align`` does not run this plan)."""
+    claim = CLAIM_COL in theme_df.columns
+    plan = _candidate_plan(cfg, claim)
+    rows = cell_join_rows(
+        spark, _theme_rows(theme_df, claim), ref_df, "theme_id", **plan,
+        inline_budget=INLINE_WKB_BYTES, salt=cfg.salt, broadcast_ref=broadcast_ref,
     )
-    return grouped, res
+    return rows, plan["res"]
 
 
 def align(
@@ -858,64 +787,54 @@ def run_kernel(
     cfg: AlignConfig,
     broadcast_ref: bool | None,
     sweep=None,
+    share: int | None = None,
 ) -> DataFrame:
-    """``align``'s plan with the kernel ``_make_kernel(cfg, res, sweep)``:
-    the same path choice (one theme in the driver, collected, lazy, or
-    shuffle) for ``align`` and evaluate."""
+    """``align``'s plan with the kernel ``_make_kernel(cfg, res, sweep)``,
+    for ``align`` and evaluate: a theme side collected on the prepared
+    path runs here, in at most ``share`` tasks (see "Execution shape"
+    above); any other goes to ``candidates.candidate_groups``."""
     schema = ALIGN_SCHEMA if sweep is None else sweep.schema
     # CRS guard: one defined meter CRS for both layers (reference
     # brdrq_utils.py:1498-1502, 1551-1555)
     from brdrq_spark.functions.crs import require_same_crs
 
     require_same_crs(cfg.crs, cfg.ref_crs if cfg.ref_crs is not None else cfg.crs)
-    par = spark.sparkContext.defaultParallelism
-    if _prepared_path(spark, ref_df, broadcast_ref):
-        prepared = prepare_reference(spark, ref_df, cfg)
-        themes = _theme_rows(theme_df)
-        kernel = _make_probe_kernel(cfg, _cell_res(cfg), prepared.broadcast, sweep)
-        if _fits_broadcast(spark, themes):
-            # a small theme side is read once, now, in one job
-            collected = themes.toPandas()
-            if len(collected) <= 1:
-                # one feature: align it here — a Python task would cost
-                # more than the kernel — and return a local relation
-                # (createDataFrame maps pandas columns by position)
-                out = list(kernel([collected]))
-                return spark.createDataFrame(
-                    out[0][schema.names] if out and len(out[0]) else [], schema
-                )
-            # a local scan cuts n rows into min(n, defaultParallelism)
-            # contiguous slices, one task each: no shuffle needed to fill
-            # the cores. Fewer slices coalesce runs of adjacent ones (a
-            # narrow dependency); more need a shuffle. Kernel time grows
-            # with the geometry, so order the rows to give every task a
-            # similar WKB byte total.
-            n = len(collected)
-            scan = min(n, par)
-            slices = min(cfg.kernel_partitions or scan, n)
-            if slices <= scan:
-                # coalesce task g reads scan slices [g*scan/slices, ...),
-                # and scan slice j holds rows [j*n/scan, ...)
-                bounds = [g * scan // slices * n // scan for g in range(slices + 1)]
-                sizes = collected["geom_wkb"].map(lambda b: len(b) if b else 0)
-                collected = collected.iloc[_balanced_slices(sizes.to_numpy(), bounds)]
-            themes = spark.createDataFrame(collected, themes.schema)
-            if slices < scan:
-                themes = themes.coalesce(slices)
-            elif slices > scan:
-                themes = themes.repartition(slices)
-            return themes.mapInPandas(kernel, schema=schema)
-        # the kernel stage is sized from its input: spread an
-        # under-partitioned theme table over the cores, as the shuffle
-        # path's theme side does
-        if not cfg.kernel_partitions and plan_partitions(themes) < par:
-            themes = themes.repartition(par)
-        if cfg.kernel_partitions:
-            themes = themes.repartition(cfg.kernel_partitions)
-        return themes.mapInPandas(kernel, schema=schema)
-
-    grouped, res = align_candidate_rows(spark, theme_df, ref_df, cfg, broadcast_ref)
-    return stream_kernel(
-        grouped, "theme_id", _make_kernel(cfg, res, sweep), schema,
-        cfg.kernel_partitions or par * 4,
-    )
+    claim = CLAIM_COL in theme_df.columns
+    themes = _theme_rows(theme_df, claim)
+    plan = _candidate_plan(cfg, claim)
+    kernel = _make_kernel(cfg, plan["res"], sweep)
+    prepared = _prepared_path(spark, ref_df, broadcast_ref)
+    if not (prepared and _fits_broadcast(spark, themes)):
+        # pass the path chosen here: the reference size is estimated once
+        return candidate_groups(
+            spark, themes, ref_df, kernel, schema, broadcast_ref=prepared,
+            inline_budget=INLINE_WKB_BYTES, salt=cfg.salt, **plan,
+        )
+    stream = probe_stream(spark, ref_df, kernel, **plan)
+    # a small theme side is read once, now, in one job
+    collected = themes.toPandas()
+    n = len(collected)
+    if n <= 1:
+        # one feature: align it here — a Python task would cost more
+        # than the kernel — and return a local relation (createDataFrame
+        # maps pandas columns by position)
+        out = list(stream([collected]))
+        return spark.createDataFrame(
+            out[0][schema.names] if out and len(out[0]) else [], schema
+        )
+    # a local scan cuts n rows into min(n, defaultParallelism) contiguous
+    # slices, one task each: no shuffle needed to fill the cores. A
+    # smaller share coalesces runs of adjacent slices (a narrow
+    # dependency). Kernel time grows with the geometry, so order the rows
+    # to give every task a similar WKB byte total.
+    scan = min(n, spark.sparkContext.defaultParallelism)
+    tasks = min(share or scan, scan)
+    # coalesce task g reads scan slices [g*scan/tasks, ...), and scan
+    # slice j holds rows [j*n/scan, ...)
+    bounds = [g * scan // tasks * n // scan for g in range(tasks + 1)]
+    sizes = collected["geom_wkb"].map(lambda b: len(b) if b else 0)
+    collected = collected.iloc[_balanced_slices(sizes.to_numpy(), bounds)]
+    local = spark.createDataFrame(collected, themes.schema)
+    if tasks < scan:
+        local = local.coalesce(tasks)
+    return local.mapInPandas(stream, schema=schema)

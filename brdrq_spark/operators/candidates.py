@@ -14,8 +14,9 @@ one of two paths:
 
 * prepared (``broadcast_ref=True``, or None with a reference within
   ``spark.sql.autoBroadcastJoinThreshold``): the theme rows probe the
-  shared ``PreparedReference`` index (``prepared.probe_groups``); no
-  explode, join or repartition;
+  shared ``PreparedReference`` index (``probe_stream``); no explode,
+  join or repartition. ``align`` runs the same ``probe_stream`` over a
+  theme side it has collected (in the driver for one theme);
 * cell join (otherwise): both layers are cell-exploded
   (``cells_exploded``) and equi-joined on cell (``cell_join_rows``),
   then repartitioned by key and streamed through the kernel
@@ -40,6 +41,12 @@ from brdrq_spark.functions.geo import geo_features_udf
 from brdrq_spark.geom import bbox, rings_from_wkb
 from brdrq_spark.geom.wkb import polygon_bboxes_batch
 from brdrq_spark.grid import cell_id, cover_ranges
+
+# hybrid WKB shipping on the cell-join path (``inline_budget``): a theme
+# whose cells x WKB bytes exceed this ships its WKB on the bare row only
+# instead of duplicating a 100 KB polygon into 1000 cell rows; the
+# prepared path explodes nothing
+INLINE_WKB_BYTES = 1 << 18
 
 
 def plan_partitions(df: DataFrame) -> int:
@@ -482,6 +489,35 @@ def cell_join_rows(
     )
 
 
+def probe_stream(
+    spark: SparkSession,
+    ref_df: DataFrame,
+    kernel,
+    res: int,
+    dilate: float,
+    reach: float,
+    bboxes=None,
+    outer: bool = True,
+    ids: bool = False,
+    version_col: str | None = None,
+):
+    """The prepared path's ``mapInPandas`` function: every batch of
+    theme rows probes the shared ``PreparedReference`` of ``ref_df``
+    (built here on first use) and each theme's candidate frame
+    (``prepared.probe_groups``) goes through ``kernel``."""
+    from brdrq_spark.operators.prepared import PreparedReference, probe_groups
+
+    index = PreparedReference.of(spark, ref_df, res, version_col).broadcast
+
+    def stream(batches):
+        ref = index.value
+        for pdf in batches:
+            for g in probe_groups(pdf, ref, res, dilate, reach, bboxes, outer, ids):
+                yield kernel(g)
+
+    return stream
+
+
 def candidate_groups(
     spark: SparkSession,
     themes: DataFrame,
@@ -495,6 +531,7 @@ def candidate_groups(
     bboxes=None,
     outer: bool = True,
     ids: bool = False,
+    version_col: str | None = None,
     broadcast_ref: bool | None = None,
     inline_budget: int | None = None,
     salt: int = 0,
@@ -502,52 +539,43 @@ def candidate_groups(
 ) -> DataFrame:
     """``kernel`` applied to every theme's candidate frame: the theme
     row's columns (``geom_wkb`` as ``theme_wkb``) repeated once per
-    candidate, with ``ref_wkb`` (and ``ref_id`` when ``ids``). The
-    candidates are the reference rows sharing a cell with the theme's
-    bbox cover at ``dilate`` (cells of resolution ``res``) whose bbox
-    lies within ``reach`` of the theme's; ``bboxes`` computes the theme
-    bboxes from a pandas batch (``cells_exploded``). A theme without
-    candidates gets one row with NULL reference columns when ``outer``,
-    and no kernel call otherwise.
+    candidate, with ``ref_wkb`` (and ``ref_id`` when ``ids``, plus
+    ``ref_version`` from ``version_col`` when given). The candidates are
+    the reference rows sharing a cell with the theme's bbox cover at
+    ``dilate`` (cells of resolution ``res``) whose bbox lies within
+    ``reach`` of the theme's; ``bboxes`` computes the theme bboxes from
+    a pandas batch (``cells_exploded``). A theme without candidates gets
+    one row with NULL reference columns when ``outer``, and no kernel
+    call otherwise.
 
     Where ``_prepared_path`` says so, the theme rows probe the shared
-    ``PreparedReference`` index; otherwise ``cell_join_rows`` builds the
-    rows (``inline_budget``, ``salt`` and ``hot_cell_threshold`` apply
-    there), which are repartitioned by ``key`` and streamed through the
-    kernel. Both paths hand the kernel the same candidate set; the
+    ``PreparedReference`` index (``probe_stream``), in one task per
+    theme partition, raised to defaultParallelism; otherwise
+    ``cell_join_rows`` builds the rows (``inline_budget``, ``salt`` and
+    ``hot_cell_threshold`` apply there), which are repartitioned by
+    ``key`` into 4 x defaultParallelism partitions and streamed through
+    the kernel. Both paths hand the kernel the same candidate set; the
     probe lists it in the index's reference order."""
     par = spark.sparkContext.defaultParallelism
     if _prepared_path(spark, ref_df, broadcast_ref):
-        from brdrq_spark.operators.prepared import PreparedReference, probe_groups
-
-        index = PreparedReference.of(spark, ref_df, res).broadcast
-
-        def probe_stream(batches):
-            ref = index.value
-            for pdf in batches:
-                for g in probe_groups(pdf, ref, res, dilate, reach, bboxes, outer, ids):
-                    yield kernel(g)
-
+        stream = probe_stream(
+            spark, ref_df, kernel, res, dilate, reach, bboxes, outer, ids, version_col
+        )
         if plan_partitions(themes) < par:
             themes = themes.repartition(par)
-        return themes.mapInPandas(probe_stream, schema=schema)
+        return themes.mapInPandas(stream, schema=schema)
     rows = cell_join_rows(
         spark, themes, ref_df, key, res, dilate, reach, bboxes=bboxes,
-        outer=outer, ids=ids, inline_budget=inline_budget, salt=salt,
+        outer=outer, ids=ids, version_col=version_col,
+        inline_budget=inline_budget, salt=salt,
         hot_cell_threshold=hot_cell_threshold,
     )
-    return stream_kernel(rows, key, kernel, schema, par * 4)
-
-
-def stream_kernel(rows: DataFrame, key: str, kernel, schema, n_part: int) -> DataFrame:
-    """``kernel`` over every ``key`` group of ``rows``: co-locate each
-    group (``n_part`` hash partitions; theme cost varies, so smaller
-    partitions keep the stage tail short), sort so groups are
-    contiguous, and stream whole partitions (``stream_groups``)."""
 
     def stream(batches):
         for g in stream_groups(batches, key):
             yield kernel(g)
 
-    parts = rows.repartition(n_part, key).sortWithinPartitions(key)
+    # theme cost varies, so many small partitions keep the stage tail
+    # short; sorted, each partition streams its groups contiguously
+    parts = rows.repartition(par * 4, key).sortWithinPartitions(key)
     return parts.mapInPandas(stream, schema=schema)

@@ -45,7 +45,7 @@ from brdrq_spark.geom.wkb import rings_from_wkb_hybrid
 from brdrq_spark.geom.core import _edges
 from brdrq_spark.grid import pick_resolution
 from brdrq_spark.operators.align import AlignConfig
-from brdrq_spark.operators.candidates import candidate_groups
+from brdrq_spark.operators.candidates import INLINE_WKB_BYTES, candidate_groups
 from brdrq_spark.operators.snaplines import SNAP_NO_PREFERENCE, _snap_vertices
 
 # Processor ids mirror the reference enum (brdrq_utils.py:102-111;
@@ -255,5 +255,5 @@ def align_network(
         dilate=2.0 * rd * 1.01,
         reach=2.0 * rd,
         broadcast_ref=broadcast_ref,
-        inline_budget=int(AlignConfig.max_inline_wkb_bytes),
+        inline_budget=INLINE_WKB_BYTES,
     )

@@ -247,34 +247,26 @@ def checkpointed_align(
     only uncommitted shards.
 
     With more than one shard in flight (``max_concurrent`` and the
-    uncommitted shards both > 1) and ``kernel_partitions`` left None, a
-    shard whose theme side ``align`` collects (the prepared path, theme
-    side within the broadcast threshold) gets ``defaultParallelism //
-    in_flight`` kernel tasks, coalesced from its local scan without a
-    shuffle, so the concurrent shards share the cores in one wave
-    instead of each claiming all of them. A lazy theme side and the
-    shuffle path keep their own partitioning. The share is fixed for
-    the run: once fewer shards than ``in_flight`` remain, the last ones
-    leave cores idle (with 64 shards at ``max_concurrent=4``, the final
-    1-3 shards run on a quarter of the cores each)."""
-    import dataclasses
-
+    uncommitted shards both > 1), each shard's kernel gets
+    ``defaultParallelism // in_flight`` tasks where ``align`` collects
+    its theme side (``run_kernel``'s ``share``: the prepared path, theme
+    side within the broadcast threshold), coalesced from its local scan
+    without a shuffle, so the concurrent shards share the cores in one
+    wave instead of each claiming all of them. A lazy theme side and the
+    cell-join path keep ``candidate_groups``' partitioning. The share is
+    fixed for the run: once fewer shards than ``in_flight`` remain, the
+    last ones leave cores idle (with 64 shards at ``max_concurrent=4``,
+    the final 1-3 shards run on a quarter of the cores each)."""
     from pyspark.sql import functions as F
 
-    from brdrq_spark.operators.align import AlignConfig, _theme_rows, align
-    from brdrq_spark.operators.candidates import _fits_broadcast, _prepared_path
+    from brdrq_spark.operators.align import AlignConfig, run_kernel
 
     keys = [f"shard_{i:03d}" for i in range(n_partitions)]
     todo = table.resume_filter(keys)
     config = config or AlignConfig()
     in_flight = min(max_concurrent, len(todo))
-    share = None
-    if (
-        config.kernel_partitions is None
-        and in_flight > 1
-        and _prepared_path(spark, ref_df, broadcast_ref)
-    ):
-        share = max(1, spark.sparkContext.defaultParallelism // in_flight)
+    par = spark.sparkContext.defaultParallelism
+    share = max(1, par // in_flight) if in_flight > 1 else None
     shard_expr = (
         F.pmod(F.col(shard_col), F.lit(n_partitions))
         if shard_col
@@ -286,10 +278,7 @@ def checkpointed_align(
         shard = theme_df.filter(shard_expr == i)
         if shard_col:
             shard = shard.drop(shard_col)
-        cfg = config
-        if share and _fits_broadcast(spark, _theme_rows(shard)):
-            cfg = dataclasses.replace(config, kernel_partitions=share)
-        return align(spark, shard, ref_df, cfg, broadcast_ref=broadcast_ref)
+        return run_kernel(spark, shard, ref_df, config, broadcast_ref, share=share)
 
     lineage = {
         "cell_min": F.min(F.array_min("cell_ids")),

@@ -10,7 +10,7 @@ import pytest
 
 from brdrq_spark.geom import rings_area, rings_from_wkb
 from brdrq_spark.geom.clip import area_of_op
-from brdrq_spark.operators.align import AlignConfig, align
+from brdrq_spark.operators.align import AlignConfig, align, run_kernel
 from brdrq_spark.sources.synthetic import reference_parcels, thematic_polygons
 
 NX = NY = 12
@@ -248,12 +248,12 @@ def _greedy_wkb_bytes(sizes, k) -> list[int]:
     return load
 
 
-def test_align_hybrid_wkb_shipping_same_output(spark, tables, local_scans):
+def test_align_hybrid_wkb_shipping_same_output(spark, tables, local_scans, monkeypatch):
     """Every sub-path of the prepared-reference path (broadcast_ref=True)
     and the cell shuffle-join path must emit identical rows — every WKB
     slot, metric and remark — on an empty-geometry theme, a multi-part
-    theme, themes over max_inline_wkb_bytes (hybrid WKB shipping:
-    ids-only through the cell explode), capped themes, and
+    theme, themes over ``candidates.INLINE_WKB_BYTES`` (hybrid WKB
+    shipping: ids-only through the cell explode), capped themes, and
     evaluate(auto_step=True), which sweeps a per-theme step column. The
     prepared sub-paths: each theme alone (aligned in the driver), zero
     themes, the collected multi-theme stage (its rows reordered into
@@ -261,6 +261,7 @@ def test_align_hybrid_wkb_shipping_same_output(spark, tables, local_scans):
     size estimate is above the broadcast threshold."""
     from pyspark.sql import functions as F
 
+    from brdrq_spark.operators import align as align_mod
     from brdrq_spark.operators.evaluate import evaluate
 
     th, ref = tables
@@ -296,25 +297,28 @@ def test_align_hybrid_wkb_shipping_same_output(spark, tables, local_scans):
     assert len(base) == N_THEMES + 2
     remark = {r.theme_id: r.brdr_remark for r in base}
     assert remark["t_empty"] == "no_reference_candidates"
-    for cfg in (
-        AlignConfig(relevant_distances=[2.0]),
-        AlignConfig(relevant_distances=[2.0], max_inline_wkb_bytes=1),
-        AlignConfig(relevant_distances=[0.5, 2.0], max_candidates_per_theme=2),
+    plain = AlignConfig(relevant_distances=[2.0])
+    inline = align_mod.INLINE_WKB_BYTES
+    for cfg, budget in (
+        (plain, inline),
+        (plain, 1),
+        (AlignConfig(relevant_distances=[0.5, 2.0], max_candidates_per_theme=2), inline),
     ):
+        monkeypatch.setattr(align_mod, "INLINE_WKB_BYTES", budget)
         shuffled = rows(cfg, False)
         local_scans.clear()
         collected = aligned(cfg, True)
         assert "Union" not in _executed_plan(collected)
-        assert sorted(collected.collect()) == shuffled, cfg
+        assert sorted(collected.collect()) == shuffled, (cfg, budget)
         (scan,) = local_scans
         sizes = [len(r.geom_wkb) for r in themes.collect()]
         assert _slice_wkb_bytes(scan) == _greedy_wkb_bytes(
             sizes, min(len(sizes), spark.sparkContext.defaultParallelism)
         )
-        assert alone(cfg) == shuffled, cfg
-        assert lazy(cfg) == shuffled, cfg
+        assert alone(cfg) == shuffled, (cfg, budget)
+        assert lazy(cfg) == shuffled, (cfg, budget)
         assert rows(cfg, True, themes.limit(0)) == rows(cfg, False, themes.limit(0)) == []
-        if cfg.max_inline_wkb_bytes == 1:
+        if budget == 1:
             assert shuffled == base
         if cfg.max_candidates_per_theme == 2:
             assert any(r.brdr_remark.startswith("candidates_capped") for r in shuffled)
@@ -371,11 +375,11 @@ def test_collected_theme_slices_balance_wkb_bytes(spark, tables, local_scans):
     assert got == sorted(align(spark, themes, ref, cfg, broadcast_ref=False).collect())
     assert len(got) == N_THEMES
 
-    # fewer kernel tasks than slices: adjacent slices coalesce, no
-    # shuffle, and each task still reads the greedy byte total
-    few = AlignConfig(relevant_distances=[2.0], kernel_partitions=2)
+    # a share of fewer kernel tasks than slices: adjacent slices
+    # coalesce, no shuffle, and each task still reads the greedy byte
+    # total
     local_scans.clear()
-    out = align(spark, themes, ref, few, broadcast_ref=True)
+    out = run_kernel(spark, themes, ref, cfg, True, share=2)
     plan = _executed_plan(out)
     assert "Coalesce 2" in plan and "Exchange" not in plan, plan
     assert out.rdd.getNumPartitions() == 2

@@ -296,10 +296,10 @@ def test_concurrent_shards_run_one_wave_of_kernel_tasks(spark, tmp_path, monkeyp
     th, ref = _tables(spark, n=12)
     tasks = tmp_path / "tasks"
     tasks.mkdir()
-    real = align_mod._make_probe_kernel
+    real = align_mod.probe_stream
 
-    def counted(*args):
-        stream = real(*args)
+    def counted(*args, **kwargs):
+        stream = real(*args, **kwargs)
 
         def run(batches):
             import os
@@ -321,7 +321,7 @@ def test_concurrent_shards_run_one_wave_of_kernel_tasks(spark, tmp_path, monkeyp
         return sorted(table.read(spark).collect()), lineage
 
     sequential = committed("seq", 1)
-    monkeypatch.setattr(align_mod, "_make_probe_kernel", counted)
+    monkeypatch.setattr(align_mod, "probe_stream", counted)
     assert committed("par", 2) == sequential
     assert 2 <= len(list(tasks.iterdir())) <= spark.sparkContext.defaultParallelism
 
@@ -329,39 +329,41 @@ def test_concurrent_shards_run_one_wave_of_kernel_tasks(spark, tmp_path, monkeyp
 def test_concurrent_shards_share_cores_only_on_a_collected_theme_side(
     spark, tmp_path, monkeypatch
 ):
-    """The concurrent-shard share fills ``kernel_partitions`` only where
-    ``align`` collects the theme side; a lazy theme side and the shuffle
-    path keep their own kernel partitioning, and an explicit value is
-    kept everywhere."""
+    """Concurrent shards hand ``run_kernel`` their share of the cores,
+    and only a collected theme side applies it: its kernel runs in
+    ``share`` partitions. A lazy theme side keeps at least
+    defaultParallelism, and the cell-join path 4 x defaultParallelism."""
     from brdrq_spark.sources.manifest import CommittedTable, checkpointed_align
 
     th, ref = _tables(spark, n=12)
-    real = align_mod.align
-    seen = []
+    real = align_mod.run_kernel
+    kernels = []
 
-    def spy(spark, theme_df, ref_df, config=None, broadcast_ref=None):
-        seen.append(config.kernel_partitions)
-        return real(spark, theme_df, ref_df, config, broadcast_ref=broadcast_ref)
+    def spy(*args, **kwargs):
+        out = real(*args, **kwargs)
+        kernels.append(out)
+        return out
 
-    monkeypatch.setattr(align_mod, "align", spy)
+    monkeypatch.setattr(align_mod, "run_kernel", spy)
 
-    def shares(name, broadcast_ref, cfg=CFG):
-        seen.clear()
+    def partitions(name, broadcast_ref):
+        kernels.clear()
         checkpointed_align(
-            spark, CommittedTable(str(tmp_path / name)), th, ref, cfg,
+            spark, CommittedTable(str(tmp_path / name)), th, ref, CFG,
             n_partitions=2, broadcast_ref=broadcast_ref, max_concurrent=2,
         )
-        return seen
+        return [df.rdd.getNumPartitions() for df in kernels]
 
-    share = max(1, spark.sparkContext.defaultParallelism // 2)
-    assert shares("collected", True) == [share, share]
-    assert shares("shuffle", False) == [None, None]
-    assert shares("pinned", True, AlignConfig(relevant_distances=[2.0], kernel_partitions=3)) == [3, 3]
+    par = spark.sparkContext.defaultParallelism
+    share = max(1, par // 2)
+    assert partitions("collected", True) == [share, share]
+    assert partitions("shuffle", False) == [4 * par, 4 * par]
     key = "spark.sql.autoBroadcastJoinThreshold"
     old = spark.conf.get(key)
     spark.conf.set(key, "-1")
     try:
-        assert shares("lazy", True) == [None, None]
+        lazy = partitions("lazy", True)
+        assert len(lazy) == 2 and min(lazy) >= par, lazy
     finally:
         spark.conf.set(key, old)
 
