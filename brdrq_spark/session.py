@@ -5,6 +5,15 @@ Reference analogue: the QGIS plugin runs everything on the main thread
 (FlagNoThreading, plugin/brdrq/brdrq_algorithm_autocorrectborders.py:197-198);
 we replace that with executor parallelism and keep determinism by keying
 every reduce.
+
+The driver JVM compiles with C1 only (``-XX:TieredStopAtLevel=1``, as
+``spark.driver.defaultJavaOptions``). Its jobs are short and mostly
+wait on Python workers, so C2's optimized code rarely repays C2's
+compile threads, which take cores from the kernel tasks: on a warmed
+image pass (24 footprints, 4 cores) the compiler threads took 1.29 of
+the driver JVM's 3.27 CPU-s, and 0.35 of 1.47 CPU-s with C1 only
+(``scripts/job_census.py --run``). Python workers run under
+``brdrq_spark.daemon``.
 """
 
 from __future__ import annotations
@@ -38,9 +47,12 @@ def get_spark(
     """Build (or fetch) a SparkSession.
 
     ``cpus`` defaults to $SPARK_GRAFT_CPUS or all cores, the driver heap
-    to $SPARK_GRAFT_DRIVER_MEM or ``driver_memory()``. On a real
-    cluster the master/memory settings come from spark-submit; every
-    option set here is safe to override there.
+    to $SPARK_GRAFT_DRIVER_MEM or ``driver_memory()``. The driver JVM
+    runs with ``-XX:TieredStopAtLevel=1`` (C1 only) through
+    ``spark.driver.defaultJavaOptions``; ``extra_conf`` overrides it and
+    any other option. On a real cluster the master/memory settings come
+    from spark-submit; every option set here is safe to override there.
+    Options that start the JVM apply only when this call starts it.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
@@ -75,10 +87,14 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or driver_memory())
         .config("spark.ui.enabled", "false")
-        # pyspark's daemon, with a per-task import-cache reset that reads
-        # each zip archive once instead of once per importer (daemon.py);
+        # pyspark's daemon, with a per-task import-cache reset that
+        # re-reads a zip archive only when the file changed (daemon.py);
         # workers must be able to import brdrq_spark
         .config("spark.python.daemon.module", "brdrq_spark.daemon")
+        # C1 only (module docstring). Spark puts these options before
+        # spark.driver.extraJavaOptions, so a caller's heap or GC flags
+        # still apply.
+        .config("spark.driver.defaultJavaOptions", "-XX:TieredStopAtLevel=1")
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -7,11 +7,21 @@ script counts them. Part of that cost is pyspark's
 ``worker_util.setup_spark_files`` calling ``importlib.invalidate_caches()``
 once per task. On Python 3.11 a worker holds 16 zipimporters on 3
 archives (12 on ``pyspark.zip``, 2 on the spark-core jar, 2 on the py4j
-zip), and each re-read its archive's directory: ~0.2 s per call on a
-4-core box. ``brdrq_spark.daemon`` reads each archive once per call,
-~55 ms; a 1-task local-scan ``mapInPandas`` job went from 0.26-0.29 to
-0.12-0.14 s (p50 of 30, two runs each). ``--run`` prints the in-worker
-call time and the zipimporters per archive from one 1-task probe.
+zip, 6,696 directory entries together), and each re-read its archive's
+directory: ~0.2 s per call on a 4-core box. Reading each archive once
+per call took 42-60 ms. ``brdrq_spark.daemon`` keeps each archive's
+parsed directory until the file changes, so a reused worker's call
+stats 3 files: 0.14 ms. ``--run`` prints the in-worker call time (and,
+under the daemon, the time of one call that re-reads every archive),
+and the zipimporters and directory entries per archive, from one
+1-task probe.
+
+``--run`` also splits each window's CPU seconds, read from ``/proc``:
+the driver JVM's JIT compiler threads, its executor task threads and
+its other threads, the Python worker processes (with the children they
+reaped) and this driver Python process. On one warmed image pass (seed
+1, 4 cores) the compiler threads took 1.29 of the driver JVM's 3.27
+CPU-s with C2, and 0.35 of 1.47 CPU-s with C1 only.
 
 Per stage it also prints the peak number of tasks in flight (from task
 launch and finish times) against defaultParallelism: a stage whose peak
@@ -32,12 +42,11 @@ Usage:
       request (align of one theme at rd 2), ONE image pass
       (footprints -> checkpointed_align, 2 concurrent shards) and ONE
       feature-aligner request (evaluate(max_rd=5, step=0.1) of one
-      theme) with the event log on, and prints the census of each and
-      the wall time
-      outside any job (planning, an in-driver kernel, result
-      conversion). Before those windows, one 1-task probe prints the
-      time of ``importlib.invalidate_caches()`` in a worker and its
-      zipimporters per archive.
+      theme) with the event log on, and prints the census of each, its
+      CPU split and the wall time outside any job (planning, an
+      in-driver kernel, result conversion). Before those windows, one
+      1-task probe prints the time of ``importlib.invalidate_caches()``
+      in a worker and its zipimporters per archive.
   python scripts/job_census.py EVENT_LOG [--tasks]
       Census of an existing uncompressed, non-rolling JSON event log
       (spark.eventLog.compress=false, spark.eventLog.rolling.enabled=
@@ -56,6 +65,7 @@ import shutil
 import sys
 import tempfile
 import time
+from collections import Counter
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -189,8 +199,10 @@ def uncovered_s(log: dict, job_ids: list[int], t0: float, t1: float) -> float:
 
 
 def worker_import_probe(spark) -> None:
-    """Time one ``importlib.invalidate_caches()`` inside a Python worker
-    and count the worker's zipimporters per archive (one 1-task job)."""
+    """Time ``importlib.invalidate_caches()`` inside a Python worker,
+    once as a reused worker runs it and once with the daemon's parsed
+    directories dropped, and count the worker's zipimporters and
+    directory entries per archive (one 1-task job)."""
 
     def probe(_):
         import importlib
@@ -201,18 +213,100 @@ def worker_import_probe(spark) -> None:
 
         t0 = time.perf_counter()
         importlib.invalidate_caches()
-        dt = time.perf_counter() - t0
+        warm = time.perf_counter() - t0
+        cold = None
+        if hasattr(importlib.invalidate_caches, "directories"):
+            importlib.invalidate_caches.directories.clear()
+            t0 = time.perf_counter()
+            importlib.invalidate_caches()
+            cold = time.perf_counter() - t0
         per = Counter(
             f.archive for f in sys.path_importer_cache.values()
             if isinstance(f, zipimport.zipimporter)
         )
-        yield dt, dict(per)
+        entries = {a: len(zipimport._zip_directory_cache.get(a, ())) for a in per}
+        yield warm, cold, dict(per), entries
 
-    dt, per = spark.sparkContext.parallelize([0], 1).mapPartitions(probe).collect()[0]
-    print(f"worker invalidate_caches(): {dt * 1000:.1f} ms,"
-          f" {sum(per.values())} zipimporters on {len(per)} archives")
+    warm, cold, per, entries = (
+        spark.sparkContext.parallelize([0], 1).mapPartitions(probe).collect()[0]
+    )
+    print(f"worker invalidate_caches(): {warm * 1000:.2f} ms"
+          + (f", {cold * 1000:.1f} ms re-reading every archive" if cold is not None else "")
+          + f"; {sum(per.values())} zipimporters on {len(per)} archives,"
+          f" {sum(entries.values())} directory entries")
     for archive, n in sorted(per.items(), key=lambda kv: -kv[1]):
-        print(f"  {n:3d}  {archive}")
+        print(f"  {n:3d}  {entries[archive]:5d}  {archive}")
+
+
+_TICK = os.sysconf("SC_CLK_TCK")
+
+
+def _stat(path: str) -> tuple[str, list[str]]:
+    """(comm, fields from the state on) of a /proc stat file."""
+    with open(path) as f:
+        text = f.read()
+    return text[text.index("(") + 1:text.rindex(")")], text[text.rindex(")") + 2:].split()
+
+
+def _children(pid: int) -> list[int]:
+    kids = []
+    for tid in os.listdir(f"/proc/{pid}/task"):
+        try:
+            with open(f"/proc/{pid}/task/{tid}/children") as f:
+                kids += [int(c) for c in f.read().split()]
+        except OSError:
+            pass
+    return kids
+
+
+def cpu_snapshot(jvm_pid: int) -> dict:
+    """CPU seconds so far of the driver JVM (per thread and whole), its
+    Python worker processes (the daemon, its workers and their reaped
+    children) and this driver Python process."""
+    threads = {}
+    for tid in os.listdir(f"/proc/{jvm_pid}/task"):
+        try:
+            comm, f = _stat(f"/proc/{jvm_pid}/task/{tid}/stat")
+        except OSError:  # the thread ended
+            continue
+        threads[tid] = (comm, (int(f[11]) + int(f[12])) / _TICK)
+    _, f = _stat(f"/proc/{jvm_pid}/stat")
+    python, todo = 0.0, _children(jvm_pid)
+    while todo:
+        pid = todo.pop()
+        try:
+            _, pf = _stat(f"/proc/{pid}/stat")
+            todo += _children(pid)
+        except OSError:  # exited: its CPU is in its parent's reaped time
+            continue
+        python += sum(int(x) for x in pf[11:15]) / _TICK
+    t = os.times()
+    return {"threads": threads, "jvm": (int(f[11]) + int(f[12])) / _TICK,
+            "python": python, "driver": t.user + t.system}
+
+
+def cpu_split(before: dict, after: dict) -> str:
+    """One line of CPU seconds between two snapshots. Driver-JVM threads
+    are split by name: JIT compiler threads, executor task threads and
+    the rest; the rest also holds threads that ended in the window."""
+    by = {"compiler": 0.0, "executor tasks": 0.0}
+    other: Counter = Counter()
+    for tid, (comm, cpu) in after["threads"].items():
+        was = before["threads"].get(tid)
+        delta = cpu - (was[1] if was and was[0] == comm else 0.0)
+        if "CompilerThre" in comm:
+            by["compiler"] += delta
+        elif comm.startswith("Executor task"):
+            by["executor tasks"] += delta
+        else:
+            other[comm.rstrip("0123456789#-")] += delta
+    jvm = after["jvm"] - before["jvm"]
+    top = ", ".join(f"{name} {cpu:.2f}" for name, cpu in other.most_common(3) if cpu > 0)
+    return (f"CPU: driver JVM {jvm:.2f} s (compiler threads {by['compiler']:.2f},"
+            f" executor task threads {by['executor tasks']:.2f}, other"
+            f" {jvm - sum(by.values()):.2f}{': ' + top if top else ''}), Python workers"
+            f" {after['python'] - before['python']:.2f} s, driver Python"
+            f" {after['driver'] - before['driver']:.2f} s")
 
 
 def run(seed: int, per_task: bool) -> None:
@@ -281,15 +375,18 @@ def run(seed: int, per_task: bool) -> None:
         image_pass(0)
         sweep(ids[5])
         worker_import_probe(spark)
+        jvm_pid = spark.sparkContext._gateway.proc.pid
         windows = {}
         for label, fn in (("interactive request", lambda: request(ids[4])),
                           ("image pass", lambda: image_pass(1)),
                           ("evaluate request", lambda: sweep(ids[6]))):
             time.sleep(0.5)  # keep the windows apart at the log's ms clock
+            cpu = cpu_snapshot(jvm_pid)
             t0 = time.time()
             fn()
             windows[label] = (t0, time.time())
             print(f"{label}: {windows[label][1] - t0:.3f} s wall")
+            print("  " + cpu_split(cpu, cpu_snapshot(jvm_pid)))
         spark.stop()  # flushes the event log
         log = read_log(glob.glob(os.path.join(log_dir, "*"))[0])
         for label, (t0, t1) in windows.items():

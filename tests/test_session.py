@@ -1,4 +1,4 @@
-"""Session defaults that need no JVM."""
+"""Session defaults: the driver heap (no JVM) and the driver JVM's JIT."""
 
 import os
 
@@ -20,3 +20,10 @@ def test_driver_memory_is_half_the_machine_within_bounds(physical, heap):
 def test_driver_memory_default_fits_this_machine():
     physical = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     assert int(driver_memory()[:-1]) * GIB <= max(physical, GIB)
+
+
+def test_driver_jvm_compiles_with_c1_only(spark):
+    flag = "-XX:TieredStopAtLevel=1"
+    assert spark.sparkContext.getConf().get("spark.driver.defaultJavaOptions") == flag
+    mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+    assert flag in list(mx.getInputArguments())
