@@ -48,7 +48,8 @@ def simplify_rings(rings: list[np.ndarray], tol: float) -> list[np.ndarray]:
     keep[s] = True
     tol2 = tol * tol
     while True:
-        s, e = s[e - s >= 2], e[e - s >= 2]
+        open_ = e - s >= 2
+        s, e = s[open_], e[open_]
         if not len(s):
             break
         n = e - s + 1

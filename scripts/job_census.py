@@ -358,9 +358,13 @@ def run(seed: int, per_task: bool) -> None:
             align(spark, themes.where(F.col("theme_id") == tid), ref, cfg,
                   broadcast_ref=True).collect()
 
+        # read once, as perfbench does: a read per pass would add its own
+        # schema job to every pass
+        images = spark.read.parquet(img_path)
+
         def image_pass(i):
             fp = os.path.join(work, f"footprints_{i}.parquet")
-            extract_footprints(spark.read.parquet(img_path)).write.parquet(fp)
+            extract_footprints(images).write.parquet(fp)
             checkpointed_align(spark, CommittedTable(os.path.join(work, f"table_{i}")),
                                spark.read.parquet(fp), ref, cfg, n_partitions=2,
                                broadcast_ref=True, max_concurrent=4)
